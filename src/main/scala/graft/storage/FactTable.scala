@@ -3,9 +3,18 @@ package graft.storage
 import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** A minimal transaction-logged parquet table — the Spark-side analog of
   * the reference's MergeTree storage model (tables.sql:30): append-only
@@ -14,8 +23,14 @@ import org.apache.spark.sql.functions._
   * multi-file commit, so table state lives in an append-only JSON log
   * (`_graft_log/<version>.json`), one entry per transaction:
   *
-  *   {"txn": id?, "adds": [{path, rows, bytes, tier, addedMs}], "removes": [path…]}
+  *   {"txn": id?, "schema": json?, "adds": [{path, rows, bytes, tier, addedMs}], "removes": [path…]}
   *
+  * - **The log is the only metadata source**: it records the table's
+  *   Spark schema when it changes (first commit, add-column evolution;
+  *   Delta's `metaData` action) and in every checkpoint, and each part's
+  *   path, length, tier and `date=` directory. A read therefore lists no
+  *   directory and infers no schema: it plans one file scan per tier over
+  *   a log-backed `FileIndex`, however many base generations exist.
   * - **Atomicity**: a version file is written to a temp name and renamed
   *   into place; rename-onto-existing fails, so two writers cannot both
   *   claim a version.
@@ -29,7 +44,7 @@ import org.apache.spark.sql.functions._
   *   already in the log — exactly-once for `foreachBatch` retries, the
   *   guarantee the reference explicitly lacks (mb8600.py:308-311 drops
   *   failed batches).
-  * - **Snapshot isolation**: readers list live files from the log; a
+  * - **Snapshot isolation**: readers take live files from the log; a
   *   compaction commit atomically swaps small parts for merged ones, so
   *   a reader sees either the old or the new part set, never both.
   *
@@ -137,9 +152,15 @@ class FactTable(val root: String, spark: SparkSession,
     }.filter(_ <= asOf).maxOption
     val live = mutable.LinkedHashMap[String, FileEntry]()
     val txns = mutable.Set[Long]()
+    var schema = Option.empty[StructType]
+    def readSchema(node: com.fasterxml.jackson.databind.JsonNode): Unit =
+      if (node.hasNonNull("schema"))
+        schema = Some(DataType.fromJson(node.get("schema").asText())
+          .asInstanceOf[StructType])
     ckptV.foreach { cv =>
       val in = fs.open(new Path(logDir, s"$cv$CheckpointSuffix"))
       val node = try mapper.readTree(in) finally in.close()
+      readSchema(node)
       node.get("txns").forEach(t => txns += t.asLong())
       node.get("adds").forEach { a =>
         val e = entryOf(a)
@@ -152,6 +173,7 @@ class FactTable(val root: String, spark: SparkSession,
       val in = fs.open(new Path(logDir, s"$v.json"))
       val node = try mapper.readTree(in) finally in.close()
       if (node.hasNonNull("txn")) txns += node.get("txn").asLong()
+      readSchema(node)
       node.get("adds").forEach { a =>
         val e = entryOf(a)
         live.put(e.path, e)
@@ -160,7 +182,7 @@ class FactTable(val root: String, spark: SparkSession,
     }
     Snapshot(live.values.toSeq, txns.toSet,
       math.max(versions.lastOption.map(_ + 1).getOrElse(0L),
-        ckptV.map(_ + 1).getOrElse(0L)))
+        ckptV.map(_ + 1).getOrElse(0L)), schema)
   }
 
   /** Parse one log/checkpoint `adds` node back into a FileEntry. */
@@ -181,26 +203,11 @@ class FactTable(val root: String, spark: SparkSession,
       a.get("addedMs").asLong(), stats)
   }
 
-  /** Write a log checkpoint at the current head (the Delta checkpoint
-    * pattern): one `<version>.checkpoint.json` holding the complete
-    * live state — file entries with their stats, plus committed txn ids
-    * so append idempotence survives the cutover. Subsequent snapshots
-    * replay only the commits AFTER the checkpoint; earlier log files
-    * are still used by time travel to pre-checkpoint versions (and by
-    * vacuum's full-history replay), so nothing is lost — reads just
-    * stop paying O(history). At 100 TB scale (10⁵-10⁶ commits) this is
-    * what keeps metadata latency flat; Delta writes one every 10
-    * commits. Returns the checkpointed version, or -1 on an empty log.
-    */
-  def checkpoint(): Long = {
-    val snap = snapshot()
-    if (snap.nextVersion == 0) return -1L
-    val v = snap.nextVersion - 1
-    val node = mapper.createObjectNode()
-    val tArr = node.putArray("txns")
-    snap.txns.toSeq.sorted.foreach(tArr.add)
+  /** Serialize file entries into a log/checkpoint `adds` array. */
+  private def putAdds(node: com.fasterxml.jackson.databind.node.ObjectNode,
+      adds: Seq[FileEntry]): Unit = {
     val aArr = node.putArray("adds")
-    snap.files.foreach { e =>
+    adds.foreach { e =>
       val o = aArr.addObject()
       o.put("path", e.path); o.put("rows", e.rows); o.put("bytes", e.bytes)
       o.put("tier", e.tier); o.put("addedMs", e.addedMs)
@@ -212,6 +219,28 @@ class FactTable(val root: String, spark: SparkSession,
         }
       }
     }
+  }
+
+  /** Write a log checkpoint at the current head (the Delta checkpoint
+    * pattern): one `<version>.checkpoint.json` holding the complete
+    * live state — file entries with their stats, the table schema, plus
+    * committed txn ids so append idempotence survives the cutover.
+    * Subsequent snapshots replay only the commits AFTER the checkpoint;
+    * earlier log files are still used by time travel to pre-checkpoint
+    * versions (and by vacuum's full-history replay), so nothing is
+    * lost — reads just stop paying O(history). At 100 TB scale (10⁵-10⁶ commits) this is
+    * what keeps metadata latency flat; Delta writes one every 10
+    * commits. Returns the checkpointed version, or -1 on an empty log.
+    */
+  def checkpoint(): Long = {
+    val snap = snapshot()
+    if (snap.nextVersion == 0) return -1L
+    val v = snap.nextVersion - 1
+    val node = mapper.createObjectNode()
+    val tArr = node.putArray("txns")
+    snap.txns.toSeq.sorted.foreach(tArr.add)
+    schemaOption(snap).foreach(st => node.put("schema", st.json))
+    putAdds(node, snap.files)
     val tmp = new Path(logDir, s".$v$CheckpointSuffix.tmp")
     val out = fs.create(tmp, true)
     try out.write(mapper.writeValueAsBytes(node)) finally out.close()
@@ -248,7 +277,7 @@ class FactTable(val root: String, spark: SparkSession,
     require(fs.listStatus(dest.logDir).isEmpty,
       s"shallow clone target $destRoot already has a log")
     val snap = snapshot()
-    dest.commit(0L, None, snap.files, Nil)
+    dest.commit(0L, None, snap.files, Nil, schemaOption(snap))
     dest
   }
 
@@ -309,7 +338,7 @@ class FactTable(val root: String, spark: SparkSession,
           // post-commit live state
           val inserts =
             if (dataAdds.isEmpty) None
-            else Some(masked(dataAdds, tombAdds)
+            else Some(masked(dataAdds, snapshot(asOf = v))
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(v)))
           lazy val pre = snapshot(asOf = v - 1)
@@ -320,8 +349,8 @@ class FactTable(val root: String, spark: SparkSession,
               else pre.dataFiles.filter(f => vict.contains(f.path))
             if (victims.isEmpty) None
             else {
-              val keys = spark.read.parquet(t.path)
-              val m = masked(victims, pre.tombFiles)
+              val keys = tombKeys(t)
+              val m = masked(victims, pre)
               // null-safe <=> mirrors masked(): softDelete tombstones
               // NULL key tuples, which a plain equi-semi-join would
               // silently drop from the change feed (incremental
@@ -344,23 +373,16 @@ class FactTable(val root: String, spark: SparkSession,
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** One log version. `schema` is set only when the commit changes the
+    * table schema (the Delta `metaData` action): replay carries the last
+    * recorded one forward, so the log never repeats it per commit.
+    */
   private def commit(version: Long, txn: Option[Long], adds: Seq[FileEntry],
-      removes: Seq[String]): Unit = {
+      removes: Seq[String], schema: Option[StructType]): Unit = {
     val node = mapper.createObjectNode()
     txn.foreach(node.put("txn", _))
-    val aArr = node.putArray("adds")
-    adds.foreach { e =>
-      val o = aArr.addObject()
-      o.put("path", e.path); o.put("rows", e.rows); o.put("bytes", e.bytes)
-      o.put("tier", e.tier); o.put("addedMs", e.addedMs)
-      if (e.stats.nonEmpty) {
-        val st = o.putObject("stats")
-        e.stats.foreach { case (c, s) =>
-          val n = st.putObject(c)
-          n.put("t", s.typ); n.put("min", s.min); n.put("max", s.max)
-        }
-      }
-    }
+    schema.foreach(st => node.put("schema", st.json))
+    putAdds(node, adds)
     val rArr = node.putArray("removes")
     removes.foreach(rArr.add)
     val tmp = new Path(logDir, s".$version.json.tmp")
@@ -399,25 +421,48 @@ class FactTable(val root: String, spark: SparkSession,
     */
   private def tombsUnchanged(staged: Snapshot)(fresh: Snapshot): Boolean =
     fresh.tombFiles.map(_.path).toSet == staged.tombFiles.map(_.path).toSet
-  private def commitWithRetry(firstVersion: Long, txn: Option[Long],
-      adds: Seq[FileEntry], removes: Seq[String])(
+  private def commitWithRetry(snap: Snapshot, txn: Option[Long],
+      adds: Seq[FileEntry], removes: Seq[String],
+      written: Option[StructType] = None)(
       revalidate: Snapshot => Boolean): Boolean = {
-    var version = firstVersion
+    var head = snap
     var attempts = 0
     val maxAttempts = 20
     while (true) {
-      try { commit(version, txn, adds, removes); return true }
-      catch { case e: ConcurrentWriteException =>
+      try {
+        commit(head.nextVersion, txn, adds, removes,
+          evolvedSchema(head, written, removes))
+        return true
+      } catch { case e: ConcurrentWriteException =>
         attempts += 1
         if (attempts >= maxAttempts)
           throw new ConcurrentWriteException(
             s"gave up after $maxAttempts conflicting commits at $root", e)
-        val snap = snapshot()
-        if (!revalidate(snap)) return false
-        version = snap.nextVersion
+        head = snapshot()
+        if (!revalidate(head)) return false
       }
     }
     false // unreachable
+  }
+
+  /** The schema a commit must record against `head`, or None when it
+    * leaves the schema as is. Columns only ever widen while some live
+    * file predates the commit (add-column evolution, like Delta's
+    * `mergeSchema`); a commit that removes every live data file sets the
+    * schema to what it wrote. Re-evaluated per retry, so two concurrent
+    * add-column appends both land in the schema.
+    */
+  private def evolvedSchema(head: Snapshot, written: Option[StructType],
+      removes: Seq[String]): Option[StructType] = {
+    val gone = removes.toSet
+    val kept =
+      if (head.dataFiles.forall(f => gone(f.path))) None
+      else schemaOption(head)
+    val next = (kept, written.map(nullable(_).asInstanceOf[StructType])) match {
+      case (Some(k), Some(w)) => Some(widen(k, w).asInstanceOf[StructType])
+      case (k, w) => w.orElse(k)
+    }
+    next.filterNot(head.schema.contains)
   }
 
   // ----------------------------------------------------------- operations
@@ -435,8 +480,8 @@ class FactTable(val root: String, spark: SparkSession,
     val target = new Path(dataDir, s"append-$txnId")
     df.write.mode("overwrite").parquet(target.toString)
     beforeCommit()
-    commitWithRetry(snap.nextVersion, Some(txnId),
-      entriesFor(target, TierBuffer), removes = Nil)(
+    commitWithRetry(snap, Some(txnId),
+      entriesFor(target, TierBuffer), removes = Nil, Some(df.schema))(
       fresh => !fresh.txns.contains(txnId))
   }
 
@@ -449,11 +494,11 @@ class FactTable(val root: String, spark: SparkSession,
     val snap = snapshot()
     val buffer = snap.files.filter(_.tier == TierBuffer)
     if (buffer.isEmpty) return 0L
-    // masked read (which itself merges schemas across buffer parts —
-    // they may span an add-column change): a buffer part covered by a
-    // later soft delete must flush WITHOUT the deleted rows, because the
-    // compacted output is a fresh part no existing tombstone covers
-    val src = masked(buffer, snap.tombFiles)
+    // masked read (over the table schema — buffer parts may span an
+    // add-column change): a buffer part covered by a later soft delete
+    // must flush WITHOUT the deleted rows, because the compacted output
+    // is a fresh part no existing tombstone covers
+    val src = masked(buffer, snap)
     val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
     src.repartition(col(partitionCol))
       .sortWithinPartitions(partitionCol, sortCols: _*)
@@ -465,7 +510,7 @@ class FactTable(val root: String, spark: SparkSession,
     // restart from a fresh snapshot — committing anyway would double the
     // rows. A conflict with new appends is benign (their files are not
     // in our remove set) and just retries at the new head.
-    val committed = commitWithRetry(snap.nextVersion, None,
+    val committed = commitWithRetry(snap, None,
       entriesFor(target, TierBase), removes = buffer.map(_.path))(
       fresh => buffer.forall(b => fresh.files.exists(_.path == b.path)) &&
         tombsUnchanged(snap)(fresh))
@@ -595,7 +640,7 @@ class FactTable(val root: String, spark: SparkSession,
     beforeCommit()
     // obsolete if a concurrent compaction already rewrote a victim (its
     // rows now live in a part we have not examined) — restart fresh
-    val committed = commitWithRetry(snap.nextVersion, None, adds = Nil,
+    val committed = commitWithRetry(snap, None, adds = Nil,
       removes = victims.map(_.path))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)))
     if (!committed) return ttlExpire(cutoff, partitionCol)
@@ -627,7 +672,7 @@ class FactTable(val root: String, spark: SparkSession,
     val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
     if (victims.isEmpty) return 0L
     val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val src = masked(victims, snap.tombFiles)
+    val src = masked(victims, snap)
     val groupNames = partitionCol +: keyCols
     require((sumCols ++ groupNames).forall(src.columns.contains),
       s"ttlRollup columns missing from ${src.columns.toSeq}")
@@ -635,17 +680,17 @@ class FactTable(val root: String, spark: SparkSession,
       .filterNot(c => groupNames.contains(c) || sumCols.contains(c))
     val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
       others.map(c => max(col(c)).as(c))
-    src.groupBy(groupNames.map(col): _*)
+    val rolled = src.groupBy(groupNames.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .select(src.columns.map(col).toIndexedSeq: _*) // original column order
-      .repartition(col(partitionCol))
+    rolled.repartition(col(partitionCol))
       .sortWithinPartitions(partitionCol, keyCols: _*)
       .write.partitionBy(partitionCol).mode("overwrite")
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
-      removes = victims.map(_.path))(
+    val committed = commitWithRetry(snap, None, adds,
+      removes = victims.map(_.path), Some(rolled.schema))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
     if (!committed) {
@@ -677,7 +722,7 @@ class FactTable(val root: String, spark: SparkSession,
     val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
     if (victims.isEmpty) return 0L
     val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val src = masked(victims, snap.tombFiles)
+    val src = masked(victims, snap)
     require(src.columns.contains(ttlCol),
       s"ttlColumn: no column $ttlCol in ${src.columns.toSeq}")
     src.withColumn(ttlCol, default.cast(src.schema(ttlCol).dataType))
@@ -688,7 +733,7 @@ class FactTable(val root: String, spark: SparkSession,
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
+    val committed = commitWithRetry(snap, None, adds,
       removes = victims.map(_.path))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
@@ -730,7 +775,7 @@ class FactTable(val root: String, spark: SparkSession,
     if (victims.isEmpty) return 0L
     val target = new Path(new Path(rootPath, volume),
       s"data/base-${java.util.UUID.randomUUID()}")
-    masked(victims, snap.tombFiles)
+    masked(victims, snap)
       .repartition(col(partitionCol))
       .sortWithinPartitions(partitionCol)
       .write.partitionBy(partitionCol).mode("overwrite")
@@ -738,7 +783,7 @@ class FactTable(val root: String, spark: SparkSession,
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
+    val committed = commitWithRetry(snap, None, adds,
       removes = victims.map(_.path))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
@@ -917,7 +962,7 @@ class FactTable(val root: String, spark: SparkSession,
     // Reading through the tombstone mask keeps any pending soft delete
     // applied in the rewritten output (rewrites only converge physical
     // state toward logical state, never resurrect).
-    val kept = masked(victims, snap.tombFiles)
+    val kept = masked(victims, snap)
       .filter(!coalesce(cond, lit(false)))
     // cluster by partition before the partitioned write (the compact()
     // discipline): an unclustered write stages (#tasks × #partitions)
@@ -929,7 +974,7 @@ class FactTable(val root: String, spark: SparkSession,
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
+    val committed = commitWithRetry(snap, None, adds,
       removes = victims.map(_.path))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
@@ -985,7 +1030,7 @@ class FactTable(val root: String, spark: SparkSession,
     val out =
       if (straddlers.isEmpty) df
       else df.unionByName(
-        masked(straddlers, snap.tombFiles)
+        masked(straddlers, snap)
           .filter(!(col(partitionCol) <=> to_date(lit(value)))),
         allowMissingColumns = true)
     val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
@@ -993,8 +1038,8 @@ class FactTable(val root: String, spark: SparkSession,
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
-      removes = victims.map(_.path))(
+    val committed = commitWithRetry(snap, None, adds,
+      removes = victims.map(_.path), Some(out.schema))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
     if (!committed) {
@@ -1047,7 +1092,7 @@ class FactTable(val root: String, spark: SparkSession,
     val kept =
       if (victims.isEmpty) None
       else {
-        val live = masked(victims, snap.tombFiles)
+        val live = masked(victims, snap)
         maskedVictimRows = live.count()
         Some(live
           .join(broadcast(source.select(keyCols.map(col): _*)), keyCols, "left_anti"))
@@ -1058,8 +1103,8 @@ class FactTable(val root: String, spark: SparkSession,
       .parquet(target.toString)
     beforeCommit()
     val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
-      removes = victims.map(_.path))(
+    val committed = commitWithRetry(snap, None, adds,
+      removes = victims.map(_.path), Some(out.schema))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
     if (!committed) {
@@ -1126,7 +1171,7 @@ class FactTable(val root: String, spark: SparkSession,
         setPruned(cond, f) || tokenBloomPruned(cond, f))
     if (victims.isEmpty) return 0L
     val target = new Path(dataDir, s"tomb-${java.util.UUID.randomUUID()}")
-    masked(victims, snap.tombFiles)
+    masked(victims, snap)
       .filter(coalesce(cond, lit(false)))
       .select(keyCols.map(col): _*).distinct()
       .coalesce(1)
@@ -1147,7 +1192,7 @@ class FactTable(val root: String, spark: SparkSession,
     // mask, and our deletion vector lists only the old (now dead) part
     // paths — committing anyway would mask nothing and lose the delete.
     // Restart from a fresh snapshot so the vector covers the live parts.
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
+    val committed = commitWithRetry(snap, None, adds,
       removes = Nil)(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)))
     if (!committed) { fs.delete(target, true); return softDelete(cond, keyCols) }
@@ -1171,7 +1216,7 @@ class FactTable(val root: String, spark: SparkSession,
     val adds =
       if (victims.isEmpty) Nil
       else {
-        masked(victims, tombs)
+        masked(victims, snap)
           .write.partitionBy(partitionCol).mode("overwrite")
           .parquet(target.toString)
         entriesFor(target, TierBase)
@@ -1180,7 +1225,7 @@ class FactTable(val root: String, spark: SparkSession,
     // tombsUnchanged also rejects a NEW tombstone committed concurrently:
     // its deletion vector lists the victim paths this commit removes, so
     // proceeding would strand it masking nothing — restart and fold it in
-    val committed = commitWithRetry(snap.nextVersion, None, adds,
+    val committed = commitWithRetry(snap, None, adds,
       removes = victims.map(_.path) ++ tombs.map(_.path))(
       fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
         tombsUnchanged(snap)(fresh))
@@ -1192,7 +1237,8 @@ class FactTable(val root: String, spark: SparkSession,
   }
 
   /** Shared full-rewrite commit path for the major/replacing merges:
-    * stage `rewrite(read())` as one fresh generation, then atomically
+    * stage `rewrite` of the snapshot's masked rows as one fresh
+    * generation, then atomically
     * swap it for every current live part. Same conflict rule as
     * compact(): obsolete if any source part was already rewritten by a
     * concurrent compaction — drop the staged output and restart fresh.
@@ -1202,11 +1248,13 @@ class FactTable(val root: String, spark: SparkSession,
     val snap = snapshot()
     if (snap.files.isEmpty) return 0L
     val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    rewrite(read()).write.partitionBy(partitionCol).mode("overwrite")
+    val out = rewrite(masked(snap.dataFiles, snap))
+    out.write.partitionBy(partitionCol).mode("overwrite")
       .parquet(target.toString)
     beforeCommit()
-    val committed = commitWithRetry(snap.nextVersion, None,
-      entriesFor(target, TierBase), removes = snap.files.map(_.path))(
+    val committed = commitWithRetry(snap, None,
+      entriesFor(target, TierBase), removes = snap.files.map(_.path),
+      Some(out.schema))(
       fresh => snap.files.forall(f => fresh.files.exists(_.path == f.path)) &&
         tombsUnchanged(snap)(fresh))
     if (!committed) {
@@ -1218,14 +1266,13 @@ class FactTable(val root: String, spark: SparkSession,
 
   /** Snapshot read over the live part set (both tiers — like the
     * ClickHouse Buffer engine, queries see buffered + flushed rows).
-    * The tiers have different physical layouts — base parts carry the
-    * partition column as a `date=` directory, buffer parts as a data
-    * column — so each tier is loaded with its own strategy and unioned
-    * by name (one mixed load trips CONFLICTING_DIRECTORY_STRUCTURES).
+    * Everything the read needs comes from the log: the schema, and each
+    * part's path, length and `date=` partition value. Building the
+    * DataFrame lists no directory, opens no file and starts no Spark job.
     */
   def read(asOfVersion: Long = Long.MaxValue): DataFrame = {
     val snap = snapshot(asOfVersion)
-    masked(snap.dataFiles, snap.tombFiles)
+    masked(snap.dataFiles, snap)
   }
 
   /** Tombstone-masked read: each data part anti-joins the keys of the
@@ -1233,22 +1280,22 @@ class FactTable(val root: String, spark: SparkSession,
     * their applicable tombstone set (in practice 1–2 groups: pre-delete
     * parts vs everything since), each group gets ONE broadcast anti-join
     * per covering tombstone, and uncovered parts take the raw-scan fast
-    * path — the corpus never shuffles for the mask.
+    * path — the corpus never shuffles for the mask. `snap` supplies the
+    * schema and the live tombstones.
     */
-  private[storage] def masked(files: Seq[FileEntry],
-      tombs: Seq[FileEntry]): DataFrame = {
+  private[storage] def masked(files: Seq[FileEntry], snap: Snapshot): DataFrame = {
+    val schema = schemaOf(snap)
     val data = files.filterNot(_.tier == TierTomb)
-    val applicable = tombs.filter(t => {
+    val applicable = snap.tombFiles.filter(t => {
       val vs = victimsOf(t.path)
       data.exists(f => vs.contains(f.path))
     })
-    if (applicable.isEmpty) return readFiles(data)
-    data.groupBy(f => applicable.filter(t => victimsOf(t.path).contains(f.path))
-        .map(_.path))
-      .toSeq.sortBy(_._1.mkString(","))
-      .map { case (tombPaths, group) =>
-        tombPaths.foldLeft(readFiles(group)) { (df, tp) =>
-          val keys = spark.read.parquet(tp)
+    if (applicable.isEmpty) return readFiles(data, schema)
+    data.groupBy(f => applicable.filter(t => victimsOf(t.path).contains(f.path)))
+      .toSeq.sortBy(_._1.map(_.path).mkString(","))
+      .map { case (tombs, group) =>
+        tombs.foldLeft(readFiles(group, schema)) { (df, t) =>
+          val keys = tombKeys(t)
           // null-safe (<=>) equi-join: softDelete tombstones NULL key
           // tuples too, and a plain equi-anti-join could never mask them
           // (NULL = NULL is NULL ⇒ the row always survives). EqualNullSafe
@@ -1257,8 +1304,12 @@ class FactTable(val root: String, spark: SparkSession,
           df.join(broadcast(keys), cond, "left_anti")
         }
       }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .reduce(_.union(_))
   }
+
+  /** A tombstone part's key tuples, typed by its own footer. */
+  private def tombKeys(t: FileEntry): DataFrame =
+    readFiles(Seq(t), footerSchema(new Path(t.path)))
 
   /** Filtered read with log-stats data skipping: files whose recorded
     * min/max disprove `cond` are dropped at PLAN time — never listed,
@@ -1275,9 +1326,9 @@ class FactTable(val root: String, spark: SparkSession,
       StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
         setPruned(cond, f) || tokenBloomPruned(cond, f) ||
         arrayBloomPruned(cond, f))
-    if (kept.isEmpty) // schema from any live file, zero rows
-      readFiles(all.take(1)).where(lit(false))
-    else masked(kept, snap.tombFiles).where(cond)
+    if (kept.nonEmpty) masked(kept, snap).where(cond)
+    else if (all.isEmpty) throw new IllegalStateException(s"empty table at $root")
+    else spark.createDataFrame(java.util.List.of[Row](), schemaOf(snap))
   }
 
   /** (surviving files, total files) for `cond` — the observability hook
@@ -1295,31 +1346,78 @@ class FactTable(val root: String, spark: SparkSession,
       files.size)
   }
 
-  private[storage] def readFiles(files: Seq[FileEntry]): DataFrame = {
-    val snap = Snapshot(files, Set.empty, 0L)
-    if (snap.files.isEmpty)
+  /** One file scan per partition layout over `files`, read with
+    * `schema`: in practice one for the base tier (`date=` directories)
+    * and one for the buffer tier (`date` a data column), whatever the
+    * number of base generations. Each scan is a `HadoopFsRelation` over a
+    * [[FactTable.LogFileIndex]], so Spark's partition pruning works as
+    * on a listed directory. A part written before a column was added
+    * reads that column as NULL. Columns come out in schema order.
+    */
+  private[storage] def readFiles(files: Seq[FileEntry],
+      schema: StructType): DataFrame = {
+    if (files.isEmpty)
       throw new IllegalStateException(s"empty table at $root")
-    val (base, buffer) = snap.files.partition(_.tier == TierBase)
-    // each compaction generation is its own partitioned root — mixing
-    // two base-<uuid> roots under one basePath makes partition discovery
-    // see conflicting structures (found by FactTableProps)
-    val baseGens = base.groupBy(f => generationRoot(new Path(f.path)).toString)
-      .toSeq.sortBy(_._1)
-      .map { case (root, fs) =>
-        spark.read.option("basePath", root).parquet(fs.map(_.path): _*)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    files.map(f => (f, partitionDirs(f.path)))
+      .groupBy(_._2.map(_._1)).toSeq.sortBy(_._1.mkString("/"))
+      .map { case (partCols, group) =>
+        val partSchema = StructType(partCols.map(c => schema(c)))
+        val located = group.map { case (f, dirs) =>
+          val values = dirs.zip(partSchema.fields).map { case ((_, raw), field) =>
+            if (raw == DefaultPartitionValue) null
+            else Cast(Literal(raw), field.dataType, Some(tz)).eval()
+          }
+          f -> InternalRow.fromSeq(values)
+        }
+        val relation = HadoopFsRelation(LogFileIndex(rootPath, partSchema, located),
+          partSchema, StructType(schema.filterNot(f => partCols.contains(f.name))),
+          None, new ParquetFileFormat(), Map.empty)(spark)
+        spark.baseRelationToDataFrame(relation).select(
+          schema.fieldNames.toIndexedSeq.map(c => col(QuotingUtils.quoteIdentifier(c))): _*)
       }
-    val tiers = baseGens ++
-      Option.when(buffer.nonEmpty)(spark.read.option("mergeSchema", true)
-        .parquet(buffer.map(_.path): _*))
-    tiers.reduce(_.unionByName(_, allowMissingColumns = true))
+      .reduce(_.union(_))
   }
 
-  /** data/<base-uuid>/date=X/part.parquet → data/<base-uuid> */
-  private def generationRoot(p: Path): Path = {
-    var cur = p.getParent
-    while (cur.getParent != null && cur.getParent.getName != dataDir.getName)
-      cur = cur.getParent
-    cur
+  /** Schema of `snap` as recorded in the log; a log written before the
+    * schema was recorded falls back to the live parts' footers.
+    */
+  private[storage] def schemaOption(snap: Snapshot): Option[StructType] =
+    snap.schema.orElse(Option.when(snap.dataFiles.nonEmpty)(
+      footerSchemaOf(snap.dataFiles)))
+
+  private[storage] def schemaOf(snap: Snapshot): StructType =
+    schemaOption(snap).getOrElse(
+      throw new IllegalStateException(s"empty table at $root"))
+
+  /** Pre-schema logs: the union of the parts' footer schemas, plus any
+    * partition column that lives only in `date=` directories (DATE when
+    * every value is an ISO date, as Spark's partition inference types
+    * them, else STRING).
+    */
+  private def footerSchemaOf(files: Seq[FileEntry]): StructType = {
+    val schemas = new Array[StructType](files.size)
+    onIoPool(files.indices)(i => schemas(i) = footerSchema(new Path(files(i).path)))
+    val merged = schemas.reduce((a, b) => widen(a, b).asInstanceOf[StructType])
+    val dirCols = files.flatMap(f => partitionDirs(f.path))
+      .filterNot { case (c, _) => merged.fieldNames.contains(c) }
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+    StructType(merged.fields ++ dirCols.map { case (c, vals) =>
+      val dates = vals.filterNot(_ == DefaultPartitionValue)
+        .forall(v => scala.util.Try(java.time.LocalDate.parse(v)).isSuccess)
+      StructField(c, if (dates) DateType else StringType)
+    })
+  }
+
+  /** The Spark schema a part was written with (its footer's
+    * `org.apache.spark.sql.parquet.row.metadata`), read on the driver.
+    */
+  private def footerSchema(path: Path): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, hadoopConf))
+    try nullable(DataType.fromJson(reader.getFooter.getFileMetaData
+      .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+      .asInstanceOf[StructType]
+    finally reader.close()
   }
 
   // -------------------------------------------------------------- helpers
@@ -1675,16 +1773,15 @@ class FactTable(val root: String, spark: SparkSession,
     // keyed by scheme-stripped ABSOLUTE path: a partitioned write reuses
     // one file name across partition directories, so names collide
     def norm(p: String): String = new Path(p).toUri.getPath
-    // Read the staged GENERATION DIRECTORY when it holds nothing but the
-    // freshly written parquet parts: an explicit N-path read pays a
-    // parallel-listing Spark job plus one driver getFileStatus per part
-    // (measured ~1 s at 313 parts). Other sidecar families write
-    // non-parquet files next to the parts BEFORE this pass runs, so fall
-    // back to the explicit list whenever any is configured.
+    // Read the staged GENERATION DIRECTORY: an explicit N-path read pays
+    // a parallel-listing Spark job plus one driver getFileStatus per part
+    // (measured ~1 s at 313 parts). The glob keeps the sidecar files
+    // written next to the parts (blooms, sets, the other gram family's
+    // pass) out of the read. Projection sidecars are parquet DIRECTORIES
+    // the glob cannot exclude, so they force the explicit list.
     val df0 =
-      if (bloomCols.isEmpty && setIndexCols.isEmpty &&
-          arrayBloomCols.isEmpty && projections.isEmpty)
-        spark.read.parquet(dir.toString)
+      if (projections.isEmpty)
+        spark.read.option("pathGlobFilter", "*.parquet").parquet(dir.toString)
       else spark.read.parquet(parts: _*)
     mark("read")
     cols.foreach { c =>
@@ -1836,7 +1933,7 @@ class FactTable(val root: String, spark: SparkSession,
         .groupBy(spec.keyCols.map(col): _*)
         .agg(aggs.head, (aggs.tail :+ sum(col(ProjCountCol)).as("n_rows")): _*)
     else // fallback: exact, just not cheap
-      masked(files, snap.tombFiles)
+      masked(files, snap)
         .groupBy(spec.keyCols.map(col): _*)
         .agg(aggs.head, (aggs.tail :+ count(lit(1)).as("n_rows")): _*)
   }
@@ -2034,8 +2131,12 @@ object FactTable {
       tier: String, addedMs: Long,
       stats: Map[String, StatsPruning.ColStats] = Map.empty)
 
+  /** Live table state at one version. `schema` is the last schema the
+    * log recorded at or before it (None for a log that predates schema
+    * recording, or an empty one).
+    */
   final case class Snapshot(files: Seq[FileEntry], txns: Set[Long],
-      nextVersion: Long) {
+      nextVersion: Long, schema: Option[StructType] = None) {
     def bufferRows: Long = files.filter(_.tier == TierBuffer).map(_.rows).sum
     def bufferBytes: Long = files.filter(_.tier == TierBuffer).map(_.bytes).sum
     def oldestBufferMs: Option[Long] =
@@ -2044,6 +2145,91 @@ object FactTable {
     def dataFiles: Seq[FileEntry] = files.filterNot(_.tier == TierTomb)
     /** Live tombstone parts (pending soft deletes). */
     def tombFiles: Seq[FileEntry] = files.filter(_.tier == TierTomb)
+  }
+
+  /** A set of log entries as a Spark [[FileIndex]]: the files, lengths,
+    * modification times (`addedMs`) and partition values all come from
+    * the log, so planning a scan lists nothing. `listFiles` applies
+    * Spark's partition filters to the values, so `date` predicates prune
+    * directories exactly as on an `InMemoryFileIndex`. A case class, so
+    * two reads of the same parts compare equal (cache lookups match).
+    */
+  final case class LogFileIndex(root: Path, partitionSchema: StructType,
+      files: Seq[(FileEntry, InternalRow)]) extends FileIndex {
+    def rootPaths: Seq[Path] = Seq(root)
+    def inputFiles: Array[String] = files.map(_._1.path).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_._1.bytes).sum
+
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep: InternalRow => Boolean =
+        if (partitionFilters.isEmpty) _ => true
+        else {
+          val pred = Predicate.createInterpreted(
+            partitionFilters.reduce(And).transform {
+              case a: AttributeReference =>
+                val i = partitionSchema.fieldIndex(a.name)
+                BoundReference(i, partitionSchema(i).dataType, nullable = true)
+            })
+          pred.initialize(0)
+          pred.eval
+        }
+      files.filter(f => keep(f._2)).groupBy(_._2).toSeq.map { case (values, fs) =>
+        PartitionDirectory(values, fs.map { case (f, _) =>
+          FileStatusWithMetadata(
+            new FileStatus(f.bytes, false, 0, 0L, f.addedMs, new Path(f.path)))
+        })
+      }
+    }
+  }
+
+  /** Spark's name for a NULL partition value's directory. */
+  val DefaultPartitionValue = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The `col=value` directories directly above a part, outermost first:
+    * `…/base-<uuid>/date=2024-03-01/part-0.parquet` → (date, 2024-03-01);
+    * a buffer or tombstone part has none.
+    */
+  private[storage] def partitionDirs(path: String): Seq[(String, String)] = {
+    var out = List.empty[(String, String)]
+    var cur = new Path(path).getParent
+    while (cur != null && cur.getName.indexOf('=') > 0) {
+      val n = cur.getName
+      val eq = n.indexOf('=')
+      out = (n.substring(0, eq) ->
+        ExternalCatalogUtils.unescapePathName(n.substring(eq + 1))) :: out
+      cur = cur.getParent
+    }
+    out
+  }
+
+  /** `a` with every field of `b` it lacks appended, recursively through
+    * structs, arrays and maps (add-column evolution); a leaf present in
+    * both with different types takes the wider one.
+    */
+  private[storage] def widen(a: DataType, b: DataType): DataType = (a, b) match {
+    case (x: StructType, y: StructType) =>
+      val ys = y.fields.map(f => f.name -> f).toMap
+      StructType(x.fields.map(f => ys.get(f.name)
+          .fold(f)(g => f.copy(dataType = widen(f.dataType, g.dataType)))) ++
+        y.fields.filterNot(f => x.fieldNames.contains(f.name)))
+    case (ArrayType(x, n), ArrayType(y, m)) => ArrayType(widen(x, y), n || m)
+    case (MapType(k1, v1, n), MapType(k2, v2, m)) =>
+      MapType(widen(k1, k2), widen(v1, v2), n || m)
+    case _ => org.apache.spark.sql.catalyst.analysis.TypeCoercion
+      .findWiderTypeForTwo(a, b).getOrElse(a)
+  }
+
+  /** `t` with every field and element nullable, as a parquet read
+    * reports it.
+    */
+  private[storage] def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case o => o
   }
 }
 

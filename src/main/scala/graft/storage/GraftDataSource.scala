@@ -72,7 +72,7 @@ class GraftRelation(root: String, asOf: Long, spark: SparkSession,
   }
 
   override def sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType = table.read(asOf).schema
+  override val schema: StructType = table.schemaOf(table.snapshot(asOf))
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
@@ -83,17 +83,11 @@ class GraftRelation(root: String, asOf: Long, spark: SparkSession,
       filters.exists(fl => StatsPruning.canPrune(fl, f.stats)) ||
         conds.exists(c => table.sidecarPruned(c, f)))
     GraftRelation.lastPrune = Some((root, kept.size, files.size))
+    // the scan reads the table schema, so a pruned subset of only
+    // pre-evolution files still resolves an added column (as NULL);
+    // reads go through the tombstone mask (pending soft deletes)
     if (kept.isEmpty) spark.sparkContext.emptyRDD[Row]
-    else {
-      // Align to the relation schema: after add-column evolution, a
-      // pruned subset may contain only pre-evolution files — the evolved
-      // column must still resolve (as NULL), exactly as in a full read.
-      // Reads go through the tombstone mask (pending soft deletes).
-      val df = table.masked(kept, snap.tombFiles)
-      val aligned = schema.fields.filterNot(f => df.columns.contains(f.name))
-        .foldLeft(df)((d, f) =>
-          d.withColumn(f.name, org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
-      aligned.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
-    }
+    else table.masked(kept, snap)
+      .select(requiredColumns.toIndexedSeq.map(col): _*).rdd
   }
 }

@@ -105,28 +105,15 @@ object StatsPruning {
   /** `date=2024-01-02` dir segments → ("date", days-as-long min=max);
     * non-date partition values are recorded as strings.
     */
-  def partitionValues(file: Path): Map[String, ColStats] = {
-    var out = Map.empty[String, ColStats]
-    var cur = file.getParent
-    while (cur != null) {
-      val n = cur.getName
-      val eq = n.indexOf('=')
-      if (eq > 0) {
-        val col = n.substring(0, eq)
-        val raw = n.substring(eq + 1)
-        if (raw != "__HIVE_DEFAULT_PARTITION__") {
-          val cs = scala.util.Try(
-            java.time.LocalDate.parse(raw).toEpochDay.toString) match {
-            case scala.util.Success(days) => ColStats("long", days, days)
-            case _ => ColStats("string", raw, raw)
-          }
-          out += (col -> cs)
-        }
-      }
-      cur = cur.getParent
-    }
-    out
-  }
+  def partitionValues(file: Path): Map[String, ColStats] =
+    FactTable.partitionDirs(file.toString).collect {
+      case (col, raw) if raw != FactTable.DefaultPartitionValue =>
+        col -> (scala.util.Try(
+          java.time.LocalDate.parse(raw).toEpochDay.toString) match {
+          case scala.util.Success(days) => ColStats("long", days, days)
+          case _ => ColStats("string", raw, raw)
+        })
+    }.toMap
 
   // ----------------------------------------------------------- prune test
 

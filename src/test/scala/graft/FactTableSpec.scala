@@ -1481,4 +1481,182 @@ class FactTableSpec extends AnyFunSuite {
     assert(src.read().count() == 10, "source data deleted by clone vacuum")
     assert(clone.read().count() == 10)
   }
+
+  // ------------------------------------------------ log-native reads
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def logFile(t: FactTable, name: String) =
+    new java.io.File(new java.io.File(t.root, "_graft_log"), name)
+
+  /** Spark jobs started while `body` runs. A fence job afterwards proves
+    * every earlier job-start event has reached the listener.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val key = "graft.jobProbe"
+    val bodyJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.atomic.AtomicBoolean()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case "body" => bodyJobs.incrementAndGet()
+          case "fence" => fenced.set(true)
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, "body")
+      val out = try body finally sc.setLocalProperty(key, "fence")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!fenced.get && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced.get, "fence job never reached the listener")
+      (out, bodyJobs.get)
+    } finally { sc.setLocalProperty(key, null); sc.removeSparkListener(l) }
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) = {
+    val cols = df.columns.sorted.toIndexedSeq
+    df.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect().toSeq
+  }
+
+  private def fieldSet(df: org.apache.spark.sql.DataFrame) =
+    df.schema.fields.map(f => f.name -> f.dataType).toSet
+
+  test("log-native read: ten base generations plus buffer parts plan with no Spark job") {
+    val t = freshTable()
+    (0 until 10).foreach { i =>
+      t.append(rows(4, s"2024-03-0${i % 3 + 1}", s"m$i"), i)
+      t.compact()
+    }
+    t.append(rows(3, "2024-03-05", "b1"), 10)
+    t.append(rows(2, "2024-03-06", "b2"), 11)
+    val snap = t.snapshot()
+    val gens = snap.dataFiles.filter(_.tier == FactTable.TierBase)
+      .map(f => new org.apache.hadoop.fs.Path(f.path).getParent.getParent.getName)
+      .distinct
+    assert(gens.size == 10, gens)
+    assert(snap.dataFiles.count(_.tier == FactTable.TierBuffer) >= 2)
+    val cut = java.sql.Timestamp.valueOf("2024-03-02 00:00:00")
+    val ((all, recent), jobs) =
+      jobsDuring((t.read(), t.readWhere($"timestamp" >= cut)))
+    assert(jobs == 0, s"building the reads started $jobs Spark jobs")
+    Seq(all, recent).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      val scans = plan.linesIterator.count(_.contains("FileScan"))
+      assert(scans <= 2, s"$scans file scans for 10 generations:\n$plan")
+    }
+    assert(all.count() == 45)
+    assert(sortedRows(recent) == sortedRows(all.where($"timestamp" >= cut)))
+  }
+
+  test("schema lives in the log: recorded on change only, time-travels, checkpointed") {
+    val t = freshTable()
+    t.append(rows(4, "2024-03-01", "m1"), 0)                                // v0
+    t.append(rows(2, "2024-03-01", "m2"), 1)                                // v1
+    t.compact()                                                             // v2
+    t.append(rows(3, "2024-03-02", "m3")
+      .withColumn("fw_version", lit("8600-19.2")), 2)                        // v3
+    t.append(rows(1, "2024-03-03", "m4"), 3)                                // v4
+    def recorded(v: Long) = mapper.readTree(logFile(t, s"$v.json")).has("schema")
+    assert((0L to 4L).filter(recorded) == Seq(0L, 3L),
+      "the schema must be written by the first commit and the add-column one only")
+    // time travel to before the evolution returns the old schema
+    val old = t.read(asOfVersion = 2)
+    assert(!old.columns.contains("fw_version") && old.count() == 6)
+    assert(t.read(asOfVersion = 3).columns.contains("fw_version"))
+    assert(t.read().filter($"fw_version".isNull).count() == 7)
+    // checkpoints carry the schema: readers need no earlier log version
+    val schema = t.snapshot().schema
+    assert(schema.exists(_.fieldNames.contains("fw_version")))
+    val ck = t.checkpoint()
+    assert(mapper.readTree(logFile(t, s"$ck${FactTable.CheckpointSuffix}"))
+      .get("schema").asText() == schema.get.json)
+    (0L to ck).foreach(v => assert(logFile(t, s"$v.json")
+      .renameTo(logFile(t, s"hidden-$v"))))
+    val t2 = new FactTable(t.root, spark)
+    assert(t2.snapshot().schema == schema)
+    assert(t2.read().count() == 10 && t2.read().columns.contains("fw_version"))
+  }
+
+  test("a log with no recorded schema reads identically (footer fallback)") {
+    val t = freshTable()
+    t.append(rows(4, "2024-03-01", "m1"), 0)                                // v0
+    t.compact()                                                             // v1
+    t.append(rows(3, "2024-03-02", "m2")
+      .withColumn("fw_version", lit("8600-19.2")), 1)                        // v2
+    t.compact()                                                             // v3
+    t.append(rows(2, "2024-03-03", "m3"), 2)                                // v4
+    t.softDelete($"uptime" === 1L, Seq("modem_name", "uptime"))             // v5
+    val versions = Seq(3L, 5L) // base parts only (date from directories); all tiers
+    val before = versions.map(v => t.read(v)).map(df => (fieldSet(df), sortedRows(df)))
+    // hand-strip every recorded schema: the log a pre-schema writer left
+    var stripped = 0
+    (0L to 5L).foreach { v =>
+      val f = logFile(t, s"$v.json")
+      val node = mapper.readTree(f)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      if (node.remove("schema") != null) {
+        stripped += 1
+        mapper.writeValue(f, node)
+        logFile(t, s".$v.json.crc").delete() // the local fs checksum
+      }
+    }
+    assert(stripped == 2)
+    val legacy = new FactTable(t.root, spark)
+    assert(legacy.snapshot().schema.isEmpty)
+    assert(versions.map(v => legacy.read(v))
+      .map(df => (fieldSet(df), sortedRows(df))) == before)
+    assert(legacy.readWhere($"modem_name" === "m2").count() == 2) // uptime 1 deleted
+    // the first commit after the upgrade records the schema again
+    legacy.append(rows(1, "2024-03-04", "m4"), 3)
+    assert(legacy.snapshot().schema.exists(s =>
+      s.fields.map(f => f.name -> f.dataType).toSet == before.last._1))
+  }
+
+  test("log-native read is row-identical across cold, cloned and masked parts") {
+    val src = freshTable()
+    val batches = (1 to 4).map(d => rows(6, s"2024-03-0$d", s"m$d")) :+
+      rows(5, "2024-03-05", "m5")
+    batches.zipWithIndex.foreach { case (b, i) =>
+      src.append(b, i)
+      if (i < 4) src.compact()
+    }
+    assert(src.ttlMove("2024-03-03") > 0L) // days 1-2 to the cold volume
+    assert(src.snapshot().dataFiles.exists(_.path.contains("/cold/data/")))
+    src.softDelete($"uptime" === 3L, Seq("modem_name", "uptime"))
+    val clone = src.cloneShallowTo(
+      java.nio.file.Files.createTempDirectory("fact_clone").toString)
+    clone.append(rows(2, "2024-03-06", "m6"), 0)
+    val expected = batches.reduce(_.unionByName(_)).where($"uptime" =!= 3L)
+    assert(sortedRows(src.read()) == sortedRows(expected))
+    assert(sortedRows(clone.read()) ==
+      sortedRows(expected.unionByName(rows(2, "2024-03-06", "m6"))))
+    val day2 = $"date" >= lit(java.sql.Date.valueOf("2024-03-02"))
+    assert(sortedRows(src.readWhere(day2)) == sortedRows(expected.where(day2)))
+    // a prune that keeps nothing answers from the log schema alone
+    val none = src.readWhere($"uptime" > 100L)
+    assert(none.count() == 0 && fieldSet(none) == fieldSet(src.read()))
+  }
+
+  test("token and ngram blooms on one table: both sidecar passes build and prune") {
+    val t = new FactTable(
+      java.nio.file.Files.createTempDirectory("fact_grams").toString, spark,
+      tokenBloomCols = Seq("text"), ngramBloomCols = Seq("text"))
+    def docs(id0: Long, texts: Seq[String]) =
+      texts.zipWithIndex.map { case (tx, i) => (id0 + i, tx) }
+        .toDF("doc_id", "text").withColumn("date", to_date(lit("2024-03-01")))
+    t.append(docs(0, Seq("alpha beta", "beta alpha")).coalesce(1), 0)
+    t.append(docs(10, Seq("gamma delta", "delta gamma")).coalesce(1), 1)
+    val token = FactTable.hasToken($"text", "gamma")
+    val gram = $"text".contains("amm")
+    assert(t.pruneReport(token) == ((1, 2)) && t.pruneReport(gram) == ((1, 2)))
+    assert(t.readWhere(token).count() == 2 && t.readWhere(gram).count() == 2)
+    // the compacted generation (partition directories) builds both too
+    t.compact(sortCols = Seq("doc_id"))
+    assert(t.tokenBloomFpp("text").nonEmpty && t.ngramBloomFpp("text").nonEmpty)
+    assert(t.readWhere(gram).count() == 2)
+    assert(t.readWhere(FactTable.hasToken($"text", "alpha")).count() == 2)
+  }
 }

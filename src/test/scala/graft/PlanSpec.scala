@@ -1148,6 +1148,29 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"masked read shuffles the fact side:\n$p")
   }
 
+  test("log-native FactTable read: one FileScan per tier, date pruning through the log index") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("plan_log").toString
+    val t = new graft.storage.FactTable(dir, spark)
+    val rows = spark.range(240).select(col("id"),
+      (lit(1709251200L) + col("id") % 6 * 86400L).cast("timestamp").as("ts"))
+      .withColumn("date", to_date(col("ts")))
+    (0 until 6).foreach { i =>
+      t.append(rows.where(col("id") % 6 === i), i)
+      t.compact(sortCols = Seq("id"))
+    }
+    t.append(rows.limit(10), 6) // stays in the buffer tier
+    val p = t.read().where(col("date") === lit(java.sql.Date.valueOf("2024-03-02")))
+      .queryExecution.executedPlan.toString
+    // six base generations and the buffer: one scan per tier, never one
+    // per generation
+    val scans = p.linesIterator.count(_.contains("FileScan"))
+    assert(scans == 2, s"$scans file scans:\n$p")
+    // the base tier's date predicate is a partition filter Spark applies
+    // to the log index's partition values
+    assert(p.contains("PartitionFilters: [isnotnull(date"), s"no partition pruning:\n$p")
+  }
+
   test("join hints steer the planner: BROADCAST beats the size heuristic, MERGE forces SMJ") {
     Tables.registerAll(spark, sfDir)
     // orders ⋈ lineitem is above the autoBroadcast threshold default at
