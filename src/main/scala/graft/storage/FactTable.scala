@@ -2,7 +2,7 @@ package graft.storage
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -47,10 +47,23 @@ import org.apache.spark.sql.types._
   * - **Snapshot isolation**: readers take live files from the log; a
   *   compaction commit atomically swaps small parts for merged ones, so
   *   a reader sees either the old or the new part set, never both.
+  * - **Bounded part count** (MergeTree's background merges, done inside
+  *   the Buffer flush): a flush through [[BufferedFactSink]] merges the
+  *   buffer with the newest base parts of each day it touches, newest
+  *   first, while the next part holds fewer than twice the rows gathered
+  *   so far. Each day's parts, newest to oldest, then at least double in
+  *   size, so a day holds at most log2(day rows / smallest flush) + 1
+  *   parts; n equal flushes leave popcount(n). Only parts under this
+  *   table's `data/` are merged: cold-volume and shallow-cloned parts
+  *   stay where they are.
+  * - **Incremental replay**: each instance keeps the state it last
+  *   replayed; `snapshot()` at the head reads only the versions committed
+  *   since (`last+1.json`, … until one is missing), with no directory
+  *   listing. The first call and time travel replay from the newest
+  *   checkpoint; `vacuum()` keeps its removed-at map the same way.
   *
   * At cluster scale the same design is what Delta/Iceberg do (with
-  * manifests and checkpoints on top); here the log stays small because
-  * compaction keeps the live-file count bounded.
+  * manifests and checkpoints on top).
   */
 /** @param bloomCols columns to index with a per-part Bloom skip index
   *   (the ClickHouse `bloom_filter` secondary-index analog): every part
@@ -123,6 +136,11 @@ class FactTable(val root: String, spark: SparkSession,
 
   private val mapper = new ObjectMapper()
 
+  /** Conflicting commits one transaction retries, and restarts one
+    * operation makes, before it gives up.
+    */
+  private val MaxCommitAttempts = 20
+
   // ------------------------------------------------------------------ log
 
   private def versionOf(p: Path): Option[Long] = {
@@ -132,61 +150,107 @@ class FactTable(val root: String, spark: SparkSession,
     else None
   }
 
+  private def versionPath(v: Long): Path = new Path(logDir, s"$v.json")
+
+  /** Version `v`'s commit, or None if no such file exists. */
+  private def readVersion(v: Long): Option[JsonNode] =
+    try {
+      val in = fs.open(versionPath(v))
+      try Some(mapper.readTree(in)) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Apply commit `node`, version `v`, to `st`. The commit is parsed in
+    * full first, so a malformed one leaves `st` as it was.
+    */
+  private def replay(st: LogState, v: Long, node: JsonNode): Unit = {
+    val adds = mutable.ArrayBuffer[FileEntry]()
+    node.get("adds").forEach(a => adds += entryOf(a))
+    val removes = mutable.ArrayBuffer[String]()
+    node.get("removes").forEach(r => removes += r.asText())
+    val txn = Option.when(node.hasNonNull("txn"))(node.get("txn").asLong())
+    val schema = schemaIn(node)
+    adds.foreach(e => st.live.put(e.path, e))
+    removes.foreach(st.live.remove)
+    txn.foreach(t => st.txns += t)
+    schema.foreach(sc => st.schema = Some(sc))
+    st.last = v
+  }
+
+  private def schemaIn(node: JsonNode): Option[StructType] =
+    Option.when(node.hasNonNull("schema"))(
+      DataType.fromJson(node.get("schema").asText()).asInstanceOf[StructType])
+
+  /** The state `snapshot()` last reached at the log head; read and
+    * advanced only under `replayLock`.
+    */
+  private var replayed = Option.empty[LogState]
+  private val replayLock = new Object
+
   /** Replay the log: live files, committed txn ids, next version.
     * `asOf` replays only versions <= asOf — time travel to any earlier
     * committed state. Compaction only rewrites the log; superseded files
     * stay on disk until `vacuum(keepFromVersion)` reclaims them, so
     * travel works for every version newer than the last vacuum horizon
     * (the Delta/Iceberg retention model).
+    *
+    * At or past the state this instance last replayed, only the newer
+    * versions are read, one file each until one is missing; no
+    * directory is listed. Time travel below it, the first call, and a
+    * log whose last replayed version has disappeared replay from the
+    * newest checkpoint.
     */
-  def snapshot(asOf: Long = Long.MaxValue): Snapshot = {
+  def snapshot(asOf: Long = Long.MaxValue): Snapshot = replayLock.synchronized {
+    val state = replayed.filter(_.last <= asOf) match {
+      case Some(st) if st.last < 0 || fs.exists(versionPath(st.last)) =>
+        var next = if (st.last < asOf) readVersion(st.last + 1) else None
+        while (next.isDefined) {
+          replay(st, st.last + 1, next.get)
+          next = if (st.last < asOf) readVersion(st.last + 1) else None
+        }
+        st
+      case cached =>
+        if (cached.isDefined) replayed = None
+        coldReplay(asOf)
+    }
+    if (replayed.forall(_.last <= state.last)) replayed = Some(state)
+    state.snapshot
+  }
+
+  /** Replay from the newest checkpoint at or before `asOf` (if any): its
+    * file holds the full live state as of that version, so replay cost
+    * is O(commits since last checkpoint), not O(history).
+    */
+  private def coldReplay(asOf: Long): LogState = {
     val listed = fs.listStatus(logDir).map(_.getPath)
-    // start from the newest checkpoint at or before asOf (if any): its
-    // file holds the full live state as of that version, so replay cost
-    // is O(commits since last checkpoint), not O(history)
     val ckptV = listed.flatMap { p =>
       val n = p.getName
       if (n.endsWith(CheckpointSuffix))
         scala.util.Try(n.stripSuffix(CheckpointSuffix).toLong).toOption
       else None
     }.filter(_ <= asOf).maxOption
-    val live = mutable.LinkedHashMap[String, FileEntry]()
-    val txns = mutable.Set[Long]()
-    var schema = Option.empty[StructType]
-    def readSchema(node: com.fasterxml.jackson.databind.JsonNode): Unit =
-      if (node.hasNonNull("schema"))
-        schema = Some(DataType.fromJson(node.get("schema").asText())
-          .asInstanceOf[StructType])
+    val st = new LogState
     ckptV.foreach { cv =>
       val in = fs.open(new Path(logDir, s"$cv$CheckpointSuffix"))
       val node = try mapper.readTree(in) finally in.close()
-      readSchema(node)
-      node.get("txns").forEach(t => txns += t.asLong())
+      node.get("txns").forEach(t => st.txns += t.asLong())
       node.get("adds").forEach { a =>
         val e = entryOf(a)
-        live.put(e.path, e)
+        st.live.put(e.path, e)
       }
+      st.schema = schemaIn(node)
+      st.last = cv
     }
-    val versions = listed.flatMap(versionOf)
-      .filter(v => v > ckptV.getOrElse(-1L) && v <= asOf).sorted
-    versions.foreach { v =>
-      val in = fs.open(new Path(logDir, s"$v.json"))
-      val node = try mapper.readTree(in) finally in.close()
-      if (node.hasNonNull("txn")) txns += node.get("txn").asLong()
-      readSchema(node)
-      node.get("adds").forEach { a =>
-        val e = entryOf(a)
-        live.put(e.path, e)
+    listed.flatMap(versionOf).filter(v => v > st.last && v <= asOf).sorted
+      .foreach { v =>
+        val in = fs.open(versionPath(v))
+        val node = try mapper.readTree(in) finally in.close()
+        replay(st, v, node)
       }
-      node.get("removes").forEach(r => live.remove(r.asText()))
-    }
-    Snapshot(live.values.toSeq, txns.toSet,
-      math.max(versions.lastOption.map(_ + 1).getOrElse(0L),
-        ckptV.map(_ + 1).getOrElse(0L)), schema)
+    st
   }
 
   /** Parse one log/checkpoint `adds` node back into a FileEntry. */
-  private def entryOf(a: com.fasterxml.jackson.databind.JsonNode): FileEntry = {
+  private def entryOf(a: JsonNode): FileEntry = {
     val stats =
       if (!a.has("stats")) Map.empty[String, StatsPruning.ColStats]
       else {
@@ -227,7 +291,7 @@ class FactTable(val root: String, spark: SparkSession,
     * committed txn ids so append idempotence survives the cutover.
     * Subsequent snapshots replay only the commits AFTER the checkpoint;
     * earlier log files are still used by time travel to pre-checkpoint
-    * versions (and by vacuum's full-history replay), so nothing is
+    * versions (and by an instance's first, full-history vacuum), so nothing is
     * lost — reads just stop paying O(history). At 100 TB scale (10⁵-10⁶ commits) this is
     * what keeps metadata latency flat; Delta writes one every 10
     * commits. Returns the checkpointed version, or -1 on an empty log.
@@ -310,11 +374,7 @@ class FactTable(val root: String, spark: SparkSession,
     */
   def changesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
     val frames = (fromVersion to toVersion).flatMap { v =>
-      val p = new Path(logDir, s"$v.json")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val node = try mapper.readTree(in) finally in.close()
+      readVersion(v).flatMap { node =>
         val adds = {
           val b = Seq.newBuilder[FileEntry]
           node.get("adds").forEach(a => b += entryOf(a))
@@ -421,13 +481,19 @@ class FactTable(val root: String, spark: SparkSession,
     */
   private def tombsUnchanged(staged: Snapshot)(fresh: Snapshot): Boolean =
     fresh.tombFiles.map(_.path).toSet == staged.tombFiles.map(_.path).toSet
+
+  /** True iff every one of `parts` is still live in `fresh`. */
+  private def allLive(parts: Seq[FileEntry])(fresh: Snapshot): Boolean = {
+    val live = fresh.files.iterator.map(_.path).toSet
+    parts.forall(p => live(p.path))
+  }
+
   private def commitWithRetry(snap: Snapshot, txn: Option[Long],
       adds: Seq[FileEntry], removes: Seq[String],
       written: Option[StructType] = None)(
       revalidate: Snapshot => Boolean): Boolean = {
     var head = snap
     var attempts = 0
-    val maxAttempts = 20
     while (true) {
       try {
         commit(head.nextVersion, txn, adds, removes,
@@ -435,14 +501,52 @@ class FactTable(val root: String, spark: SparkSession,
         return true
       } catch { case e: ConcurrentWriteException =>
         attempts += 1
-        if (attempts >= maxAttempts)
+        if (attempts >= MaxCommitAttempts)
           throw new ConcurrentWriteException(
-            s"gave up after $maxAttempts conflicting commits at $root", e)
+            s"gave up after $MaxCommitAttempts conflicting commits at $root", e)
         head = snapshot()
         if (!revalidate(head)) return false
       }
     }
     false // unreachable
+  }
+
+  /** Run a transaction against a fresh snapshot, restarting it while it
+    * returns None (a concurrent commit made it obsolete and it discarded
+    * its staged output), at most `MaxCommitAttempts` times.
+    */
+  private def restarting[A](attempt: Snapshot => Option[A]): A = {
+    var attempts = 0
+    while (attempts < MaxCommitAttempts) {
+      attempt(snapshot()) match {
+        case Some(a) => return a
+        case None => attempts += 1
+      }
+    }
+    throw new ConcurrentWriteException(
+      s"gave up after $MaxCommitAttempts restarted transactions at $root")
+  }
+
+  /** The commit every rewrite shares: the parts staged under `staged`
+    * (a directory and the schema its data was written with; None stages
+    * nothing) replace `removes` in one log commit. The transaction stays
+    * valid while every removed part is live and, if it staged output,
+    * the tombstone set is unchanged (the rewrite-vs-delete rule above).
+    * An obsolete transaction deletes its staged output and returns None,
+    * for [[restarting]] to retry; otherwise the committed adds.
+    */
+  private def swapIn(snap: Snapshot, staged: Option[(Path, StructType)],
+      removes: Seq[FileEntry],
+      written: Option[StructType] = None): Option[Seq[FileEntry]] = {
+    beforeCommit()
+    val adds = staged.fold(Seq.empty[FileEntry]) { case (dir, schema) =>
+      entriesFor(dir, TierBase, schema)
+    }
+    val committed = commitWithRetry(snap, None, adds, removes.map(_.path),
+      written)(fresh => allLive(removes)(fresh) &&
+        (staged.isEmpty || tombsUnchanged(snap)(fresh)))
+    if (!committed) staged.foreach { case (dir, _) => fs.delete(dir, true) }
+    Option.when(committed)(adds)
   }
 
   /** The schema a commit must record against `head`, or None when it
@@ -481,80 +585,138 @@ class FactTable(val root: String, spark: SparkSession,
     df.write.mode("overwrite").parquet(target.toString)
     beforeCommit()
     commitWithRetry(snap, Some(txnId),
-      entriesFor(target, TierBuffer), removes = Nil, Some(df.schema))(
+      entriesFor(target, TierBuffer, df.schema), removes = Nil, Some(df.schema))(
       fresh => !fresh.txns.contains(txnId))
   }
 
   /** Merge all buffer-tier parts into sorted, day-partitioned base parts
-    * (the MergeTree background merge / Buffer flush-through). One atomic
-    * log commit swaps the part sets; old files are vacuumed afterwards.
+    * as one new base generation (the MergeTree background merge / Buffer
+    * flush-through). One atomic log commit swaps the part sets; old files
+    * are vacuumed afterwards.
     */
   def compact(sortCols: Seq[String] = Seq("modem_name", "timestamp"),
-      partitionCol: String = "date"): Long = {
-    val snap = snapshot()
+      partitionCol: String = "date"): Long =
+    mergeBuffer(sortCols, partitionCol, tiered = false)
+
+  /** The Buffer flush: `compact()` whose one rewrite also takes in the
+    * base parts [[tierMerges]] names, and removes them in the same
+    * commit. `partitionCol` must be a DATE column.
+    */
+  private[storage] def flush(sortCols: Seq[String] = Seq("modem_name", "timestamp"),
+      partitionCol: String = "date"): Long =
+    mergeBuffer(sortCols, partitionCol, tiered = true)
+
+  private def mergeBuffer(sortCols: Seq[String], partitionCol: String,
+      tiered: Boolean): Long = restarting { snap =>
     val buffer = snap.files.filter(_.tier == TierBuffer)
-    if (buffer.isEmpty) return 0L
-    // masked read (over the table schema — buffer parts may span an
-    // add-column change): a buffer part covered by a later soft delete
-    // must flush WITHOUT the deleted rows, because the compacted output
-    // is a fresh part no existing tombstone covers
-    val src = masked(buffer, snap)
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    src.repartition(col(partitionCol))
-      .sortWithinPartitions(partitionCol, sortCols: _*)
-      .write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    // A remove-set conflict (another compactor merged these same buffer
-    // parts) makes this merge obsolete: drop the staged generation and
-    // restart from a fresh snapshot — committing anyway would double the
-    // rows. A conflict with new appends is benign (their files are not
-    // in our remove set) and just retries at the new head.
-    val committed = commitWithRetry(snap, None,
-      entriesFor(target, TierBase), removes = buffer.map(_.path))(
-      fresh => buffer.forall(b => fresh.files.exists(_.path == b.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return compact(sortCols, partitionCol)
+    if (buffer.isEmpty) Some(0L)
+    else {
+      val parts = buffer ++ (if (tiered) tierMerges(snap, buffer, partitionCol) else Nil)
+      // masked read (over the table schema — buffer parts may span an
+      // add-column change): a part covered by a soft delete must merge
+      // WITHOUT the deleted rows, because the output is a fresh part no
+      // existing tombstone covers
+      val src = masked(parts, snap)
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      src.repartition(col(partitionCol))
+        .sortWithinPartitions(partitionCol, sortCols: _*)
+        .write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      // A remove-set conflict (another compactor merged these same parts)
+      // makes this merge obsolete: committing anyway would double the
+      // rows. A conflict with new appends is benign (their files are not
+      // in our remove set) and just retries at the new head. Physical
+      // deletion is deferred to vacuum() so time travel to pre-compaction
+      // versions keeps working until retention expires.
+      swapIn(snap, Some(target -> src.schema), parts)
+        .map(_ => buffer.map(_.rows).sum)
     }
-    // physical deletion is deferred to vacuum() so time travel to
-    // pre-compaction versions keeps working until retention expires
-    buffer.map(_.rows).sum
   }
+
+  /** The base parts a flush of `buffer` merges: per day the buffer
+    * touches, this table's own base parts of that day (never cold-volume,
+    * cloned-in or tombstone parts), newest first, while a part holds fewer
+    * than twice the rows gathered so far — the buffer's rows of that day
+    * plus every part already taken. The factor 2 is the rule, as in
+    * size-tiered compaction. A buffer part counts toward every day its
+    * `partitionCol` stats span, so a buffer crossing midnight over-counts,
+    * which only merges more and keeps the doubling invariant.
+    */
+  private def tierMerges(snap: Snapshot, buffer: Seq[FileEntry],
+      partitionCol: String): Seq[FileEntry] = {
+    def days(f: FileEntry): Option[(Long, Long)] =
+      f.stats.get(partitionCol).filter(_.typ == "long")
+        .map(s => (s.min.toLong, s.max.toLong))
+    val own = fs.makeQualified(dataDir).toString + Path.SEPARATOR
+    snap.files
+      .filter(f => f.tier == TierBase &&
+        partitionDirs(f.path).map(_._1) == Seq(partitionCol) &&
+        fs.makeQualified(new Path(f.path)).toString.startsWith(own))
+      .flatMap(f => days(f).collect { case (d, e) if d == e => d -> f })
+      .groupMap(_._1)(_._2).toSeq.flatMap { case (day, parts) =>
+        var gathered = buffer
+          .filter(days(_).exists { case (lo, hi) => lo <= day && day <= hi })
+          .map(_.rows).sum
+        parts.reverseIterator.takeWhile { p =>
+          val take = gathered > 0 && p.rows < 2 * gathered
+          if (take) gathered += p.rows
+          take
+        }.toSeq
+      }
+  }
+
+  /** `removedAt` folded through this version (None: not built yet), and
+    * the removal version of each removed file `vacuum` has not yet
+    * reclaimed; both guarded by `vacuumLock`.
+    */
+  private var vacuumedThrough = Option.empty[Long]
+  private val removedAt = mutable.Map[String, Long]()
+  private val vacuumLock = new Object
 
   /** Physically delete files removed from the log at or before
     * `keepFromVersion` — i.e. retain every file some snapshot at a
     * version >= keepFromVersion still references, so
     * `read(asOfVersion >= keepFromVersion)` stays serveable. The default
     * retains nothing beyond the latest snapshot (Delta's VACUUM with
-    * zero retention). Returns the number of files deleted.
+    * zero retention). Returns the number of files deleted. The first
+    * call replays the whole log; later ones read only the versions
+    * committed since, like `snapshot()`.
     */
-  def vacuum(keepFromVersion: Long = Long.MaxValue): Int = {
-    val versions = fs.listStatus(logDir).flatMap(s => versionOf(s.getPath))
-      .sorted
-    if (versions.isEmpty) return 0
-    val keepFrom = math.min(keepFromVersion, versions.last)
-    val removedAt = mutable.Map[String, Long]()
-    versions.foreach { v =>
-      val in = fs.open(new Path(logDir, s"$v.json"))
-      val node = try mapper.readTree(in) finally in.close()
+  def vacuum(keepFromVersion: Long = Long.MaxValue): Int = vacuumLock.synchronized {
+    def fold(v: Long, node: JsonNode): Unit = {
       node.get("adds").forEach(a => removedAt.remove(a.get("path").asText()))
       node.get("removes").forEach(r => removedAt.put(r.asText(), v))
+      vacuumedThrough = Some(v)
     }
-    // a file removed at version v was last live at v-1; it is needed by
-    // some retained snapshot iff v > keepFrom
-    //
+    vacuumedThrough match {
+      case Some(last) if fs.exists(versionPath(last)) =>
+        var v = last + 1
+        var next = readVersion(v)
+        while (next.isDefined) { fold(v, next.get); v += 1; next = readVersion(v) }
+      case _ =>
+        removedAt.clear()
+        vacuumedThrough = None
+        fs.listStatus(logDir).flatMap(s => versionOf(s.getPath)).sorted
+          .foreach(v => readVersion(v).foreach(fold(v, _)))
+    }
+    vacuumedThrough.fold(0)(last => reclaim(math.min(keepFromVersion, last)))
+  }
+
+  /** Delete every file `removedAt` holds at or before `keepFrom`, and
+    * forget them: a file removed at version v was last live at v-1, so
+    * no retained snapshot needs it iff v <= keepFrom.
+    */
+  private def reclaim(keepFrom: Long): Int = {
+    val expired = removedAt.collect { case (p, v) if v <= keepFrom => p }.toSeq
+    expired.foreach(removedAt.remove)
     // Ownership guard (the Delta CLONE/VACUUM contract): only files
     // under THIS table's root are physically deleted. Shallow-cloned-in
     // parts live under the source table's root — dropping them from
     // this log de-references them, but reclaiming the bytes is the
     // source's retention decision, never the clone's.
     val rootQ = fs.makeQualified(rootPath).toString + Path.SEPARATOR
-    val victims = removedAt.collect {
-      case (p, v) if v <= keepFrom &&
-        fs.makeQualified(new Path(p)).toString.startsWith(rootQ) => p
-    }
+    val victims = expired.filter(p =>
+      fs.makeQualified(new Path(p)).toString.startsWith(rootQ))
     victims.foreach { p =>
       // bloom sidecars live next to the data, outside the log — reclaim
       // them (and their lazy-loaded cache entries) with their part, or a
@@ -633,19 +795,14 @@ class FactTable(val root: String, spark: SparkSession,
       .getOrElse(false)
   }
 
-  def ttlExpire(cutoff: String, partitionCol: String = "date"): Int = {
-    val snap = snapshot()
-    val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
-    if (victims.isEmpty) return 0
-    beforeCommit()
-    // obsolete if a concurrent compaction already rewrote a victim (its
-    // rows now live in a part we have not examined) — restart fresh
-    val committed = commitWithRetry(snap, None, adds = Nil,
-      removes = victims.map(_.path))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)))
-    if (!committed) return ttlExpire(cutoff, partitionCol)
-    victims.size
-  }
+  def ttlExpire(cutoff: String, partitionCol: String = "date"): Int =
+    restarting { snap =>
+      val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
+      // obsolete if a concurrent compaction already rewrote a victim (its
+      // rows now live in a part we have not examined) — restart fresh
+      if (victims.isEmpty) Some(0)
+      else swapIn(snap, None, victims).map(_ => victims.size)
+    }
 
   /** Age-based DOWNSAMPLING on expiry (the ClickHouse
     * `TTL date + INTERVAL n DAY GROUP BY keys SET v = sum(v)` analog):
@@ -667,37 +824,29 @@ class FactTable(val root: String, spark: SparkSession,
     * shrink.
     */
   def ttlRollup(cutoff: String, keyCols: Seq[String], sumCols: Seq[String],
-      partitionCol: String = "date"): Long = {
-    val snap = snapshot()
+      partitionCol: String = "date"): Long = restarting { snap =>
     val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
-    if (victims.isEmpty) return 0L
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val src = masked(victims, snap)
-    val groupNames = partitionCol +: keyCols
-    require((sumCols ++ groupNames).forall(src.columns.contains),
-      s"ttlRollup columns missing from ${src.columns.toSeq}")
-    val others = src.columns
-      .filterNot(c => groupNames.contains(c) || sumCols.contains(c))
-    val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
-      others.map(c => max(col(c)).as(c))
-    val rolled = src.groupBy(groupNames.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(src.columns.map(col).toIndexedSeq: _*) // original column order
-    rolled.repartition(col(partitionCol))
-      .sortWithinPartitions(partitionCol, keyCols: _*)
-      .write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path), Some(rolled.schema))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return ttlRollup(cutoff, keyCols, sumCols, partitionCol)
+    if (victims.isEmpty) Some(0L)
+    else {
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      val src = masked(victims, snap)
+      val groupNames = partitionCol +: keyCols
+      require((sumCols ++ groupNames).forall(src.columns.contains),
+        s"ttlRollup columns missing from ${src.columns.toSeq}")
+      val others = src.columns
+        .filterNot(c => groupNames.contains(c) || sumCols.contains(c))
+      val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
+        others.map(c => max(col(c)).as(c))
+      val rolled = src.groupBy(groupNames.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .select(src.columns.map(col).toIndexedSeq: _*) // original column order
+      rolled.repartition(col(partitionCol))
+        .sortWithinPartitions(partitionCol, keyCols: _*)
+        .write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> rolled.schema), victims, Some(rolled.schema))
+        .map(adds => victims.map(_.rows).sum - adds.map(_.rows).sum)
     }
-    victims.map(_.rows).sum - adds.map(_.rows).sum
   }
 
   /** COLUMN-level TTL (the ClickHouse `col String TTL date + INTERVAL n
@@ -717,31 +866,23 @@ class FactTable(val root: String, spark: SparkSession,
     */
   def ttlColumn(cutoff: String, ttlCol: String,
       default: org.apache.spark.sql.Column,
-      partitionCol: String = "date"): Long = {
-    val snap = snapshot()
+      partitionCol: String = "date"): Long = restarting { snap =>
     val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
-    if (victims.isEmpty) return 0L
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val src = masked(victims, snap)
-    require(src.columns.contains(ttlCol),
-      s"ttlColumn: no column $ttlCol in ${src.columns.toSeq}")
-    src.withColumn(ttlCol, default.cast(src.schema(ttlCol).dataType))
-      .select(src.columns.map(col).toIndexedSeq: _*) // original order
-      .repartition(col(partitionCol))
-      .sortWithinPartitions(partitionCol)
-      .write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return ttlColumn(cutoff, ttlCol, default, partitionCol)
+    if (victims.isEmpty) Some(0L)
+    else {
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      val src = masked(victims, snap)
+      require(src.columns.contains(ttlCol),
+        s"ttlColumn: no column $ttlCol in ${src.columns.toSeq}")
+      src.withColumn(ttlCol, default.cast(src.schema(ttlCol).dataType))
+        .select(src.columns.map(col).toIndexedSeq: _*) // original order
+        .repartition(col(partitionCol))
+        .sortWithinPartitions(partitionCol)
+        .write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> src.schema), victims)
+        .map(_ => victims.size.toLong)
     }
-    victims.size.toLong
   }
 
   /** Storage TIERING on expiry (the ClickHouse `TTL date + INTERVAL n
@@ -769,29 +910,23 @@ class FactTable(val root: String, spark: SparkSession,
       partitionCol: String = "date",
       compression: String = "zstd"): Long = {
     val volMarker = s"/$volume/data/"
-    val snap = snapshot()
-    val victims = snap.dataFiles.filter(f =>
-      !f.path.contains(volMarker) && expiredEntry(f, cutoff, partitionCol))
-    if (victims.isEmpty) return 0L
-    val target = new Path(new Path(rootPath, volume),
-      s"data/base-${java.util.UUID.randomUUID()}")
-    masked(victims, snap)
-      .repartition(col(partitionCol))
-      .sortWithinPartitions(partitionCol)
-      .write.partitionBy(partitionCol).mode("overwrite")
-      .option("compression", compression)
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return ttlMove(cutoff, volume, partitionCol, compression)
+    restarting { snap =>
+      val victims = snap.dataFiles.filter(f =>
+        !f.path.contains(volMarker) && expiredEntry(f, cutoff, partitionCol))
+      if (victims.isEmpty) Some(0L)
+      else {
+        val target = new Path(new Path(rootPath, volume),
+          s"data/base-${java.util.UUID.randomUUID()}")
+        val src = masked(victims, snap)
+        src.repartition(col(partitionCol))
+          .sortWithinPartitions(partitionCol)
+          .write.partitionBy(partitionCol).mode("overwrite")
+          .option("compression", compression)
+          .parquet(target.toString)
+        swapIn(snap, Some(target -> src.schema), victims)
+          .map(_ => victims.size.toLong)
+      }
     }
-    victims.size.toLong
   }
 
   /** Major compaction — the MergeTree level-merge: rewrite EVERY live
@@ -948,41 +1083,33 @@ class FactTable(val root: String, spark: SparkSession,
     * the deletion must also be PHYSICAL — that is the GDPR contract).
     */
   def deleteWhere(cond: org.apache.spark.sql.Column,
-      partitionCol: String = "date"): Long = {
-    val snap = snapshot()
+      partitionCol: String = "date"): Long = restarting { snap =>
     val victims = snap.dataFiles.filterNot(f =>
       StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
         setPruned(cond, f) || tokenBloomPruned(cond, f))
-    if (victims.isEmpty) return 0L
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    // DELETE semantics: remove only rows where cond is TRUE. A bare
-    // filter(!cond) would also drop NULL-evaluating rows (NOT NULL = NULL
-    // filters the row) — and only in the parts selected for rewrite,
-    // making the outcome file-layout-dependent. coalesce keeps them.
-    // Reading through the tombstone mask keeps any pending soft delete
-    // applied in the rewritten output (rewrites only converge physical
-    // state toward logical state, never resurrect).
-    val kept = masked(victims, snap)
-      .filter(!coalesce(cond, lit(false)))
-    // cluster by partition before the partitioned write (the compact()
-    // discipline): an unclustered write stages (#tasks × #partitions)
-    // near-empty files — dx19's whole-table delete staged ~500 parts and
-    // paid ~1.4 s of footer stats on them; one part per partition keeps
-    // the commit O(partitions)
-    kept.repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return deleteWhere(cond, partitionCol)
+    if (victims.isEmpty) Some(0L)
+    else {
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      // DELETE semantics: remove only rows where cond is TRUE. A bare
+      // filter(!cond) would also drop NULL-evaluating rows (NOT NULL = NULL
+      // filters the row) — and only in the parts selected for rewrite,
+      // making the outcome file-layout-dependent. coalesce keeps them.
+      // Reading through the tombstone mask keeps any pending soft delete
+      // applied in the rewritten output (rewrites only converge physical
+      // state toward logical state, never resurrect).
+      val kept = masked(victims, snap)
+        .filter(!coalesce(cond, lit(false)))
+      // cluster by partition before the partitioned write (the compact()
+      // discipline): an unclustered write stages (#tasks × #partitions)
+      // near-empty files — dx19's whole-table delete staged ~500 parts and
+      // paid ~1.4 s of footer stats on them; one part per partition keeps
+      // the commit O(partitions)
+      kept.repartition(col(partitionCol))
+        .write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> kept.schema), victims)
+        .map(adds => victims.map(_.rows).sum - adds.map(_.rows).sum)
     }
-    victims.map(_.rows).sum - adds.map(_.rows).sum
   }
 
   /** Atomic partition overwrite (ClickHouse REPLACE PARTITION / dynamic
@@ -1011,7 +1138,6 @@ class FactTable(val root: String, spark: SparkSession,
     val bad = df.filter(col(partitionCol) =!= to_date(lit(value)))
       .limit(1).count()
     require(bad == 0, s"replacePartition($value): df holds other partitions")
-    val snap = snapshot()
     val seg = s"/$partitionCol=$value/"
     val days = java.time.LocalDate.parse(value).toEpochDay
     def dayRange(f: FileEntry): Option[(Long, Long)] =
@@ -1021,32 +1147,25 @@ class FactTable(val root: String, spark: SparkSession,
     def inPart(f: FileEntry): Boolean =
       f.path.contains(seg) || (f.tier == TierBuffer &&
         dayRange(f).forall { case (mn, mx) => mn <= days && days <= mx })
-    val victims = snap.dataFiles.filter(inPart)
-    // buffer victims not provably single-day: rewrite their other-day
-    // rows back alongside df (masked read — rewrites never resurrect
-    // soft-deleted rows); null-safe filter keeps NULL-date rows
-    val straddlers = victims.filter(f => f.tier == TierBuffer &&
-      dayRange(f).forall(_ != (days, days)))
-    val out =
-      if (straddlers.isEmpty) df
-      else df.unionByName(
-        masked(straddlers, snap)
-          .filter(!(col(partitionCol) <=> to_date(lit(value)))),
-        allowMissingColumns = true)
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    out.write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path), Some(out.schema))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return replacePartition(value, df, partitionCol)
+    restarting { snap =>
+      val victims = snap.dataFiles.filter(inPart)
+      // buffer victims not provably single-day: rewrite their other-day
+      // rows back alongside df (masked read — rewrites never resurrect
+      // soft-deleted rows); null-safe filter keeps NULL-date rows
+      val straddlers = victims.filter(f => f.tier == TierBuffer &&
+        dayRange(f).forall(_ != (days, days)))
+      val out =
+        if (straddlers.isEmpty) df
+        else df.unionByName(
+          masked(straddlers, snap)
+            .filter(!(col(partitionCol) <=> to_date(lit(value)))),
+          allowMissingColumns = true)
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      out.write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> out.schema), victims, Some(out.schema))
+        .map(adds => (victims.map(_.rows).sum, adds.map(_.rows).sum))
     }
-    (victims.map(_.rows).sum, adds.map(_.rows).sum)
   }
 
   /** Batch upsert — Delta/Iceberg `MERGE INTO` with the two standard
@@ -1069,50 +1188,43 @@ class FactTable(val root: String, spark: SparkSession,
     require(dupes == 0, "mergeInto: source has duplicate keys")
     val srcN = source.count()
     if (srcN == 0) return (0L, 0L)
-    val snap = snapshot()
     // stats scoping: a single numeric key prunes victims by the source's
     // [min, max] range; otherwise every data part is a candidate
-    val victims = keyCols match {
+    val keyRange = keyCols match {
       case Seq(k) =>
         val mm = source.agg(min(col(k)), max(col(k))).head()
-        if (mm.isNullAt(0)) snap.dataFiles
+        Option.when(!mm.isNullAt(0))(
+          col(k) >= lit(mm.get(0)) && col(k) <= lit(mm.get(1)))
+      case _ => None
+    }
+    restarting { snap =>
+      val victims = snap.dataFiles.filterNot(f =>
+        keyRange.exists(StatsPruning.canPrune(_, f.stats)))
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      // matched = LOGICAL target rows the source replaced, i.e. counted
+      // over the tombstone-masked victim rows — the physical identity
+      // (victims.rows + srcN - adds.rows) would count soft-deleted rows
+      // still sitting in victim parts as "matched" and drift callers'
+      // matched-count assertions after a preceding softDelete
+      var maskedVictimRows = 0L
+      val kept =
+        if (victims.isEmpty) None
         else {
-          val cond = col(k) >= lit(mm.get(0)) && col(k) <= lit(mm.get(1))
-          snap.dataFiles.filterNot(f => StatsPruning.canPrune(cond, f.stats))
+          val live = masked(victims, snap)
+          maskedVictimRows = live.count()
+          Some(live
+            .join(broadcast(source.select(keyCols.map(col): _*)), keyCols, "left_anti"))
         }
-      case _ => snap.dataFiles
+      val out = kept.map(_.unionByName(source, allowMissingColumns = true))
+        .getOrElse(source)
+      out.write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> out.schema), victims, Some(out.schema))
+        .map { adds =>
+          val matched = maskedVictimRows + srcN - adds.map(_.rows).sum
+          (matched, srcN - matched)
+        }
     }
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    // matched = LOGICAL target rows the source replaced, i.e. counted
-    // over the tombstone-masked victim rows — the physical identity
-    // (victims.rows + srcN - adds.rows) would count soft-deleted rows
-    // still sitting in victim parts as "matched" and drift callers'
-    // matched-count assertions after a preceding softDelete
-    var maskedVictimRows = 0L
-    val kept =
-      if (victims.isEmpty) None
-      else {
-        val live = masked(victims, snap)
-        maskedVictimRows = live.count()
-        Some(live
-          .join(broadcast(source.select(keyCols.map(col): _*)), keyCols, "left_anti"))
-      }
-    val out = kept.map(_.unionByName(source, allowMissingColumns = true))
-      .getOrElse(source)
-    out.write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val adds = entriesFor(target, TierBase)
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path), Some(out.schema))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return mergeInto(source, keyCols, partitionCol)
-    }
-    val matched = maskedVictimRows + srcN - adds.map(_.rows).sum
-    (matched, srcN - matched)
   }
 
   // ------------------------------------------------- deletion vectors
@@ -1163,40 +1275,40 @@ class FactTable(val root: String, spark: SparkSession,
   def softDelete(cond: org.apache.spark.sql.Column,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "softDelete needs at least one key column")
-    val snap = snapshot()
-    // stats+bloom pruning scopes the tombstone: parts that provably hold
-    // no matching row are never masked (and never rewritten later)
-    val victims = snap.dataFiles.filterNot(f =>
-      StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
-        setPruned(cond, f) || tokenBloomPruned(cond, f))
-    if (victims.isEmpty) return 0L
-    val target = new Path(dataDir, s"tomb-${java.util.UUID.randomUUID()}")
-    masked(victims, snap)
-      .filter(coalesce(cond, lit(false)))
-      .select(keyCols.map(col): _*).distinct()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(target.toString)
-    // deletion-vector sidecar: which live parts this tombstone masks
-    listParquet(target).foreach { f =>
-      val node = mapper.createObjectNode()
-      val arr = node.putArray("victims")
-      victims.foreach(v => arr.add(v.path))
-      val out = fs.create(new Path(f.path + VictimsSuffix), true)
-      try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+    restarting { snap =>
+      // stats+bloom pruning scopes the tombstone: parts that provably hold
+      // no matching row are never masked (and never rewritten later)
+      val victims = snap.dataFiles.filterNot(f =>
+        StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
+          setPruned(cond, f) || tokenBloomPruned(cond, f))
+      if (victims.isEmpty) Some(0L)
+      else {
+        val target = new Path(dataDir, s"tomb-${java.util.UUID.randomUUID()}")
+        val keys = masked(victims, snap)
+          .filter(coalesce(cond, lit(false)))
+          .select(keyCols.map(col): _*).distinct()
+        keys.coalesce(1).write.mode("overwrite").parquet(target.toString)
+        // deletion-vector sidecar: which live parts this tombstone masks
+        listParquet(target).foreach { f =>
+          val node = mapper.createObjectNode()
+          val arr = node.putArray("victims")
+          victims.foreach(v => arr.add(v.path))
+          val out = fs.create(new Path(f.path + VictimsSuffix), true)
+          try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+        }
+        beforeCommit()
+        val adds = entriesFor(target, TierTomb, keys.schema)
+        // a tombstone add removes nothing, so version races with appends and
+        // other deletes always merge. A race with a REWRITE of our victims
+        // does NOT: the rewrite staged its output from the pre-tombstone
+        // mask, and our deletion vector lists only the old (now dead) part
+        // paths — committing anyway would mask nothing and lose the delete.
+        // Restart from a fresh snapshot so the vector covers the live parts.
+        if (commitWithRetry(snap, None, adds, removes = Nil)(allLive(victims)))
+          Some(adds.map(_.rows).sum)
+        else { fs.delete(target, true); None }
+      }
     }
-    beforeCommit()
-    val adds = entriesFor(target, TierTomb)
-    // a tombstone add removes nothing, so version races with appends and
-    // other deletes always merge. A race with a REWRITE of our victims
-    // does NOT: the rewrite staged its output from the pre-tombstone
-    // mask, and our deletion vector lists only the old (now dead) part
-    // paths — committing anyway would mask nothing and lose the delete.
-    // Restart from a fresh snapshot so the vector covers the live parts.
-    val committed = commitWithRetry(snap, None, adds,
-      removes = Nil)(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)))
-    if (!committed) { fs.delete(target, true); return softDelete(cond, keyCols) }
-    adds.map(_.rows).sum
   }
 
   /** Physically reconcile all live tombstones: rewrite only the parts
@@ -1206,34 +1318,25 @@ class FactTable(val root: String, spark: SparkSession,
     * no-anti-join fast path again and `vacuum()` reclaims the rewritten
     * parts and tombstone files.
     */
-  def applyTombstones(partitionCol: String = "date"): Long = {
-    val snap = snapshot()
+  def applyTombstones(partitionCol: String = "date"): Long = restarting { snap =>
     val tombs = snap.tombFiles
-    if (tombs.isEmpty) return 0L
-    val victimPaths = tombs.flatMap(t => victimsOf(t.path)).toSet
-    val victims = snap.dataFiles.filter(f => victimPaths.contains(f.path))
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val adds =
-      if (victims.isEmpty) Nil
-      else {
-        masked(victims, snap)
-          .write.partitionBy(partitionCol).mode("overwrite")
+    if (tombs.isEmpty) Some(0L)
+    else {
+      val victimPaths = tombs.flatMap(t => victimsOf(t.path)).toSet
+      val victims = snap.dataFiles.filter(f => victimPaths.contains(f.path))
+      val staged = Option.when(victims.nonEmpty) {
+        val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+        val kept = masked(victims, snap)
+        kept.write.partitionBy(partitionCol).mode("overwrite")
           .parquet(target.toString)
-        entriesFor(target, TierBase)
+        target -> kept.schema
       }
-    beforeCommit()
-    // tombsUnchanged also rejects a NEW tombstone committed concurrently:
-    // its deletion vector lists the victim paths this commit removes, so
-    // proceeding would strand it masking nothing — restart and fold it in
-    val committed = commitWithRetry(snap, None, adds,
-      removes = victims.map(_.path) ++ tombs.map(_.path))(
-      fresh => victims.forall(v => fresh.files.exists(_.path == v.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return applyTombstones(partitionCol)
+      // tombsUnchanged also rejects a NEW tombstone committed concurrently:
+      // its deletion vector lists the victim paths this commit removes, so
+      // proceeding would strand it masking nothing — restart and fold it in
+      swapIn(snap, staged, victims ++ tombs)
+        .map(adds => victims.map(_.rows).sum - adds.map(_.rows).sum)
     }
-    victims.map(_.rows).sum - adds.map(_.rows).sum
   }
 
   /** Shared full-rewrite commit path for the major/replacing merges:
@@ -1244,24 +1347,16 @@ class FactTable(val root: String, spark: SparkSession,
     * concurrent compaction — drop the staged output and restart fresh.
     */
   private def rewriteAll(partitionCol: String)(
-      rewrite: DataFrame => DataFrame): Long = {
-    val snap = snapshot()
-    if (snap.files.isEmpty) return 0L
-    val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-    val out = rewrite(masked(snap.dataFiles, snap))
-    out.write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(target.toString)
-    beforeCommit()
-    val committed = commitWithRetry(snap, None,
-      entriesFor(target, TierBase), removes = snap.files.map(_.path),
-      Some(out.schema))(
-      fresh => snap.files.forall(f => fresh.files.exists(_.path == f.path)) &&
-        tombsUnchanged(snap)(fresh))
-    if (!committed) {
-      fs.delete(target, true)
-      return rewriteAll(partitionCol)(rewrite)
+      rewrite: DataFrame => DataFrame): Long = restarting { snap =>
+    if (snap.files.isEmpty) Some(0L)
+    else {
+      val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
+      val out = rewrite(masked(snap.dataFiles, snap))
+      out.write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(target.toString)
+      swapIn(snap, Some(target -> out.schema), snap.files, Some(out.schema))
+        .map(_ => snap.files.map(_.rows).sum)
     }
-    snap.files.map(_.rows).sum
   }
 
   /** Snapshot read over the live part set (both tiers — like the
@@ -1474,10 +1569,12 @@ class FactTable(val root: String, spark: SparkSession,
   /** Log entries for freshly written parts: one footer open per file
     * yields both the row count and the data-skipping column stats
     * (StatsPruning), so commit cost stays footer-only — no data scan
-    * unless `bloomCols` asks for skip-index sidecars, which add one
-    * single-column scan per (new part, indexed column).
+    * unless the table keeps skip-index or projection sidecars. Those read
+    * each new part through [[readFiles]] with `schema`, the schema its
+    * data was written with: no schema inference, no listing.
     */
-  private def entriesFor(dir: Path, tier: String): Seq[FileEntry] = {
+  private def entriesFor(dir: Path, tier: String,
+      schema: StructType): Seq[FileEntry] = {
     val now = System.currentTimeMillis()
     val t0 = System.nanoTime()
     def mark(what: String): Unit =
@@ -1485,40 +1582,39 @@ class FactTable(val root: String, spark: SparkSession,
         System.err.println(f"[fact] $what +${(System.nanoTime() - t0) / 1e9}%.3fs")
     val files = listParquet(dir)
     mark(s"listParquet n=${files.size}")
-    // Footer opens are independent I/O waits — run them on a bounded
-    // pool. A rewrite that stages hundreds of parts would otherwise
-    // serialize hundreds of round-trips on the driver (the same reason
-    // Delta collects per-file stats from the write tasks themselves —
-    // the log commit must stay O(seconds) regardless of part count).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, math.max(1, files.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = files.map { f => Future {
-        val (rows, stats) =
-          StatsPruning.footerInfo(new Path(f.path), hadoopConf)
-        if (tier != TierTomb) { // key tombstones are not data parts
-          bloomCols.foreach(c => writeBloomSidecar(f.path, c, rows))
-          setIndexCols.foreach(c => writeSetSidecar(f.path, c))
-          arrayBloomCols.foreach(c => writeArrayBloomSidecar(f.path, c, rows))
-          projections.foreach(p => writeProjSidecar(f.path, dir, p))
-        }
-        FileEntry(f.path, rows, f.bytes, tier, now, stats)
-      } }
-      val entries = Await.result(Future.sequence(futs), Duration.Inf)
-      mark("footers+sidecars")
-      // token blooms are built in ONE distributed job over the whole
-      // staged generation (per indexed column), not per part — fixed-size
-      // partial filters combine map-side, so a commit staging thousands
-      // of parts costs one shuffle of #parts × bloom-size, never
-      // thousands of driver-coordinated jobs
-      if (tier != TierTomb && files.nonEmpty)
-        writeTokenBloomSidecars(dir, files.map(_.path))
-      mark("gramBlooms")
-      entries
-    } finally pool.shutdown()
+    val read = nullable(schema).asInstanceOf[StructType]
+    // key tombstones are not data parts: no sidecars
+    val perPart = tier != TierTomb && (bloomCols.nonEmpty ||
+      setIndexCols.nonEmpty || arrayBloomCols.nonEmpty || projections.nonEmpty)
+    val grams = tier != TierTomb && (tokenBloomCols.nonEmpty || ngramBloomCols.nonEmpty)
+    val entries = new Array[FileEntry](files.size)
+    // A rewrite that stages hundreds of parts would otherwise serialize
+    // hundreds of footer round-trips on the driver (the same reason Delta
+    // collects per-file stats from the write tasks themselves — the log
+    // commit must stay O(seconds) regardless of part count).
+    onIoPool(files.indices) { i =>
+      val f = files(i)
+      val (rows, stats) = StatsPruning.footerInfo(new Path(f.path), hadoopConf)
+      val e = FileEntry(f.path, rows, f.bytes, tier, now, stats)
+      if (perPart) {
+        val part = readFiles(Seq(e), read)
+        bloomCols.foreach(c => writeBloomSidecar(f.path, part, c, rows))
+        setIndexCols.foreach(c => writeSetSidecar(f.path, part, c))
+        arrayBloomCols.foreach(c => writeArrayBloomSidecar(f.path, part, c, rows))
+        projections.foreach(p => writeProjSidecar(f.path, part, p))
+      }
+      entries(i) = e
+    }
+    mark("footers+sidecars")
+    // token blooms are built in ONE distributed job over the whole
+    // staged generation (per indexed column), not per part — fixed-size
+    // partial filters combine map-side, so a commit staging thousands
+    // of parts costs one shuffle of #parts × bloom-size, never
+    // thousands of driver-coordinated jobs
+    if (grams && entries.nonEmpty)
+      writeTokenBloomSidecars(readFiles(entries.toSeq, read), entries.map(_.path).toSeq)
+    mark("gramBlooms")
+    entries.toSeq
   }
 
   // ------------------------------------------------- bloom skip index
@@ -1527,8 +1623,8 @@ class FactTable(val root: String, spark: SparkSession,
     scala.collection.concurrent.TrieMap[String,
       Option[org.apache.spark.util.sketch.BloomFilter]]()
 
-  private def writeBloomSidecar(part: String, c: String, rows: Long): Unit = {
-    val df = spark.read.parquet(part)
+  private def writeBloomSidecar(part: String, df: DataFrame, c: String,
+      rows: Long): Unit = {
     if (!df.columns.contains(c)) return // schema evolution: column absent
     val bf = df.stat.bloomFilter(c, math.max(rows, 1L), 0.01)
     val out = fs.create(new Path(part + ".bloom." + c), true)
@@ -1588,9 +1684,8 @@ class FactTable(val root: String, spark: SparkSession,
     */
   private val ArrayBloomElemsPerRowHint = 8L
 
-  private def writeArrayBloomSidecar(part: String, c: String,
+  private def writeArrayBloomSidecar(part: String, df: DataFrame, c: String,
       rows: Long): Unit = {
-    val df = spark.read.parquet(part)
     if (!df.columns.contains(c)) return // schema evolution: column absent
     import org.apache.spark.sql.types._
     val tag: Byte = df.schema(c).dataType match {
@@ -1659,8 +1754,7 @@ class FactTable(val root: String, spark: SparkSession,
   private val setCache =
     scala.collection.concurrent.TrieMap[String, Option[(String, Set[String])]]()
 
-  private def writeSetSidecar(part: String, c: String): Unit = {
-    val df = spark.read.parquet(part)
+  private def writeSetSidecar(part: String, df: DataFrame, c: String): Unit = {
     if (!df.columns.contains(c)) return // schema evolution: column absent
     import org.apache.spark.sql.types._
     val tag = df.schema(c).dataType match {
@@ -1745,11 +1839,11 @@ class FactTable(val root: String, spark: SparkSession,
     * EMPTY bloom, which correctly proves every token absent; a MISSING
     * sidecar stays reserved for "legacy part, cannot prune".
     */
-  private def writeTokenBloomSidecars(dir: Path, parts: Seq[String]): Unit = {
-    writeGramBloomSidecars(dir, parts, tokenBloomCols, ".tokbf.",
+  private def writeTokenBloomSidecars(df: DataFrame, parts: Seq[String]): Unit = {
+    writeGramBloomSidecars(df, parts, tokenBloomCols, ".tokbf.",
       c => explode(split(coalesce(col(c), lit("")),
         StatsPruning.TokenSplitRe)))
-    writeGramBloomSidecars(dir, parts, ngramBloomCols, ".ngbf.",
+    writeGramBloomSidecars(df, parts, ngramBloomCols, ".ngbf.",
       c => explode_outer(expr(
         s"""CASE WHEN length(coalesce($c, '')) >= ${StatsPruning.NgramWidth}
               THEN transform(
@@ -1759,10 +1853,11 @@ class FactTable(val root: String, spark: SparkSession,
   }
 
   /** Shared one-pass distributed sidecar build for the token (tokbf)
-    * and character-n-gram (ngbf) bloom families; `gram` turns the
-    * indexed column into one gram per row.
+    * and character-n-gram (ngbf) bloom families over `df0`, a scan of
+    * exactly the staged `parts`; `gram` turns the indexed column into one
+    * gram per row.
     */
-  private def writeGramBloomSidecars(dir: Path, parts: Seq[String],
+  private def writeGramBloomSidecars(df0: DataFrame, parts: Seq[String],
       cols: Seq[String], suffix: String,
       gram: String => org.apache.spark.sql.Column): Unit = {
     if (cols.isEmpty || parts.isEmpty) return
@@ -1773,17 +1868,6 @@ class FactTable(val root: String, spark: SparkSession,
     // keyed by scheme-stripped ABSOLUTE path: a partitioned write reuses
     // one file name across partition directories, so names collide
     def norm(p: String): String = new Path(p).toUri.getPath
-    // Read the staged GENERATION DIRECTORY: an explicit N-path read pays
-    // a parallel-listing Spark job plus one driver getFileStatus per part
-    // (measured ~1 s at 313 parts). The glob keeps the sidecar files
-    // written next to the parts (blooms, sets, the other gram family's
-    // pass) out of the read. Projection sidecars are parquet DIRECTORIES
-    // the glob cannot exclude, so they force the explicit list.
-    val df0 =
-      if (projections.isEmpty)
-        spark.read.option("pathGlobFilter", "*.parquet").parquet(dir.toString)
-      else spark.read.parquet(parts: _*)
-    mark("read")
     cols.foreach { c =>
       val have = df0.columns.contains(c)
       val built: Map[String, Array[Byte]] = if (!have) Map.empty else {
@@ -1887,17 +1971,15 @@ class FactTable(val root: String, spark: SparkSession,
 
   // ---------------------------------------------------- projections
 
-  /** Stage one part's mini-rollup sidecar. `basePath` is the staged
-    * generation root, so partition-directory columns (`date=X`) are
-    * restored with their inferred types before grouping — a base part's
+  /** Stage one part's mini-rollup sidecar from `df`, the part read with
+    * its partition-directory columns (`date=X`) restored — a base part's
     * file does not physically carry the partition column. A part whose
     * schema lacks any projection column (schema evolution) writes no
     * sidecar; `readProjection` then falls back to the base scan, the
     * conservative ClickHouse contract.
     */
-  private def writeProjSidecar(part: String, basePath: Path,
+  private def writeProjSidecar(part: String, df: DataFrame,
       spec: ProjectionSpec): Unit = {
-    val df = spark.read.option("basePath", basePath.toString).parquet(part)
     val needed = spec.keyCols ++ spec.sumCols
     if (!needed.forall(df.columns.contains)) return
     val aggs = spec.sumCols.map(c => sum(col(c)).as(c)) :+
@@ -2127,6 +2209,17 @@ object FactTable {
       org.apache.spark.sql.Encoders.BINARY
   }
 
+  /** The log replayed through version `last` (-1: nothing replayed):
+    * live entries in log order, txn ids and the last recorded schema.
+    */
+  private final class LogState {
+    val live = mutable.LinkedHashMap[String, FileEntry]()
+    var txns = Set.empty[Long]
+    var schema = Option.empty[StructType]
+    var last = -1L
+    def snapshot: Snapshot = Snapshot(live.values.toVector, txns, last + 1, schema)
+  }
+
   final case class FileEntry(path: String, rows: Long, bytes: Long,
       tier: String, addedMs: Long,
       stats: Map[String, StatsPruning.ColStats] = Map.empty)
@@ -2238,7 +2331,12 @@ object FactTable {
   * exceeded), as a foreachBatch sink over a FactTable: every micro-batch
   * lands as buffer-tier parts (immediately queryable), and once a
   * threshold trips the buffer tier is merged into sorted day-partitioned
-  * base parts. Use from a streaming query:
+  * base parts. That one rewrite also merges in the newest base parts of
+  * each day the buffer touches, newest first, while the next part holds
+  * fewer than twice the rows gathered so far (MergeTree's background
+  * merges, without a second job): a day's parts at least double in size
+  * from newest to oldest, so a day of n equal flushes holds popcount(n)
+  * parts. Use from a streaming query:
   *
   * {{{
   * parsed.writeStream.foreachBatch(sink.addBatch _).start()
@@ -2262,6 +2360,6 @@ class BufferedFactSink(table: FactTable, maxAgeMs: Long = 10000L,
     val trip = snap.bufferRows >= maxRows ||
       snap.bufferBytes >= maxBytes ||
       snap.oldestBufferMs.exists(nowMs - _ >= maxAgeMs)
-    if (trip) { val n = table.compact(); table.vacuum(); n } else 0L
+    if (trip) { val n = table.flush(); table.vacuum(); n } else 0L
   }
 }

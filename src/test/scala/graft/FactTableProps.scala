@@ -1,6 +1,6 @@
 package graft
 
-import graft.storage.FactTable
+import graft.storage.{BufferedFactSink, FactTable}
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -102,5 +102,64 @@ object FactTableProps extends Properties("FactTable") {
       val inCond = $"modem_name".isin(inKeys.map(k => f"k$k%02d"): _*)
       t.readWhere(eqCond).count() == all.where(eqCond).count() &&
         t.readWhere(inCond).count() == all.where(inCond).count()
+    }
+
+  sealed trait LogOp
+  final case class Write(second: Boolean, txn: Long, n: Int, day: Int) extends LogOp
+  case object Compaction extends LogOp
+  case object Flush extends LogOp
+  final case class SoftDelete(uptime: Long) extends LogOp
+  case object Vacuum extends LogOp
+  case object Checkpoint extends LogOp
+
+  private val logOpGen: Gen[LogOp] = Gen.frequency(
+    4 -> (for {
+      second <- Gen.oneOf(false, true)
+      txn <- Gen.choose(0L, 6L)
+      n <- Gen.choose(1, 5)
+      day <- Gen.choose(1, 2)
+    } yield Write(second, txn, n, day)),
+    1 -> Gen.const(Compaction),
+    2 -> Gen.const(Flush),
+    1 -> Gen.choose(1L, 5L).map(SoftDelete(_)),
+    1 -> Gen.const(Vacuum),
+    1 -> Gen.const(Checkpoint))
+
+  /** Property: the incremental replay is invisible — after every step of
+    * any sequence of writes (by this instance or a second one on the same
+    * root), compactions, sink flushes, soft deletes, vacuums and
+    * checkpoints, `snapshot()` and `snapshot(asOf)` at every version equal
+    * a fresh instance's full replay, and so does an instance that catches
+    * up on the whole sequence in one call.
+    */
+  property("incremental snapshots equal a fresh full replay at every version") =
+    forAll(Gen.listOfN(8, logOpGen)) { ops =>
+      val root = java.nio.file.Files.createTempDirectory("fact_replay").toString
+      val t = new FactTable(root, spark)
+      val second = new FactTable(root, spark)
+      // replays the empty log now and every later commit at once, at the end
+      val lagging = new FactTable(root, spark)
+      lagging.snapshot()
+      val sink = new BufferedFactSink(t, maxAgeMs = Long.MaxValue / 2,
+        maxRows = 1, maxBytes = Long.MaxValue)
+      ops.forall { op =>
+        op match {
+          case Write(other, txn, n, day) =>
+            val df = (1 to n).map(i => ("m" + txn,
+              java.sql.Timestamp.valueOf(f"2024-03-0$day 00:00:${i % 60}%02d"),
+              i.toLong)).toDF("modem_name", "timestamp", "uptime")
+              .withColumn("date", org.apache.spark.sql.functions.to_date($"timestamp"))
+            (if (other) second else t).append(df, txn)
+          case Compaction => t.compact()
+          case Flush => sink.maybeFlush()
+          case SoftDelete(u) => t.softDelete($"uptime" === u, Seq("modem_name", "uptime"))
+          case Vacuum => t.vacuum()
+          case Checkpoint => t.checkpoint()
+        }
+        val head = new FactTable(root, spark).snapshot()
+        t.snapshot() == head && second.snapshot() == head &&
+          (0L until head.nextVersion).forall(v =>
+            t.snapshot(asOf = v) == new FactTable(root, spark).snapshot(asOf = v))
+      } && lagging.snapshot() == new FactTable(root, spark).snapshot()
     }
 }

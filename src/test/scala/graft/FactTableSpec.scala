@@ -1659,4 +1659,173 @@ class FactTableSpec extends AnyFunSuite {
     assert(t.readWhere(gram).count() == 2)
     assert(t.readWhere(FactTable.hasToken($"text", "alpha")).count() == 2)
   }
+
+  // ------------------------------------------- tiered merges in the flush
+
+  /** A sink that flushes on every `rows`-row batch. */
+  private def flushingSink(t: FactTable, rows: Int) = new BufferedFactSink(t,
+    maxAgeMs = Long.MaxValue / 2, maxRows = rows, maxBytes = Long.MaxValue)
+
+  private def dayOf(f: FactTable.FileEntry): String =
+    "/date=([^/]+)/".r.findFirstMatchIn(f.path).fold("")(_.group(1))
+
+  test("sink flushes of equal size keep popcount(n) sorted parts per day") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    (1 to 12).foreach { n =>
+      sink.addBatch(rows(4, "2024-03-01", s"m${n * 7 % 5}").drop("date"), n)
+      val parts = t.snapshot().dataFiles
+      assert(parts.forall(_.tier == FactTable.TierBase))
+      // a binary counter: one part of 4 * 2^b rows per set bit b of n
+      val want = (0 until 4).filter(b => (n >> b & 1) == 1).map(4L << _)
+      assert(parts.map(_.rows).sorted == want, s"after $n flushes: $parts")
+      assert(t.read().count() == 4L * n)
+    }
+    val perFile = t.read()
+      .withColumn("f", input_file_name())
+      .select($"f", $"modem_name", $"timestamp")
+      .as[(String, String, java.sql.Timestamp)].collect().groupBy(_._1)
+    assert(perFile.size == 2)
+    perFile.values.foreach { rs =>
+      val keys = rs.map(r => (r._2, r._3.getTime)).toSeq
+      assert(keys == keys.sorted, "a merged part must be sorted by (modem_name, ts)")
+    }
+  }
+
+  test("a flush spanning midnight merges only each day's own parts") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    Seq("2024-03-01", "2024-03-02", "2024-03-03").zipWithIndex.foreach {
+      case (d, i) => sink.addBatch(rows(4, d, s"m$i").drop("date"), i)
+    }
+    val day3 = t.snapshot().dataFiles.filter(dayOf(_) == "2024-03-03")
+    sink.addBatch(rows(2, "2024-03-01", "x").union(rows(2, "2024-03-02", "y"))
+      .coalesce(1).drop("date"), 3)
+    val parts = t.snapshot().dataFiles
+    assert(parts.map(dayOf).sorted == Seq("2024-03-01", "2024-03-02", "2024-03-03"))
+    assert(parts.filter(dayOf(_) == "2024-03-03") == day3, "an untouched day keeps its part")
+    assert(parts.filterNot(dayOf(_) == "2024-03-03").map(_.rows) == Seq(6L, 6L))
+    val perFileDays = t.read().withColumn("f", input_file_name())
+      .groupBy($"f").agg(countDistinct(to_date($"timestamp")).as("days"))
+      .as[(String, Long)].collect()
+    assert(perFileDays.length == 3 && perFileDays.forall(_._2 == 1L))
+    assert(t.read().count() == 16)
+  }
+
+  test("flush merges never take cold-volume or shallow-cloned parts") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    sink.addBatch(rows(4, "2024-03-01", "a").drop("date"), 0)
+    assert(t.ttlMove("2024-03-02") == 1L)
+    val cold = t.snapshot().dataFiles.map(_.path)
+    sink.addBatch(rows(4, "2024-03-01", "b").drop("date"), 1)
+    val afterCold = t.snapshot().dataFiles.map(_.path)
+    assert(afterCold.size == 2 && cold.forall(afterCold.contains), afterCold)
+    assert(t.read().count() == 8)
+
+    val src = freshTable()
+    flushingSink(src, 4).addBatch(rows(4, "2024-03-01", "a").drop("date"), 0)
+    val clone = src.cloneShallowTo(
+      java.nio.file.Files.createTempDirectory("fact_clone_flush").toString)
+    val cloned = clone.snapshot().dataFiles.map(_.path)
+    flushingSink(clone, 4).addBatch(rows(4, "2024-03-01", "b").drop("date"), 1)
+    val afterClone = clone.snapshot().dataFiles.map(_.path)
+    assert(afterClone.size == 2 && cloned.forall(afterClone.contains), afterClone)
+    assert(clone.read().count() == 8 && src.read().count() == 4)
+  }
+
+  test("a merged tombstoned part keeps its deleted rows out") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    sink.addBatch(rows(4, "2024-03-01", "a").drop("date"), 0)
+    val first = t.snapshot().dataFiles.map(_.path)
+    assert(t.softDelete($"uptime" === 2L, Seq("modem_name", "uptime")) == 1L)
+    val tombs = t.snapshot().tombFiles
+    sink.addBatch(rows(4, "2024-03-01", "b").drop("date"), 1)
+    val snap = t.snapshot()
+    assert(snap.dataFiles.size == 1 && !first.contains(snap.dataFiles.head.path),
+      "the tombstoned part must have been merged")
+    assert(snap.dataFiles.head.rows == 7, "the deleted row must not be rewritten")
+    assert(snap.tombFiles == tombs, "tombstone parts are never merged")
+    assert(t.read().count() == 7)
+    assert(t.read().where($"modem_name" === "a" && $"uptime" === 2L).count() == 0)
+  }
+
+  test("a transaction that conflicts on every restart gives up with ConcurrentWriteException") {
+    val root = java.nio.file.Files.createTempDirectory("fact_endless").toString
+    val other = new FactTable(root, spark)
+    var armed = false
+    var restarts = 0
+    val t = new FactTable(root, spark) {
+      // every attempt loses to a rewrite of the part it is about to drop
+      override protected def beforeCommit(): Unit =
+        if (armed) {
+          restarts += 1
+          assert(other.deleteWhere($"uptime" === restarts.toLong) == 1L)
+        }
+    }
+    t.append(rows(25, "2024-03-01", "m1"), 0)
+    armed = true
+    intercept[graft.storage.ConcurrentWriteException](t.ttlExpire("2024-03-02"))
+    assert(restarts == 20)
+    armed = false
+    assert(t.read().count() == 5)
+  }
+
+  test("appending to a skip-indexed table reads each new part with the known schema") {
+    val t = new FactTable(
+      java.nio.file.Files.createTempDirectory("fact_sidecar_jobs").toString,
+      spark, bloomCols = Seq("modem_name"))
+    val (_, jobs) = jobsDuring(t.append(rows(6, "2024-03-01", "m1").coalesce(1), 0))
+    // one write job and the bloom build's two; a schema-inferring
+    // `spark.read.parquet` of the new part would add a fourth
+    assert(jobs == 3, s"$jobs Spark jobs for a one-part append")
+    assert(t.readWhere($"modem_name" === "m2").count() == 0)
+    assert(t.pruneReport($"modem_name" === "zz") == ((0, 1)))
+  }
+
+  test("incremental vacuum deletes exactly the files a full-history replay names") {
+    val t = freshTable()
+    val logDir = new java.io.File(t.root, "_graft_log")
+    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    def parts(): Set[String] = {
+      val all = scala.collection.mutable.Set[String]()
+      def walk(f: java.io.File): Unit =
+        if (f.isDirectory) f.listFiles.foreach(walk)
+        else if (f.getName.endsWith(".parquet")) all += norm(f.getPath)
+      walk(new java.io.File(t.root, "data"))
+      all.toSet
+    }
+    def named(keepFrom: Long): Set[String] = {
+      val versions = logDir.list.flatMap(_.stripSuffix(".json").toLongOption).sorted
+      val removedAt = scala.collection.mutable.Map[String, Long]()
+      versions.foreach { v =>
+        val node = mapper.readTree(new java.io.File(logDir, s"$v.json"))
+        node.get("adds").forEach(a => removedAt.remove(a.get("path").asText()))
+        node.get("removes").forEach(r => removedAt.put(r.asText(), v))
+      }
+      val last = math.min(keepFrom, versions.last)
+      removedAt.collect { case (p, v) if v <= last => norm(p) }.toSet
+    }
+    def vacuumed(keepFrom: Long): Unit = {
+      val before = parts()
+      val want = named(keepFrom) & before
+      val n = t.vacuum(keepFrom)
+      assert(before -- parts() == want && n == want.size, s"keepFrom=$keepFrom")
+    }
+    (0 until 4).foreach(i => t.append(rows(3, s"2024-03-0${i % 2 + 1}", s"m$i"), i))
+    t.compact()
+    val mid = t.snapshot().nextVersion - 1
+    t.append(rows(3, "2024-03-01", "m4"), 4)
+    t.compact()
+    vacuumed(mid) // only the first compaction's buffer parts go
+    t.majorCompact()
+    t.append(rows(2, "2024-03-02", "m5"), 5)
+    vacuumed(t.snapshot().nextVersion - 2)
+    vacuumed(mid) // nothing left below an older horizon
+    t.deleteWhere($"modem_name" === "m5")
+    t.checkpoint()
+    vacuumed(Long.MaxValue)
+    assert(t.read().count() == 15)
+  }
 }
