@@ -78,6 +78,12 @@ object Tables {
     * shuffle. The round-robin exchange carries only the projected
     * columns and never changes row content; downstream results are
     * partitioning-independent.
+    *
+    * `ds.rdd` below only PLANS the frame: every caller passes a file
+    * scan plus projections/unions (no exchange, so AQE does not wrap
+    * the plan), whose RDD and partition list are built on the driver
+    * without a Spark job. The count it reports is the planned, pre-AQE
+    * file-split count — the parallelism the scan would start with.
     */
   def spread[T](ds: org.apache.spark.sql.Dataset[T])
       : org.apache.spark.sql.Dataset[T] = {

@@ -37,14 +37,47 @@ object TempDirs {
     byKey.values().asScala.foreach(deleteRecursively)
   }))
 
+  /** A fresh dir named after `prefix`, deleting the previous dir issued
+    * under `key`. */
+  private def fresh(prefix: String, key: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    val prev = byKey.put(key, dir)
+    if (prev != null) deleteRecursively(prev)
+    dir.toString
+  }
+
   /** A fresh scratch dir for `key`, deleting the previous dir issued
     * under the same key. Returns the path as a String (FactTable/parquet
     * roots take strings).
     */
-  def scratch(key: String): String = {
-    val fresh = Files.createTempDirectory(key)
-    val prev = byKey.put(key, fresh)
-    if (prev != null) deleteRecursively(prev)
-    fresh.toString
-  }
+  def scratch(key: String): String = fresh(key, key)
+
+  private val stores = scala.collection.mutable.HashMap[String, String]()
+
+  /** A MEMOIZED store: the root `build` filled for (`tag`, `inputs`),
+    * reused by every later call with the same key while its FactTable
+    * log is non-empty, and rebuilt in a fresh dir once the scratch dir
+    * was reaped (tmp cleanup). The key must cover EVERY input the build
+    * reads besides the corpus files themselves — a store keyed on less
+    * silently serves one input's build to another. The dir is named
+    * `tag` + a hash of the full key and registered for reaping under the
+    * full key, so two keys never reap each other's store.
+    *
+    * One reentrant lock (the object monitor) guards the memo: builds
+    * nest — a derived store's build reads base stores through this same
+    * call — which a non-reentrant get-or-build (or
+    * `ConcurrentHashMap.computeIfAbsent`) would deadlock or reject.
+    */
+  def store(tag: String, inputs: Any*)(build: String => Unit): String =
+    stores.synchronized {
+      val key = (tag +: inputs).mkString("#")
+      def live(root: String) =
+        Option(new java.io.File(root, "_graft_log").list()).exists(_.nonEmpty)
+      stores.get(key).filter(live).getOrElse {
+        val root = fresh(tag + "_" + Integer.toHexString(key.hashCode) + "_", key)
+        build(root)
+        stores(key) = root
+        root
+      }
+    }
 }

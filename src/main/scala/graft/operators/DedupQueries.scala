@@ -497,6 +497,14 @@ object DedupQueries {
     * object-store backed, survives executor loss). Locally — no
     * checkpoint dir — `localCheckpoint` is the right trade: single JVM,
     * no replication target exists anyway.
+    *
+    * Invariant of the lazy local form: the first action over the
+    * returned frame must compute EVERY partition (a count, a sum, a
+    * store append). Until that action the frame still carries its full
+    * lineage, and a partial first action (take, limit, isEmpty) makes
+    * Spark run one more job for the missing partitions before the pin
+    * holds — the extra driver-sequenced job the lazy form exists to
+    * avoid.
     */
   private def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()

@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.VectorFunctions.{cosineExact, dotExact, l2SqExact}
 import graft.operators.OracleFragments.{oCosineSums, oDot, oL2Sq, oL2SqDec}
 import graft.plans.VectorExpressions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -17,8 +17,6 @@ import org.apache.spark.sql.expressions.Window
   * s03 demonstrates the codegen'd native expression (`vec_dot`).
   */
 object SimilarityQueries {
-
-  private val dims = 64 // embedding width in the test tables
 
   /** Brute-force exact cosine top-k vs the vec_id=0 query vector,
     * decimal-exact math → bit-identical to the oracle. The ground truth
@@ -2571,15 +2569,7 @@ object SimilarityQueries {
     // lesson).
     QueryDef(
       "s38_graph_beam_search",
-      (s, dir) => {
-        import s.implicits._
-        val (visited, _) = beamSearchParts(s, dir)
-        val wR = Window.orderBy($"cosine".desc, $"vec_id".asc)
-        visited.orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .withColumn("rk", row_number().over(wR).cast("long"))
-          .select($"rk", $"vec_id", $"cosine")
-          .orderBy($"rk")
-      },
+      (s, dir) => rankedTop10(beamSearchParts(s, dir)._1),
       Some(s"""$beamSqlCtes
         SELECT * FROM (
           SELECT ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id ASC) AS rk,
@@ -2605,30 +2595,15 @@ object SimilarityQueries {
     QueryDef(
       "s39_graph_beam_recall",
       (s, dir) => {
-        import s.implicits._
-        val (visitedRaw, graph) = beamSearchParts(s, dir)
+        val (visited, graph) = beamSearchParts(s, dir)
         // bounded (≤ entries + R·B·M rows): pin it so the audit legs
         // don't re-run the beam (the d41 bounded-ledger lesson).
         // ADVICE r12 dropped the visited-set broadcast join — the final
         // top-10 is already a subset of visited, so `hit` and `hasin`
         // alone classify every miss exhaustively (see scaladoc above)
-        val visited = visitedRaw.localCheckpoint()
-        val beam10 = visited.orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .select($"vec_id", lit(true).as("hit"))
-        val wT = Window.orderBy($"cosine".desc, $"vec_id".asc)
-        val truth = exactCosineTopK(s, dir, 10)
-          .withColumn("rk", row_number().over(wT).cast("long"))
-        val indeg = graph.select($"dst".as("vec_id")).distinct()
-          .withColumn("hasin", lit(true))
-        truth
-          .join(broadcast(beam10), Seq("vec_id"), "left")
-          .join(broadcast(indeg), Seq("vec_id"), "left")
-          .select($"rk", $"vec_id", $"cosine",
-            coalesce($"hit", lit(false)).as("found_by_beam"),
-            when(coalesce($"hit", lit(false)), "")
-              .when($"hasin".isNull, "no_incoming_edge")
-              .otherwise("outside_horizon").as("miss_reason"))
-          .orderBy($"rk")
+        attributeMisses(exactCosineTopK(s, dir, 10),
+          visited.localCheckpoint(), graph, "found_by_beam",
+          "no_incoming_edge", "outside_horizon")
       },
       Some(s"""$beamSqlCtes,
         beam10 AS (SELECT vec_id FROM v$beamR
@@ -2673,18 +2648,9 @@ object SimilarityQueries {
     QueryDef(
       "s40_hnsw_layered_descent",
       (s, dir) => {
-        import s.implicits._
-        val l0 = knnGraphStore(s, dir).read().select($"src", $"dst")
-        val v1 = s40UpperDescent(s, dir)
-        val seeds = v1.orderBy($"cosine".desc, $"vec_id".asc).limit(4)
-          .select($"vec_id")
-          .unionByName(beamEntries.toDF("vec_id")).distinct()
-        val v0 = beamOver(s, dir, l0, seeds, beamR)
-        val wR = Window.orderBy($"cosine".desc, $"vec_id".asc)
-        v0.orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .withColumn("rk", row_number().over(wR).cast("long"))
-          .select($"rk", $"vec_id", $"cosine")
-          .orderBy($"rk")
+        val l0 = knnGraphStore(s, dir).read().select(col("src"), col("dst"))
+        rankedTop10(beam(l0, descentSeeds(s, s40UpperDescent(s, dir)), beamR,
+          servingScorer(s, dir)))
       },
       Some(s"""
         WITH $beamBandsAndScoresSql,
@@ -2775,13 +2741,7 @@ object SimilarityQueries {
       "s42_filtered_graph_beam",
       (s, dir) => {
         import s.implicits._
-        val (visited, _) = filteredBeamParts(s, dir)
-        val wR = Window.orderBy($"cosine".desc, $"vec_id".asc)
-        visited.filter($"ok")
-          .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .withColumn("rk", row_number().over(wR).cast("long"))
-          .select($"rk", $"vec_id", $"cosine")
-          .orderBy($"rk")
+        rankedTop10(filteredBeamParts(s, dir)._1.filter($"ok"))
       },
       Some(s"""$filteredBeamSqlCtes
         SELECT * FROM (
@@ -2809,33 +2769,18 @@ object SimilarityQueries {
       "s43_filtered_beam_recall",
       (s, dir) => {
         import s.implicits._
-        val (visitedRaw, graph) = filteredBeamParts(s, dir)
-        val visited = visitedRaw.localCheckpoint()
-        val beam10 = visited.filter($"ok")
-          .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .select($"vec_id", lit(true).as("hit"))
+        val (visited, graph) = filteredBeamParts(s, dir)
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter($"vec_id" === 0)
           .select($"embedding".as("qv"), $"label".as("qlabel"))
-        val wT = Window.orderBy($"cosine".desc, $"vec_id".asc)
         val truth = emb.filter($"vec_id" =!= 0)
           .crossJoin(broadcast(q))
           .filter($"label" === $"qlabel")
           .select($"vec_id",
             round(cosineExact("embedding", "qv"), 9).as("cosine"))
-          .withColumn("rk", row_number().over(wT).cast("long"))
-          .filter($"rk" <= 10)
-        val indeg = graph.select($"dst".as("vec_id")).distinct()
-          .withColumn("hasin", lit(true))
-        truth
-          .join(broadcast(beam10), Seq("vec_id"), "left")
-          .join(broadcast(indeg), Seq("vec_id"), "left")
-          .select($"rk", $"vec_id", $"cosine",
-            coalesce($"hit", lit(false)).as("found_by_beam"),
-            when(coalesce($"hit", lit(false)), "")
-              .when($"hasin".isNull, "no_incoming_edge")
-              .otherwise("outside_filtered_horizon").as("miss_reason"))
-          .orderBy($"rk")
+        attributeMisses(truth, visited.localCheckpoint().filter($"ok"),
+          graph, "found_by_beam", "no_incoming_edge",
+          "outside_filtered_horizon")
       },
       Some(s"""$filteredBeamSqlCtes,
         beam10 AS (SELECT vec_id FROM fv$beamR WHERE ok
@@ -2965,32 +2910,17 @@ object SimilarityQueries {
         import s.implicits._
         val view = deletedRepairedStore(s, dir).read()
           .select($"src", $"dst", $"gcos")
-        val visited = beamOver(s, dir, view.select($"src", $"dst"),
-          beamEntries.toDF("vec_id"), beamR)
-        val beam10 = visited
-          .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .select($"vec_id", lit(true).as("hit"))
+        val visited = beam(view.select($"src", $"dst"),
+          beamEntries.toDF("vec_id"), beamR, servingScorer(s, dir))
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter($"vec_id" === 0).select($"embedding".as("qv"))
-        val wT = Window.orderBy($"cosine".desc, $"vec_id".asc)
         val truth = emb
           .filter($"vec_id" =!= 0 && !$"vec_id".isin(deleteBatch: _*))
           .crossJoin(broadcast(q))
           .select($"vec_id",
             round(cosineExact("embedding", "qv"), 9).as("cosine"))
-          .withColumn("rk", row_number().over(wT).cast("long"))
-          .filter($"rk" <= 10)
-        val indeg = view.select($"dst".as("vec_id")).distinct()
-          .withColumn("hasin", lit(true))
-        truth
-          .join(broadcast(beam10), Seq("vec_id"), "left")
-          .join(broadcast(indeg), Seq("vec_id"), "left")
-          .select($"rk", $"vec_id", $"cosine",
-            coalesce($"hit", lit(false)).as("found_by_beam"),
-            when(coalesce($"hit", lit(false)), "")
-              .when($"hasin".isNull, "repair_disconnected")
-              .otherwise("outside_horizon").as("miss_reason"))
-          .orderBy($"rk")
+        attributeMisses(truth, visited, view, "found_by_beam",
+          "repair_disconnected", "outside_horizon")
       },
       Some(s45AuditOracleSql),
       doc = "post-delete recall audit (the s39/s43 miss-attribution discipline on the s45 repaired graph): exact top-10 truth over the surviving corpus vs the beam served through the masked repaired store, each miss classified 'repair_disconnected' (in-degree 0 after repair — the deleted-hub disconnection case) vs 'outside_horizon' (reachable but beyond the R-round budget); deleted vectors can neither match nor be traversed"),
@@ -3093,21 +3023,11 @@ object SimilarityQueries {
       "s48_pq_graph_serving",
       (s, dir) => {
         import s.implicits._
-        val visited = beamOverAdc(s, dir,
-          servingGraph(s, dir).select($"src", $"dst"),
-          beamEntries.toDF("vec_id"), beamR)
+        val visited = beam(servingGraph(s, dir).select($"src", $"dst"),
+          beamEntries.toDF("vec_id"), beamR, adcScorer(s, dir))
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter($"vec_id" === 0).select($"embedding".as("qv"))
-        val wR = Window.orderBy($"cosine".desc, $"vec_id".asc)
-        emb.join(broadcast(visited.select($"vec_id")), Seq("vec_id"),
-            "left_semi")
-          .crossJoin(broadcast(q))
-          .select($"vec_id",
-            round(cosineExact("embedding", "qv"), 9).as("cosine"))
-          .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .withColumn("rk", row_number().over(wR).cast("long"))
-          .select($"rk", $"vec_id", $"cosine")
-          .orderBy($"rk")
+        rankedTop10(exactScorer(emb, q)(visited.select($"vec_id")))
       },
       Some(s48OracleSql),
       doc = "PQ-guided graph serving (the DiskANN shape): beam over the stored graph with traversal distances from the stored PQ codes (8 codes/vector + broadcast 32-entry query lookup — raw corpus vectors never read during the walk), then one exact-cosine re-rank of the bounded visited set; at 100 TB the hot path holds adjacency + 8x-compressed codes while full-precision vectors serve only the final <=40-row re-rank"),
@@ -3128,41 +3048,21 @@ object SimilarityQueries {
       (s, dir) => {
         import s.implicits._
         val g = servingGraph(s, dir)
-        val pqVisited = beamOverAdc(s, dir, g.select($"src", $"dst"),
-          beamEntries.toDF("vec_id"), beamR).localCheckpoint()
+        val entries = beamEntries.toDF("vec_id")
+        val pqVisited = beam(g.select($"src", $"dst"), entries, beamR,
+          adcScorer(s, dir)).localCheckpoint()
+        val exVisited = beam(g.select($"src", $"dst"), entries, beamR,
+          servingScorer(s, dir))
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter($"vec_id" === 0).select($"embedding".as("qv"))
-        val served10 = emb
-          .join(broadcast(pqVisited.select($"vec_id")), Seq("vec_id"),
-            "left_semi")
-          .crossJoin(broadcast(q))
-          .select($"vec_id",
-            round(cosineExact("embedding", "qv"), 9).as("cosine"))
-          .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
-          .select($"vec_id", lit(true).as("hit"))
-        val exVisited = beamOver(s, dir, g.select($"src", $"dst"),
-          beamEntries.toDF("vec_id"), beamR)
-          .select($"vec_id").withColumn("exvis", lit(true))
-        val wT = Window.orderBy($"cosine".desc, $"vec_id".asc)
         val truth = emb.filter($"vec_id" =!= 0)
           .crossJoin(broadcast(q))
           .select($"vec_id",
             round(cosineExact("embedding", "qv"), 9).as("cosine"))
-          .withColumn("rk", row_number().over(wT).cast("long"))
-          .filter($"rk" <= 10)
-        val indeg = g.select($"dst".as("vec_id")).distinct()
-          .withColumn("hasin", lit(true))
-        truth
-          .join(broadcast(served10), Seq("vec_id"), "left")
-          .join(broadcast(indeg), Seq("vec_id"), "left")
-          .join(broadcast(exVisited), Seq("vec_id"), "left")
-          .select($"rk", $"vec_id", $"cosine",
-            coalesce($"hit", lit(false)).as("found_by_served"),
-            when(coalesce($"hit", lit(false)), "")
-              .when($"hasin".isNull, "no_incoming_edge")
-              .when($"exvis".isNotNull, "pq_detour")
-              .otherwise("outside_horizon").as("miss_reason"))
-          .orderBy($"rk")
+        attributeMisses(truth,
+          exactScorer(emb, q)(pqVisited.select($"vec_id")), g,
+          "found_by_served", "no_incoming_edge", "outside_horizon",
+          exactVisited = Some(exVisited))
       },
       Some(s48AuditOracleSql),
       doc = "PQ-traversal recall audit (the s28/s39 attribution discipline on s48): exact top-10 truth vs the PQ-guided serve — a visited truth vector is provably always found by the exact re-rank, so every miss is a failure to visit, classified 'no_incoming_edge' (graph construction) vs 'pq_detour' (the exact-guided beam visits it under the same budget but quantized distances steer the walk away — spend bits, not rounds) vs 'outside_horizon' (neither beam reaches it — budget)")
@@ -3183,38 +3083,12 @@ object SimilarityQueries {
     val vecs = emb.filter($"vec_id" =!= 0)
       .select($"vec_id", $"embedding", $"label")
     val graph = knnGraphStore(s, dir).read().select($"src", $"dst")
-    def score(ids: DataFrame): DataFrame = vecs
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .crossJoin(broadcast(q))
-      .select($"vec_id", round(cosineExact("embedding", "qv"), 9).as("cosine"),
-        ($"label" === $"qlabel").as("ok"))
-    var visited = score(beamEntries.toDF("vec_id"))
-    var frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-      .limit(beamB).select($"vec_id".as("fid"))
-    for (r <- 1 to beamR) {
-      val hop1 = graph.join(broadcast(frontier), $"src" === $"fid")
-        .select($"dst".as("vec_id")).distinct()
-      val hop2 = graph
-        .join(broadcast(hop1.select($"vec_id".as("mid"))), $"src" === $"mid")
-        .select($"dst".as("vec_id"))
-      val nbrs = hop1.unionByName(hop2).distinct()
-      val freshIds = nbrs.join(broadcast(visited.select($"vec_id")),
-        Seq("vec_id"), "left_anti")
-      // admission: only predicate-matching candidates are scored — the
-      // label conjunct sits on the embeddings scan (pushdown), so a
-      // non-matching vector's cosine is never computed
-      visited = visited.unionByName(score(freshIds).filter($"ok"))
-      // pin every round but the last: round r's plan references visited
-      // three times (frontier, anti-join, union), so the unpinned tree
-      // grows 3^r-fold — the s41 lineage pathology on the serving path
-      // (measured: s42 4.9 s → sub-second with the pin; values are
-      // unchanged, and the final round stays live so the stored-graph
-      // read keeps its locked place in the served plan)
-      if (r < beamR) visited = visited.localCheckpoint()
-      frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-        .limit(beamB).select($"vec_id".as("fid"))
-    }
-    (visited, graph)
+    // admission: only predicate-matching candidates are scored — the
+    // label conjunct sits on the embeddings scan (pushdown), so a
+    // non-matching vector's cosine is never computed
+    (beam(graph, beamEntries.toDF("vec_id"), beamR,
+      exactScorer(vecs, q, ($"label" === $"qlabel").as("ok")),
+      twoHop = true, admit = Some($"ok")), graph)
   }
 
   /** The s42/s43 oracle CTE chain: bands + query scores + the stored
@@ -3260,79 +3134,66 @@ object SimilarityQueries {
     */
   private[graft] def insertBatch = Seq(11L, 22L, 33L, 44L)
 
-  private val insertedGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** [[hnswInsertedGraphBuild]] behind a corpus-keyed store cache (the
-    * beamGraphCache convention; ADVICE r13: the s41 QueryDef and both
-    * s41 specs each re-ran the full 4-insert chain — 4 beams + 4
-    * recaps + 4 localCheckpoints — per call). The final edge list is a
-    * deterministic function of the corpus alone, so one FactTable
-    * materialization serves every caller; rebuilt if the scratch dir
-    * was reaped.
+  /** [[hnswInsertedGraphBuild]] behind the store memo (ADVICE r13: the
+    * s41 QueryDef and both s41 specs each re-ran the full 4-insert chain
+    * — 4 beams + 4 recaps + 4 localCheckpoints — per call). The final
+    * edge list is a deterministic function of the corpus alone, so one
+    * FactTable materialization serves every caller.
     */
   private[graft] def hnswInsertedGraph(s: SparkSession, dir: String)
-      : DataFrame = {
-    import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val root = insertedGraphCache.synchronized {
-      insertedGraphCache.get(dir).filter(live).getOrElse {
-        val r = graft.TempDirs.scratch(
-          "s41_ins_" + Integer.toHexString(dir.hashCode))
-        new graft.storage.FactTable(r, s).append(
-          hnswInsertedGraphBuild(s, dir)
-            .withColumn("date", to_date(lit("2024-01-01"))), 0)
-        insertedGraphCache.put(dir, r)
-        r
-      }
-    }
-    new graft.storage.FactTable(root, s).read()
-      .select($"src", $"dst", $"gcos")
-  }
+      : DataFrame =
+    factStore(s, "s41_ins", dir)(hnswInsertedGraphBuild(s, dir)).read()
+      .select(col("src"), col("dst"), col("gcos"))
 
-  /** The HNSW-inserted graph: the s41_base store (corpus minus the
-    * batch) plus the four sequential inserts applied. Returns the full
+  /** The HNSW-inserted graph: the `baseTag` store (corpus minus the
+    * batch) plus the sequential inserts applied, each one beam over the
+    * current [[DeltaGraph]] version with x as the query. Returns the full
     * (src, dst, gcos) edge list — the spec asserts degree/reachability
     * invariants and serving parity on it.
-    *
-    * Delta representation (the 100 TB MERGE shape, dx23's
-    * deletion-vector pattern): every graph version is
-    * `base store ANTI-JOIN touched-src list ∪ checkpointed delta
-    * edges`. The base store is never rewritten; each insert re-caps ≤M
-    * source rows, so the delta stays bounded (≤ batch·M·(M+1) rows)
-    * and is pinned with one tiny localCheckpoint per insert — WITHOUT
-    * this flattening, version i's plan references version i-1 three
-    * times (anti + two recap branches) and the lineage grows 3^i-fold
-    * (measured: the nested form ran 10× slower at sf0.001).
     */
   private[graft] def hnswInsertedGraphBuild(s: SparkSession, dir: String,
       batch: Seq[Long] = insertBatch, baseTag: String = "s41_base")
       : DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
+    val vecs = emb.filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
     val base = knnGraphStoreFor(s, dir, baseTag, None, beamEntries,
       exclude = batch).read().select($"src", $"dst", $"gcos")
-    // (touched-src tombstones, override/new edges) — both bounded
-    var touched = s.emptyDataFrame.select(lit(-1L).as("src")).limit(0)
-    var delta = base.limit(0)
-    def graphNow: DataFrame = base
-      .join(broadcast(touched), Seq("src"), "left_anti")
-      .unionByName(delta)
-    batch.sorted.foreach { x =>
-      val qv = emb.filter($"vec_id" === x).select($"embedding".as("qv"))
-      val graph = graphNow
-      val visited = beamOverQ(s, dir, graph.select($"src", $"dst"),
-        beamEntries.toDF("vec_id"), beamR, qv)
+    batch.sorted.foldLeft(new DeltaGraph(base)) { (g, x) =>
+      val graph = g.now
+      val visited = beam(graph.select($"src", $"dst"),
+        beamEntries.toDF("vec_id"), beamR, exactScorer(vecs,
+          emb.filter($"vec_id" === x).select($"embedding".as("qv"))))
       val (changed, changedSrcs) = insertDelta(s, graph, x, visited)
-      delta = delta
+      g(changed, changedSrcs)
+    }.now
+  }
+
+  /** One graph VERSION in the delta representation (the 100 TB MERGE
+    * shape, dx23's deletion-vector pattern): `base ANTI touched-srcs ∪
+    * delta`. The base store is never rewritten; `apply` replaces the
+    * changed sources' edge lists in the bounded delta (≤ batch·M·(M+1)
+    * rows) and pins it with one tiny localCheckpoint per step — WITHOUT
+    * this flattening, version i's plan references version i-1 three
+    * times (anti + two recap branches) and the lineage grows 3^i-fold
+    * (measured: the nested form ran 10× slower at sf0.001). Shared by
+    * s41's inserts, both s46 layers, s49's chained batches and the s44
+    * single merge (an unpinned delta).
+    */
+  private[graft] final class DeltaGraph(base: DataFrame, delta: DataFrame) {
+    def this(base: DataFrame) = this(base, base.limit(0))
+
+    def now: DataFrame = base
+      .join(broadcast(delta.select(col("src")).distinct()), Seq("src"),
+        "left_anti")
+      .unionByName(delta)
+
+    /** The next version: `changes` replace every edge of `changedSrcs`. */
+    def apply(changes: DataFrame, changedSrcs: DataFrame): DeltaGraph =
+      new DeltaGraph(base, delta
         .join(broadcast(changedSrcs), Seq("src"), "left_anti")
-        .unionByName(changed)
-        .localCheckpoint() // bounded: the MERGE a store would write
-      touched = delta.select($"src").distinct()
-    }
-    graphNow
+        .unionByName(changes)
+        .localCheckpoint())
   }
 
   /** ONE s41 insert's merged rows over an arbitrary graph — the HNSW
@@ -3410,152 +3271,95 @@ object SimilarityQueries {
     * insert kernel ([[insertDelta]]: top-M out-edges, best-pin
     * back-edge, ≤M neighbors recap). A level-0 insert still beams the
     * upper layer — for seeds only (that IS the descent; it links
-    * nowhere above its level). Both layers hold the s41 delta
-    * representation (base ANTI touched ∪ bounded checkpointed delta),
-    * so per-insert cost stays corpus-size independent on each layer.
+    * nowhere above its level). Each layer is a [[DeltaGraph]] (base
+    * ANTI touched ∪ bounded checkpointed delta), so per-insert cost
+    * stays corpus-size independent on each layer.
     * Returns (base-layer graph, upper-layer graph).
     */
   private[graft] def mlInsertedGraphBuild(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
+    val vecs = emb.filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
     val base0 = knnGraphStoreFor(s, dir, "s46_l0", None, beamEntries,
       exclude = mlInsertBatch).read().select($"src", $"dst", $"gcos")
     val base1 = knnGraphStoreFor(s, dir, "s46_l1", Some((8L, 1L)),
       beamL1Entries, exclude = mlInsertBatch).read()
       .select($"src", $"dst", $"gcos")
-    var touched0 = s.emptyDataFrame.select(lit(-1L).as("src")).limit(0)
-    var delta0 = base0.limit(0)
-    var touched1 = touched0
-    var delta1 = base1.limit(0)
-    def g0Now: DataFrame = base0
-      .join(broadcast(touched0), Seq("src"), "left_anti")
-      .unionByName(delta0)
-    def g1Now: DataFrame = base1
-      .join(broadcast(touched1), Seq("src"), "left_anti")
-      .unionByName(delta1)
-    mlInsertBatch.sorted.foreach { x =>
-      val qv = emb.filter($"vec_id" === x).select($"embedding".as("qv"))
-      val g1 = g1Now
-      val uvisited = beamOverQ(s, dir, g1.select($"src", $"dst"),
-        beamL1Entries.toDF("vec_id"), 2, qv)
-      if (mlLevel(x) >= 1) {
+    val (l0, l1) = mlInsertBatch.sorted.foldLeft(
+        (new DeltaGraph(base0), new DeltaGraph(base1))) { case ((v0, v1), x) =>
+      val score = exactScorer(vecs,
+        emb.filter($"vec_id" === x).select($"embedding".as("qv")))
+      val g1 = v1.now
+      val uvisited = beam(g1.select($"src", $"dst"),
+        beamL1Entries.toDF("vec_id"), 2, score)
+      val next1 = if (mlLevel(x) >= 1) {
         val (changed1, srcs1) = insertDelta(s, g1, x, uvisited)
-        delta1 = delta1
-          .join(broadcast(srcs1), Seq("src"), "left_anti")
-          .unionByName(changed1)
-          .localCheckpoint()
-        touched1 = delta1.select($"src").distinct()
-      }
-      val seeds0 = uvisited.orderBy($"cosine".desc, $"vec_id".asc)
-        .limit(4).select($"vec_id")
-        .unionByName(beamEntries.toDF("vec_id")).distinct()
-      val g0 = g0Now
-      val visited = beamOverQ(s, dir, g0.select($"src", $"dst"),
-        seeds0, beamR, qv)
+        v1(changed1, srcs1)
+      } else v1
+      val g0 = v0.now
+      val visited = beam(g0.select($"src", $"dst"),
+        descentSeeds(s, uvisited), beamR, score)
       val (changed0, srcs0) = insertDelta(s, g0, x, visited)
-      delta0 = delta0
-        .join(broadcast(srcs0), Seq("src"), "left_anti")
-        .unionByName(changed0)
-        .localCheckpoint()
-      touched0 = delta0.select($"src").distinct()
+      (v0(changed0, srcs0), next1)
     }
-    (g0Now, g1Now)
+    (l0.now, l1.now)
   }
 
-  private val mlGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** [[mlInsertedGraphBuild]] behind a corpus-keyed store cache (the
-    * day-one convention): both layers land in ONE FactTable with a
-    * `layer` column. Returns (layer, src, dst, gcos).
+  /** [[mlInsertedGraphBuild]] behind the store memo: both layers land
+    * in ONE FactTable with a `layer` column. Returns (layer, src, dst,
+    * gcos).
     */
   private[graft] def mlInsertedGraph(s: SparkSession, dir: String)
-      : DataFrame = {
-    import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val root = mlGraphCache.synchronized {
-      mlGraphCache.get(dir).filter(live).getOrElse {
-        val r = graft.TempDirs.scratch(
-          "s46_ml_" + Integer.toHexString(dir.hashCode))
-        val (g0, g1) = mlInsertedGraphBuild(s, dir)
-        new graft.storage.FactTable(r, s).append(
-          g0.withColumn("layer", lit(0))
-            .unionByName(g1.withColumn("layer", lit(1)))
-            .withColumn("date", to_date(lit("2024-01-01"))), 0)
-        mlGraphCache.put(dir, r)
-        r
-      }
-    }
-    new graft.storage.FactTable(root, s).read()
-      .select($"layer", $"src", $"dst", $"gcos")
-  }
+      : DataFrame =
+    factStore(s, "s46_ml", dir) {
+      val (g0, g1) = mlInsertedGraphBuild(s, dir)
+      g0.withColumn("layer", lit(0))
+        .unionByName(g1.withColumn("layer", lit(1)))
+    }.read().select(col("layer"), col("src"), col("dst"), col("gcos"))
 
-  private val pqStoreCache =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
-  /** Build (or reuse — corpus-keyed, the storedIvfStores convention)
-    * the persisted PQ store pair: (codes table: 8 rows/vector of
-    * (vec_id, sp, code); codebook table: 32 rows of (cid, csp, cv)).
-    * The build is s08's encode run ONCE (subspace slices, broadcast
-    * codebook join, per-(vec,sp) decimal argmin). Shared by s26's
-    * stored serving and s48's PQ-guided traversal.
+  /** Build (or reuse — memoized per corpus) the persisted PQ store
+    * pair: (codes table: 8 rows/vector of (vec_id, sp, code); codebook
+    * table: 32 rows of (cid, csp, cv)). The build is s08's encode run
+    * ONCE (subspace slices, broadcast codebook join, per-(vec,sp)
+    * decimal argmin). Shared by s26's stored serving and s48's
+    * PQ-guided traversal.
     */
   private[graft] def pqStoresFor(s: SparkSession, dir: String)
       : (graft.storage.FactTable, graft.storage.FactTable) = {
     import s.implicits._
     import graft.functions.VectorFunctions.l2SqDecimal
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val (codesRoot, bookRoot) = pqStoreCache.synchronized {
-      pqStoreCache.get(dir)
-        .filter { case (a, b) => live(a) && live(b) }
-        .getOrElse {
-          val emb = Tables.load(s, dir, "embeddings")
-          val subs = emb.select($"vec_id", posexplode_outer(expr(
-            "transform(sequence(0, 7), sp -> slice(embedding, 8*sp+1, 8))"))
-            .as(Seq("sp", "sv")))
-          val cents = subs.filter($"vec_id".between(1, 4))
-            .select($"vec_id".as("cid"), $"sp".as("csp"), $"sv".as("cv"))
-          val dists = subs.join(broadcast(cents), $"sp" === $"csp")
-            .select($"vec_id", $"sp", $"cid",
-              l2SqDecimal("sv", "cv").as("d2"))
-          val w = Window.partitionBy($"vec_id", $"sp")
-            .orderBy($"d2".asc, $"cid".asc)
-          val codes = dists.withColumn("rk", row_number().over(w))
-            .filter($"rk" === 1).select($"vec_id", $"sp", $"cid".as("code"))
-          val dt = to_date(lit("2024-01-01"))
-          val hex = Integer.toHexString(dir.hashCode)
-          val cr = graft.TempDirs.scratch(s"s48_codes_$hex")
-          val br = graft.TempDirs.scratch(s"s48_book_$hex")
-          new graft.storage.FactTable(cr, s)
-            .append(codes.withColumn("date", dt), 0)
-          new graft.storage.FactTable(br, s)
-            .append(cents.withColumn("date", dt), 0)
-          pqStoreCache.put(dir, (cr, br))
-          (cr, br)
-        }
+    lazy val subs = Tables.load(s, dir, "embeddings")
+      .select($"vec_id", posexplode_outer(expr(
+        "transform(sequence(0, 7), sp -> slice(embedding, 8*sp+1, 8))"))
+        .as(Seq("sp", "sv")))
+    def cents = subs.filter($"vec_id".between(1, 4))
+      .select($"vec_id".as("cid"), $"sp".as("csp"), $"sv".as("cv"))
+    val codes = factStore(s, "s48_codes", dir) {
+      val dists = subs.join(broadcast(cents), $"sp" === $"csp")
+        .select($"vec_id", $"sp", $"cid",
+          l2SqDecimal("sv", "cv").as("d2"))
+      val w = Window.partitionBy($"vec_id", $"sp")
+        .orderBy($"d2".asc, $"cid".asc)
+      dists.withColumn("rk", row_number().over(w))
+        .filter($"rk" === 1).select($"vec_id", $"sp", $"cid".as("code"))
     }
-    (new graft.storage.FactTable(codesRoot, s),
-      new graft.storage.FactTable(bookRoot, s))
+    (codes, factStore(s, "s48_book", dir)(cents))
   }
 
-  /** PQ-GUIDED beam search (the DiskANN traversal shape, Subramanya
+  /** PQ-GUIDED [[beam]] scorer (the DiskANN traversal shape, Subramanya
     * et al. 2019: graph adjacency + compressed in-memory distances):
-    * [[beamOver]]'s loop with every candidate scored from the STORED
-    * codes — per round the frontier's neighbors semi-join the
-    * 8-codes-per-vector store and sum the broadcast 32-entry query
-    * lookup table (one partial-aggregated groupBy over ≤ 8·|cands|
-    * rows); the corpus's raw vectors are NEVER read during traversal.
-    * Scores surface NEGATED (cosine = -rounded ADC) so the frontier
-    * order (cosine desc, vec_id asc) is ADC asc, vec_id asc and the
-    * oracle reuses the shared beam CTEs through the same negation.
+    * every candidate scored from the STORED codes — per round the
+    * frontier's neighbors semi-join the 8-codes-per-vector store and
+    * sum the broadcast 32-entry query lookup table (one
+    * partial-aggregated groupBy over ≤ 8·|cands| rows); the corpus's raw
+    * vectors are NEVER read during traversal. Scores surface NEGATED
+    * (cosine = -rounded ADC) so the frontier order (cosine desc, vec_id
+    * asc) is ADC asc, vec_id asc and the oracle reuses the shared beam
+    * CTEs through the same negation.
     */
-  private[graft] def beamOverAdc(s: SparkSession, dir: String,
-      graph: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+  private def adcScorer(s: SparkSession, dir: String)
+      : DataFrame => DataFrame = {
     import s.implicits._
     import graft.functions.VectorFunctions.l2SqDecimal
     val (codesT, bookT) = pqStoresFor(s, dir)
@@ -3573,25 +3377,12 @@ object SimilarityQueries {
       .localCheckpoint()
     val codes = codesT.read().select($"vec_id", $"sp", $"code")
       .filter($"vec_id" =!= 0)
-    def score(ids: DataFrame): DataFrame = codes
+    ids => codes
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
       .join(broadcast(qd), $"sp" === $"qsp" && $"code" === $"qcid")
       .groupBy($"vec_id").agg(sum($"qd2").as("adc_dec"))
       .select($"vec_id",
         (-round($"adc_dec".cast("double"), 9)).as("cosine"))
-    var visited = score(seeds)
-    var frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-      .limit(beamB).select($"vec_id".as("fid"))
-    for (_ <- 1 to rounds) {
-      val nbrs = graph.join(broadcast(frontier), $"src" === $"fid")
-        .select($"dst".as("vec_id")).distinct()
-      val fresh = nbrs.join(broadcast(visited.select($"vec_id")),
-        Seq("vec_id"), "left_anti")
-      visited = visited.unionByName(score(fresh))
-      frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-        .limit(beamB).select($"vec_id".as("fid"))
-    }
-    visited
   }
 
   /** The s40 two-layer descent serving probe over ARBITRARY layer
@@ -3603,11 +3394,9 @@ object SimilarityQueries {
   private[graft] def descentTop10Over(s: SparkSession, dir: String,
       l0: DataFrame, l1: DataFrame): DataFrame = {
     import s.implicits._
-    val v1 = beamOver(s, dir, l1, beamL1Entries.toDF("vec_id"), 2)
-    val seeds = v1.orderBy($"cosine".desc, $"vec_id".asc).limit(4)
-      .select($"vec_id")
-      .unionByName(beamEntries.toDF("vec_id")).distinct()
-    beamOver(s, dir, l0, seeds, beamR)
+    val score = servingScorer(s, dir)
+    val v1 = beam(l1, beamL1Entries.toDF("vec_id"), 2, score)
+    beam(l0, descentSeeds(s, v1), beamR, score)
       .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
       .select($"vec_id", $"cosine")
   }
@@ -3619,7 +3408,7 @@ object SimilarityQueries {
   private[graft] def beamTop10Over(s: SparkSession, dir: String,
       graph: DataFrame): DataFrame = {
     import s.implicits._
-    beamOver(s, dir, graph, beamEntries.toDF("vec_id"), beamR)
+    beam(graph, beamEntries.toDF("vec_id"), beamR, servingScorer(s, dir))
       .orderBy($"cosine".desc, $"vec_id".asc).limit(10)
       .select($"vec_id", $"cosine")
   }
@@ -4065,22 +3854,6 @@ object SimilarityQueries {
                  FROM lexs),
         lextop AS (SELECT qid, doc_id, lex_rk FROM lexr WHERE lex_rk <= $k)"""
 
-  /** s31's stored-index batch ranking as a reusable builder (shared with
-    * s32): builds the bucket-tagged index + centroid FactTable stores,
-    * then ranks every probed-bucket vector per query — returns
-    * (qid, vec_id, cosine, srk) UNLIMITED; callers cut at their k. The
-    * query set reads from the store itself; probe selection is a
-    * WindowGroupLimit over nlist×nqueries rows; the (qid, bucket, qv)
-    * triples broadcast into the store.
-    */
-  /** One (index, centroid) store pair per corpus dir per JVM: the build
-    * is a deterministic function of the corpus alone (qids only steer
-    * the probe side), so s31/s32/s33 — and both timed bench runs of
-    * each — share one materialization instead of six (the q84
-    * idempotent-layout precedent; a vector store's index build is the
-    * offline step its serving queries exist to amortize). Rebuilt if
-    * the cached roots vanished (tmp cleanup).
-    */
   // ---- s38/s39: stored k-NN-graph beam search (the HNSW/NSW family) ----
 
   /** Beam-search knobs: M-degree graph, B-wide beam, R rounds, fixed
@@ -4100,10 +3873,7 @@ object SimilarityQueries {
   private def beamL1Entries = Seq(1L, 9L, 17L, 25L)
   private def beamCap = 256
 
-  private val beamGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Build (or reuse — corpus-keyed, the storedIvfStores convention) the
+  /** Build (or reuse — memoized per corpus) the
     * persisted k-NN GRAPH: per corpus vector, its top-M neighbors by
     * exact cosine among the hyperplane-LSH band-colliding candidates
     * (s12's candidate generation — the s11 scaladoc's prescription for
@@ -4122,105 +3892,99 @@ object SimilarityQueries {
     * vec_id ≡ r (mod m) — the deterministic node subsample that makes
     * an upper HNSW layer — `exclude` drops an explicit id set (s41's
     * not-yet-inserted batch), and `entries` are the fixed nodes the cap
-    * must pin. Stores cache per (dir, tag).
+    * must pin. The memo key covers (dir, tag) AND every build input, so
+    * one tag built with two exclude sets yields two stores.
     */
   private def knnGraphStoreFor(s: SparkSession, dir: String, tag: String,
       subsetMod: Option[(Long, Long)], entries: Seq[Long],
       exclude: Seq[Long] = Nil)
-      : graft.storage.FactTable = {
-    import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val cacheKey = dir + "#" + tag
-    val root = beamGraphCache.synchronized {
-      beamGraphCache.get(cacheKey).filter(live).getOrElse {
-        val bands0 = subsetMod.foldLeft(
-          hyperplaneBands(s, dir).filter($"vec_id" =!= 0)) {
-          case (df, (m, rr)) => df.filter($"vec_id" % m === rr)
-        }
-        val bands = if (exclude.isEmpty) bands0
-          else bands0.filter(!$"vec_id".isin(exclude: _*))
-        // ENTRY PINNING: the fixed entry points sort FIRST in the cap
-        // order — a serving graph must contain its entry nodes (the
-        // HNSW entry-node invariant); the r12 ×10 sweep caught the
-        // md5-only order evicting all four entries from every capped
-        // bucket, which left them edgeless and killed the beam at the
-        // seed set (out_rows 4, not 10)
-        val wCap = Window.partitionBy($"band", $"bval")
-          .orderBy(when($"vec_id".isin(entries: _*), 0).otherwise(1).asc,
-            md5($"vec_id".cast("string")).asc, $"vec_id".asc)
-        val capped = bands
-          .withColumn("crk", row_number().over(wCap))
-          .filter($"crk" <= beamCap)
-          .select($"vec_id", $"embedding", $"band", $"bval")
-        val wG = Window.partitionBy($"src").orderBy($"gcos".desc, $"dst".asc)
-        // shuffle discipline (two r12 sweep lessons in one shape): the
-        // band self-join emits ONLY (src, dst) — 16 bytes — so the
-        // multi-band pair dedup shuffles narrow rows (deduping with the
-        // embeddings attached shuffled two 64-float arrays per
-        // candidate: 900 s at ×10), and the vectors attach AFTER the
-        // distinct via two vec_id-keyed joins so each distinct pair
-        // pays the decimal cosine exactly ONCE (scoring pre-dedup
-        // re-ran it per band collision: 4× the decimal work, 96 s at
-        // ×1). Only the final (src, dst, gcos) triple reaches the
-        // per-src top-M window.
-        // self-norms are PER-VECTOR quantities: folding them per PAIR
-        // (what cosineExact inlines) tripled the dominant decimal work
-        // — precompute once (N rows) and carry them through the joins;
-        // the final expression is cosineExact's op tree verbatim, so
-        // the rounded value is bit-identical
-        val vecs = Tables.load(s, dir, "embeddings")
-          .filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
-          .withColumn("nn", dotExact("embedding", "embedding"))
-        val graph = capped
-          .select($"vec_id".as("src"), $"band", $"bval")
-          .join(capped.select($"vec_id".as("dst"), $"band", $"bval"),
-            Seq("band", "bval"))
-          .filter($"src" =!= $"dst")
-          .select($"src", $"dst").distinct()
-          .join(vecs.select($"vec_id".as("src"), $"embedding".as("sv"),
-            $"nn".as("sn")), Seq("src"))
-          .join(vecs.select($"vec_id".as("dst"), $"embedding".as("dv"),
-            $"nn".as("dn")), Seq("dst"))
-          .select($"src", $"dst",
-            round(dotExact("sv", "dv") / (sqrt($"sn") * sqrt($"dn")), 9)
-              .as("gcos"))
-          .withColumn("grk", row_number().over(wG)).filter($"grk" <= beamM)
-          .select($"src", $"dst", $"gcos")
-        val r = graft.TempDirs.scratch(
-          tag + "_" + Integer.toHexString(dir.hashCode))
-        new graft.storage.FactTable(r, s)
-          .append(graph.withColumn("date", to_date(lit("2024-01-01"))), 0)
-        beamGraphCache.put(cacheKey, r)
-        r
+      : graft.storage.FactTable =
+    factStore(s, tag, dir, subsetMod, entries, exclude) {
+      import s.implicits._
+      val bands0 = subsetMod.foldLeft(
+        hyperplaneBands(s, dir).filter($"vec_id" =!= 0)) {
+        case (df, (m, rr)) => df.filter($"vec_id" % m === rr)
       }
+      val bands = if (exclude.isEmpty) bands0
+        else bands0.filter(!$"vec_id".isin(exclude: _*))
+      // ENTRY PINNING: the fixed entry points sort FIRST in the cap
+      // order — a serving graph must contain its entry nodes (the
+      // HNSW entry-node invariant); the r12 ×10 sweep caught the
+      // md5-only order evicting all four entries from every capped
+      // bucket, which left them edgeless and killed the beam at the
+      // seed set (out_rows 4, not 10)
+      val wCap = Window.partitionBy($"band", $"bval")
+        .orderBy(when($"vec_id".isin(entries: _*), 0).otherwise(1).asc,
+          md5($"vec_id".cast("string")).asc, $"vec_id".asc)
+      val capped = bands
+        .withColumn("crk", row_number().over(wCap))
+        .filter($"crk" <= beamCap)
+        .select($"vec_id", $"embedding", $"band", $"bval")
+      val wG = Window.partitionBy($"src").orderBy($"gcos".desc, $"dst".asc)
+      // shuffle discipline (two r12 sweep lessons in one shape): the
+      // band self-join emits ONLY (src, dst) — 16 bytes — so the
+      // multi-band pair dedup shuffles narrow rows (deduping with the
+      // embeddings attached shuffled two 64-float arrays per
+      // candidate: 900 s at ×10), and the vectors attach AFTER the
+      // distinct via two vec_id-keyed joins so each distinct pair
+      // pays the decimal cosine exactly ONCE (scoring pre-dedup
+      // re-ran it per band collision: 4× the decimal work, 96 s at
+      // ×1). Only the final (src, dst, gcos) triple reaches the
+      // per-src top-M window.
+      // self-norms are PER-VECTOR quantities: folding them per PAIR
+      // (what cosineExact inlines) tripled the dominant decimal work
+      // — precompute once (N rows) and carry them through the joins;
+      // the final expression is cosineExact's op tree verbatim, so
+      // the rounded value is bit-identical
+      val vecs = Tables.load(s, dir, "embeddings")
+        .filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
+        .withColumn("nn", dotExact("embedding", "embedding"))
+      capped
+        .select($"vec_id".as("src"), $"band", $"bval")
+        .join(capped.select($"vec_id".as("dst"), $"band", $"bval"),
+          Seq("band", "bval"))
+        .filter($"src" =!= $"dst")
+        .select($"src", $"dst").distinct()
+        .join(vecs.select($"vec_id".as("src"), $"embedding".as("sv"),
+          $"nn".as("sn")), Seq("src"))
+        .join(vecs.select($"vec_id".as("dst"), $"embedding".as("dv"),
+          $"nn".as("dn")), Seq("dst"))
+        .select($"src", $"dst",
+          round(dotExact("sv", "dv") / (sqrt($"sn") * sqrt($"dn")), 9)
+            .as("gcos"))
+        .withColumn("grk", row_number().over(wG)).filter($"grk" <= beamM)
+        .select($"src", $"dst", $"gcos")
     }
-    new graft.storage.FactTable(root, s)
-  }
 
-  /** Fixed-round beam search over the STORED graph, the plan composed
-    * by the driver with no mid-iteration collect (the q94 discipline):
-    * per round, the ≤B-row frontier broadcasts into the graph store for
-    * its neighbor set, fresh nodes are anti-joined against the ≤(4+RBM)
-    * visited set and scored against the broadcast query vector, and the
-    * next frontier is a TakeOrdered top-B of visited. Returns (visited
-    * scored set, graph df) — everything downstream (top-k, audits) is a
-    * bounded rearrangement. The corpus is never re-banded and the graph
-    * never rebuilt (the store is the serving artifact; PlanSpec locks
-    * the store read into the plan).
+  /** A memoized one-append FactTable store ([[graft.TempDirs.store]]):
+    * `rows`, dated 2024-01-01, append once at txn 0 per key; every later
+    * call with the same key reads the same store. */
+  private def factStore(s: SparkSession, tag: String, inputs: Any*)(
+      rows: => DataFrame): graft.storage.FactTable =
+    new graft.storage.FactTable(graft.TempDirs.store(tag, inputs: _*) { r =>
+      new graft.storage.FactTable(r, s)
+        .append(rows.withColumn("date", to_date(lit("2024-01-01"))), 0)
+    }, s)
+
+  /** s38's serving beam over the STORED graph: entries → R rounds of
+    * [[beam]] scored against query vec 0. Returns (visited scored set,
+    * graph df) — everything downstream (top-k, audits) is a bounded
+    * rearrangement. The corpus is never re-banded and the graph never
+    * rebuilt (the store is the serving artifact; PlanSpec locks the
+    * store read into the plan).
     */
   private def beamSearchParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import s.implicits._
     val graph = knnGraphStore(s, dir).read().select($"src", $"dst")
-    (beamOver(s, dir, graph, beamEntries.toDF("vec_id"), beamR), graph)
+    (beam(graph, beamEntries.toDF("vec_id"), beamR, servingScorer(s, dir)),
+      graph)
   }
 
   /** s40's UPPER-layer descent (the 2-round beam over the stored
     * s40_l1 graph that produces the base layer's seeds), exposed the
     * way [[hnswInsertedGraphBuild]] is: the beam pin (per-round
-    * localCheckpoint in [[beamOverQ]]) truncates the upper layer out
+    * localCheckpoint in [[beam]]) truncates the upper layer out
     * of the SERVED plan's lineage, so PlanSpec locks the s40_l1 store
     * read on this plan instead.
     */
@@ -4229,118 +3993,175 @@ object SimilarityQueries {
     import s.implicits._
     val l1 = knnGraphStoreFor(s, dir, "s40_l1", Some((8L, 1L)),
       beamL1Entries).read().select($"src", $"dst")
-    beamOver(s, dir, l1, beamL1Entries.toDF("vec_id"), 2)
+    beam(l1, beamL1Entries.toDF("vec_id"), 2, servingScorer(s, dir))
   }
 
-  /** One beam phase over an arbitrary stored graph from an arbitrary
-    * seed set — shared by s38's single layer and s40's two-layer
-    * descent. Returns the scored visited set.
+  /** THE beam kernel shared by every graph traversal of s38–s49 —
+    * serving, filtered serving, PQ-guided serving, HNSW inserts and the
+    * batched bulk-ingest beams. Fixed rounds, the plan composed by the
+    * driver with no mid-iteration collect (the q94 discipline): per
+    * round the ≤B-row frontier broadcasts into `graph` (src, dst) for
+    * its neighbors, fresh nodes anti-join the visited set, get scored,
+    * and union into visited; the next frontier is visited's top-B by
+    * (cosine desc, vec_id asc). Parameters:
+    *  - `score`: candidate ids → (vec_id, cosine, …) rows; exact cosine
+    *    against a 1-row query ([[exactScorer]]), per-qid queries
+    *    ([[batchScorer]]) or ADC from stored PQ codes ([[adcScorer]]).
+    *    ADC scores surface as `cosine` too, so one frontier order serves
+    *    all three;
+    *  - `twoHop`: ACORN-1 expansion — each frontier node's 1-hop AND
+    *    2-hop neighborhood (traversal passes THROUGH nodes the
+    *    admission filter rejects);
+    *  - `admit`: the admission filter on scored fresh candidates (s42's
+    *    `ok`); seeds are always admitted as traversal anchors;
+    *  - `perQid`: every step carries `qid` (seeds are (qid, vec_id)) and
+    *    the frontier is one per-qid group-limited window — the s44/s49
+    *    batch shape, O(R) job waves for any number of queries — instead
+    *    of the global `orderBy.limit` that plans as TakeOrderedAndProject
+    *    (PlanSpec locks that form for s38/s40/s42).
+    * Returns the visited set. Per query the scoring work is
+    * ≤ |seeds| + R·B·M (M + M² per node with `twoHop`) candidates,
+    * independent of corpus size.
     */
-  private def beamOver(s: SparkSession, dir: String, graph: DataFrame,
-      seeds: DataFrame, rounds: Int): DataFrame = {
-    import s.implicits._
-    val q = Tables.load(s, dir, "embeddings")
-      .filter($"vec_id" === 0).select($"embedding".as("qv"))
-    beamOverQ(s, dir, graph, seeds, rounds, q)
-  }
-
-  /** [[beamOver]] with an ARBITRARY 1-row query vector `q` (column
-    * `qv`) — s41's insert path beam-searches with each NEW vector as
-    * the query (the HNSW property: the serving path IS the insert
-    * path). No mid-iteration collect; every frontier/visited side
-    * broadcasts.
-    */
-  private def beamOverQ(s: SparkSession, dir: String, graph: DataFrame,
-      seeds: DataFrame, rounds: Int, q: DataFrame): DataFrame = {
-    import s.implicits._
-    val vecs = Tables.load(s, dir, "embeddings")
-      .filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
-    def score(ids: DataFrame): DataFrame = vecs
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .crossJoin(broadcast(q))
-      .select($"vec_id", round(cosineExact("embedding", "qv"), 9).as("cosine"))
-    var visited = score(seeds)
-    var frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-      .limit(beamB).select($"vec_id".as("fid"))
-    for (r <- 1 to rounds) {
-      val nbrs = graph.join(broadcast(frontier), $"src" === $"fid")
-        .select($"dst".as("vec_id")).distinct()
-      val fresh = nbrs.join(broadcast(visited.select($"vec_id")),
-        Seq("vec_id"), "left_anti")
-      visited = visited.unionByName(score(fresh))
-      // pin every round but the last (see filteredBeamParts): each round
-      // references visited 3× and the unpinned plan grows 3^r-fold; the
-      // final round stays live so the graph-store read and TakeOrdered
-      // frontier keep their locked places in the served plan
-      if (r < rounds) visited = visited.localCheckpoint()
-      frontier = visited.orderBy($"cosine".desc, $"vec_id".asc)
-        .limit(beamB).select($"vec_id".as("fid"))
+  private[graft] def beam(graph: DataFrame, seeds: DataFrame, rounds: Int,
+      score: DataFrame => DataFrame, perQid: Boolean = false,
+      twoHop: Boolean = false, admit: Option[Column] = None): DataFrame = {
+    val qid = if (perQid) Seq("qid") else Nil
+    val keys = qid :+ "vec_id"
+    val byCos = Seq(col("cosine").desc, col("vec_id").asc)
+    def frontierOf(v: DataFrame): DataFrame = {
+      val top =
+        if (perQid) v.withColumn("frk",
+            row_number().over(Window.partitionBy(col("qid")).orderBy(byCos: _*)))
+          .filter(col("frk") <= beamB)
+        else v.orderBy(byCos: _*).limit(beamB)
+      top.select(qid.map(col) :+ col("vec_id").as("fid"): _*)
     }
-    visited
-  }
-
-  /** ALL queries' beams against ONE frozen graph as ONE job set — the
-    * s31 batch-serving shape applied to the insert path (s44): instead
-    * of driving B sequential beams (B·R rounds of tiny jobs, latency-
-    * bound at 1-2 inserts/s), the (qid, qv) batch broadcasts and every
-    * per-round step carries qid: per-qid frontiers are ONE partitioned
-    * group-limit window (WindowGroupLimit pushes on partitioned
-    * windows), neighbor expansion is one broadcast join, and fresh
-    * candidates score against their own query vector via a second
-    * broadcast. Round count is R regardless of B, so wall-clock is
-    * O(R) job waves, not O(B·R). Returns (qid, vec_id, cosine); every
-    * broadcast side is bounded by B·(entries + R·B·M) rows.
-    */
-  private[graft] def beamOverQueries(s: SparkSession, dir: String,
-      graph: DataFrame, seeds: Seq[Long], rounds: Int,
-      queries: DataFrame): DataFrame =
-    beamOverQueriesVecs(s, graph,
-      Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") =!= 0).select(col("vec_id"), col("embedding")),
-      seeds, rounds, queries)
-
-  /** [[beamOverQueries]] over an ARBITRARY (vec_id, embedding) corpus
-    * frame — the streaming ingest scores from ITS OWN vector store,
-    * not the test corpus table.
-    */
-  private[graft] def beamOverQueriesVecs(s: SparkSession,
-      graph: DataFrame, vecs: DataFrame, seeds: Seq[Long], rounds: Int,
-      queries: DataFrame): DataFrame = {
-    import s.implicits._
-    def score(ids: DataFrame): DataFrame = vecs
-      .join(broadcast(ids), Seq("vec_id"))
-      .join(broadcast(queries), Seq("qid"))
-      .select($"qid", $"vec_id",
-        round(cosineExact("embedding", "qv"), 9).as("cosine"))
-    val wF = Window.partitionBy($"qid")
-      .orderBy($"cosine".desc, $"vec_id".asc)
-    def frontierOf(v: DataFrame): DataFrame = v
-      .withColumn("frk", row_number().over(wF)).filter($"frk" <= beamB)
-      .select($"qid", $"vec_id".as("fid"))
-    var visited = score(queries.select($"qid")
-      .crossJoin(seeds.toDF("vec_id")))
+    def expand(from: DataFrame): DataFrame =
+      graph.join(broadcast(from), col("src") === col("fid"))
+        .select(qid.map(col) :+ col("dst").as("vec_id"): _*)
+    var visited = score(seeds)
     var frontier = frontierOf(visited)
     for (r <- 1 to rounds) {
-      val nbrs = graph.join(broadcast(frontier), $"src" === $"fid")
-        .select($"qid", $"dst".as("vec_id")).distinct()
-      val fresh = nbrs.join(broadcast(visited.select($"qid", $"vec_id")),
-        Seq("qid", "vec_id"), "left_anti")
-      visited = visited.unionByName(score(fresh))
-      // pin every round but the last (see filteredBeamParts): the
-      // per-round triple reference otherwise grows the plan 3^r-fold
+      val hop1 = expand(frontier).distinct()
+      val nbrs = if (!twoHop) hop1
+        else hop1.unionByName(expand(
+          hop1.select(qid.map(col) :+ col("vec_id").as("fid"): _*))).distinct()
+      val fresh = nbrs.join(broadcast(visited.select(keys.map(col): _*)),
+        keys, "left_anti")
+      val scored = score(fresh)
+      visited = visited.unionByName(admit.fold(scored)(scored.filter))
+      // pin every round but the last: round r's plan references visited
+      // three times (frontier, anti-join, union), so the unpinned tree
+      // grows 3^r-fold — the s41 lineage pathology on the serving path
+      // (measured: s42 4.9 s → sub-second with the pin; values are
+      // unchanged, and the final round stays live so the stored-graph
+      // read and the TakeOrdered frontier keep their locked places in
+      // the served plan)
       if (r < rounds) visited = visited.localCheckpoint()
       frontier = frontierOf(visited)
     }
     visited
   }
 
+  /** Exact-cosine [[beam]] scorer against a 1-row query frame `q`
+    * (column `qv`): candidate ids semi-join `vecs` (vec_id, embedding,
+    * …), the query broadcasts. `extra` columns ride along (s42's `ok`
+    * label-match flag). s41/s46 inserts pass each NEW vector as `q` —
+    * the HNSW property: the serving path IS the insert path.
+    */
+  private def exactScorer(vecs: DataFrame, q: DataFrame, extra: Column*)
+      : DataFrame => DataFrame = ids =>
+    vecs.join(broadcast(ids), Seq("vec_id"), "left_semi")
+      .crossJoin(broadcast(q))
+      .select(col("vec_id") +:
+        round(cosineExact("embedding", "qv"), 9).as("cosine") +: extra: _*)
+
+  /** [[exactScorer]] against the fixed query vec 0 over the corpus. */
+  private def servingScorer(s: SparkSession, dir: String)
+      : DataFrame => DataFrame = {
+    val emb = Tables.load(s, dir, "embeddings")
+    exactScorer(emb.filter(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("embedding")),
+      emb.filter(col("vec_id") === 0).select(col("embedding").as("qv")))
+  }
+
+  /** The base-layer seeds of an HNSW descent (s40/s46): the upper
+    * beam's top-4 ∪ the fixed entries — query-adapted starts can only
+    * ADD material to a fixed-seed start.
+    */
+  private def descentSeeds(s: SparkSession, upper: DataFrame): DataFrame = {
+    import s.implicits._
+    upper.orderBy($"cosine".desc, $"vec_id".asc).limit(4).select($"vec_id")
+      .unionByName(beamEntries.toDF("vec_id")).distinct()
+  }
+
+  /** A served (vec_id, cosine) set cut to the ranked top-10 answer
+    * (rk, vec_id, cosine): a TakeOrdered top-10, then the rank window
+    * over those 10 rows.
+    */
+  private def rankedTop10(scored: DataFrame): DataFrame = {
+    val byCos = Seq(col("cosine").desc, col("vec_id").asc)
+    scored.orderBy(byCos: _*).limit(10)
+      .withColumn("rk", row_number().over(Window.orderBy(byCos: _*)).cast("long"))
+      .select(col("rk"), col("vec_id"), col("cosine"))
+      .orderBy(col("rk"))
+  }
+
+  /** The per-qid exact-cosine scorer of the batched beam (s44/s49 and
+    * the streaming ingest, which scores from ITS OWN vector store):
+    * (qid, vec_id) candidates join `vecs` and their own query vector
+    * from the broadcast (qid, qv) batch. Returns (qid, vec_id, cosine).
+    */
+  private def batchScorer(vecs: DataFrame, queries: DataFrame)
+      : DataFrame => DataFrame = ids =>
+    vecs.join(broadcast(ids), Seq("vec_id"))
+      .join(broadcast(queries), Seq("qid"))
+      .select(col("qid"), col("vec_id"),
+        round(cosineExact("embedding", "qv"), 9).as("cosine"))
+
+  /** The recall-audit tail of s39/s43/s45/s48 (the s10/s28/s33 house
+    * discipline): exact top-10 `truth` (ranked here from its (vec_id,
+    * cosine) rows) ⋈ the `served` answer's top-10 ⋈ the in-degree of
+    * `graph`, every truth vector flagged found/missed in `found` and
+    * every miss given a `miss_reason`: `unreachable` when no edge
+    * enters it (a construction defect), `pq_detour` when it is in
+    * `exactVisited` (s48: the exact-guided beam reaches it, the
+    * PQ-guided one does not), `horizon` otherwise (the traversal
+    * budget). The classes are exhaustive because the served answer
+    * ranks its visited set by the same exact cosine that defines
+    * truth, so a visited truth vector is always found. Every leg is
+    * bounded (≤ 10 .. N·M rows) and broadcasts.
+    */
+  private def attributeMisses(truth: DataFrame, served: DataFrame,
+      graph: DataFrame, found: String, unreachable: String, horizon: String,
+      exactVisited: Option[DataFrame] = None): DataFrame = {
+    val byCos = Seq(col("cosine").desc, col("vec_id").asc)
+    val hit = coalesce(col("hit"), lit(false))
+    val legs = Seq(
+      served.orderBy(byCos: _*).limit(10)
+        .select(col("vec_id"), lit(true).as("hit")),
+      graph.select(col("dst").as("vec_id")).distinct()
+        .withColumn("hasin", lit(true))) ++
+      exactVisited.map(_.select(col("vec_id"), lit(true).as("exvis")))
+    val classes = when(hit, "").when(col("hasin").isNull, unreachable)
+    val reason = if (exactVisited.isEmpty) classes
+      else classes.when(col("exvis").isNotNull, "pq_detour")
+    val ranked = truth
+      .withColumn("rk",
+        row_number().over(Window.orderBy(byCos: _*)).cast("long"))
+      .filter(col("rk") <= 10)
+    legs.foldLeft(ranked)((t, leg) =>
+        t.join(broadcast(leg), Seq("vec_id"), "left"))
+      .select(col("rk"), col("vec_id"), col("cosine"), hit.as(found),
+        reason.otherwise(horizon).as("miss_reason"))
+      .orderBy(col("rk"))
+  }
+
   /** s44's micro-batch: disjoint from s41's, all < 500 so they exist
     * at every SF.
     */
   private[graft] def bulkBatch = Seq(55L, 66L, 77L, 88L)
-
-  private val bulkGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
 
   /** BULK HNSW ingest (s44): apply a micro-batch of B new vectors to a
     * frozen base graph as ONE batched job set + ONE bounded merge —
@@ -4366,31 +4187,14 @@ object SimilarityQueries {
     * ≤ B·M·(M+1) rows; the base store is read, never rewritten — at
     * 100 TB this is the one MERGE statement a vector store's ingest
     * pipeline commits per micro-batch. The merged edge list lands in
-    * a corpus-keyed FactTable store (the beamGraphCache convention
-    * from day one).
+    * a memoized FactTable store keyed on the batch and base tag.
     */
   private[graft] def bulkInsertedGraph(s: SparkSession, dir: String,
       batch: Seq[Long] = bulkBatch, baseTag: String = "s44_base")
-      : DataFrame = {
-    import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val cacheKey = dir + "#" + baseTag + "#" + batch.mkString(",")
-    val root = bulkGraphCache.synchronized {
-      bulkGraphCache.get(cacheKey).filter(live).getOrElse {
-        val r = graft.TempDirs.scratch(
-          baseTag + "_ins_" + Integer.toHexString(cacheKey.hashCode))
-        new graft.storage.FactTable(r, s).append(
-          bulkInsertedGraphBuild(s, dir, batch, baseTag)
-            .withColumn("date", to_date(lit("2024-01-01"))), 0)
-        bulkGraphCache.put(cacheKey, r)
-        r
-      }
-    }
-    new graft.storage.FactTable(root, s).read()
-      .select($"src", $"dst", $"gcos")
-  }
+      : DataFrame =
+    factStore(s, baseTag + "_ins", dir, batch)(
+      bulkInsertedGraphBuild(s, dir, batch, baseTag)).read()
+      .select(col("src"), col("dst"), col("gcos"))
 
   /** The uncached s44 build — see [[bulkInsertedGraph]] for the batch
     * semantics. PlanSpec probes this directly for the base-store-read
@@ -4407,10 +4211,8 @@ object SimilarityQueries {
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val vecs = emb.filter($"vec_id" =!= 0)
       .select($"vec_id", $"embedding")
-    val delta = bulkMergeDelta(s, base, vecs, queries, beamEntries)
-    val touched = delta.select($"src").distinct()
-    base.join(broadcast(touched), Seq("src"), "left_anti")
-      .unionByName(delta)
+    new DeltaGraph(base, bulkMergeDelta(s, base, vecs, queries, beamEntries))
+      .now
   }
 
   /** The s44 bulk-merge CORE, over arbitrary frames: returns ONLY the
@@ -4430,8 +4232,9 @@ object SimilarityQueries {
       vecs: DataFrame, queries: DataFrame, entries: Seq[Long])
       : DataFrame = {
     import s.implicits._
-    val visited = beamOverQueriesVecs(s, graph.select($"src", $"dst"),
-      vecs, entries, beamR, queries)
+    val visited = beam(graph.select($"src", $"dst"),
+      queries.select($"qid").crossJoin(entries.toDF("vec_id")), beamR,
+      batchScorer(vecs, queries), perQid = true)
     val wTop = Window.partitionBy($"qid")
       .orderBy($"cosine".desc, $"vec_id".asc)
     val xtop = visited.withColumn("nrk", row_number().over(wTop))
@@ -4471,65 +4274,32 @@ object SimilarityQueries {
       .select($"src", $"dst", $"gcos")
   }
 
-  private val chainGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** [[bulkChainGraphBuild]] behind a corpus-keyed store cache (the
-    * beamGraphCache convention from day one — VERDICT r13 #9; without
-    * it the QueryDef and the StreamingSpec fold comparison each re-pay
-    * the two-batch beam+merge chain). One FactTable materialization
-    * per JVM per corpus; rebuilt if the scratch dir was reaped.
+  /** [[bulkChainGraphBuild]] behind the store memo (VERDICT r13 #9;
+    * without it the QueryDef and the StreamingSpec fold comparison each
+    * re-pay the two-batch beam+merge chain). One FactTable
+    * materialization per JVM per corpus.
     */
   private[graft] def bulkChainGraph(s: SparkSession, dir: String)
-      : DataFrame = {
-    import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val root = chainGraphCache.synchronized {
-      chainGraphCache.get(dir).filter(live).getOrElse {
-        val r = graft.TempDirs.scratch(
-          "s49_chain_ins_" + Integer.toHexString(dir.hashCode))
-        new graft.storage.FactTable(r, s).append(
-          bulkChainGraphBuild(s, dir)
-            .withColumn("date", to_date(lit("2024-01-01"))), 0)
-        chainGraphCache.put(dir, r)
-        r
-      }
-    }
-    new graft.storage.FactTable(root, s).read()
-      .select($"src", $"dst", $"gcos")
-  }
+      : DataFrame =
+    factStore(s, "s49_chain_ins", dir)(bulkChainGraphBuild(s, dir)).read()
+      .select(col("src"), col("dst"), col("gcos"))
 
   /** Chained bulk ingest (s49, the GraphIngest batch fold): successive
     * [[bulkMergeDelta]] batches, each beam-searching the PREVIOUS
-    * batch's merged graph. Version state is the s41 delta
-    * representation — `base ANTI touched ∪ bounded checkpointed delta`
-    * — so plan depth stays constant however many batches fold in.
+    * batch's merged graph, folded through one [[DeltaGraph]] — so plan
+    * depth stays constant however many batches fold in.
     */
   private[graft] def bulkChainGraphBuild(s: SparkSession, dir: String)
       : DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
     val vecs = emb.filter($"vec_id" =!= 0).select($"vec_id", $"embedding")
-    val base = chainBaseEdges(s, dir)
-    var touched = s.emptyDataFrame.select(lit(-1L).as("src")).limit(0)
-    var delta = base.limit(0)
-    def graphNow: DataFrame = base
-      .join(broadcast(touched), Seq("src"), "left_anti")
-      .unionByName(delta)
-    chainBatches.foreach { b =>
+    chainBatches.foldLeft(new DeltaGraph(chainBaseEdges(s, dir))) { (g, b) =>
       val queries = emb.filter($"vec_id".isin(b: _*))
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      val changes = bulkMergeDelta(s, graphNow, vecs, queries, beamEntries)
-      delta = delta
-        .join(broadcast(changes.select($"src").distinct()), Seq("src"),
-          "left_anti")
-        .unionByName(changes)
-        .localCheckpoint() // bounded: sum of the batches' merge deltas
-      touched = delta.select($"src").distinct()
-    }
-    graphNow
+      val changes = bulkMergeDelta(s, g.now, vecs, queries, beamEntries)
+      g(changes, changes.select($"src").distinct())
+    }.now
   }
 
   /** s45's delete batch: vectors taken down from the FULL serving
@@ -4621,11 +4391,8 @@ object SimilarityQueries {
       .select($"src", $"dst", $"gcos")
   }
 
-  private val deletedGraphCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** The s45 DELETE LIFECYCLE store, corpus-keyed (the beamGraphCache
-    * convention): a copy of the full serving graph taken through the
+  /** The s45 DELETE LIFECYCLE store, memoized per corpus: a copy of
+    * the full serving graph taken through the
     * dx23 tombstone delete + [[deleteRepairBuild]]'s repair append.
     * Storage semantics, asserted at build time:
     *  - ONE `softDelete` masks every edge incident to [[deleteBatch]]
@@ -4641,33 +4408,24 @@ object SimilarityQueries {
   private[graft] def deletedRepairedStore(s: SparkSession, dir: String)
       : graft.storage.FactTable = {
     import s.implicits._
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val root = deletedGraphCache.synchronized {
-      deletedGraphCache.get(dir).filter(live).getOrElse {
-        val r = graft.TempDirs.scratch(
-          "s45_del_" + Integer.toHexString(dir.hashCode))
-        val t = new graft.storage.FactTable(r, s)
-        val dt = to_date(lit("2024-01-01"))
-        t.append(servingGraph(s, dir).withColumn("date", dt), 0)
-        // repair reads the PRE-delete graph (FreshDiskANN's lazy-delete
-        // consolidation uses the deleted nodes' out-lists); pinned so
-        // its store reads happen-before the tombstone commits
-        val repaired = deleteRepairBuild(s, dir).localCheckpoint()
-        val touchedIds = repaired.select($"src").distinct()
-          .as[Long].collect().sorted // bounded delete ledger (d41)
-        val partsBefore = t.snapshot().dataFiles.map(_.path).toSet
-        val nDel = t.softDelete(
-          $"src".isin(deleteBatch: _*) || $"dst".isin(deleteBatch: _*) ||
-            $"src".isin(touchedIds: _*), Seq("src", "dst"))
-        require(nDel > 0, "graph delete tombstoned nothing")
-        require(t.snapshot().dataFiles.map(_.path).toSet == partsBefore,
-          "graph delete rewrote parts — tombstones must be O(keys)")
-        t.append(repaired.withColumn("date", dt), 1)
-        deletedGraphCache.put(dir, r)
-        r
-      }
+    val root = graft.TempDirs.store("s45_del", dir) { r =>
+      val t = new graft.storage.FactTable(r, s)
+      val dt = to_date(lit("2024-01-01"))
+      t.append(servingGraph(s, dir).withColumn("date", dt), 0)
+      // repair reads the PRE-delete graph (FreshDiskANN's lazy-delete
+      // consolidation uses the deleted nodes' out-lists); pinned so
+      // its store reads happen-before the tombstone commits
+      val repaired = deleteRepairBuild(s, dir).localCheckpoint()
+      val touchedIds = repaired.select($"src").distinct()
+        .as[Long].collect().sorted // bounded delete ledger (d41)
+      val partsBefore = t.snapshot().dataFiles.map(_.path).toSet
+      val nDel = t.softDelete(
+        $"src".isin(deleteBatch: _*) || $"dst".isin(deleteBatch: _*) ||
+          $"src".isin(touchedIds: _*), Seq("src", "dst"))
+      require(nDel > 0, "graph delete tombstoned nothing")
+      require(t.snapshot().dataFiles.map(_.path).toSet == partsBefore,
+        "graph delete rewrote parts — tombstones must be O(keys)")
+      t.append(repaired.withColumn("date", dt), 1)
     }
     new graft.storage.FactTable(root, s)
   }
@@ -4774,49 +4532,40 @@ object SimilarityQueries {
         $steps"""
   }
 
-  private val batchStoreCache =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
-  /** Build (or reuse — corpus-keyed, bench-hygiene) the stored IVF batch
-    * index pair: (index table: vec_id, cid, embedding; centroid table).
+  /** The stored IVF batch index pair, memoized per corpus (bench
+    * hygiene): (index table: vec_id, cid, embedding; centroid table).
     * Shared by s31/s32/s33's batch serving and s34's filtered serving.
+    * The build is a deterministic function of the corpus alone (qids
+    * only steer the probe side), so s31/s32/s33 — and both timed bench
+    * runs of each — share one materialization instead of six (the q84
+    * idempotent-layout precedent; a vector store's index build is the
+    * offline step its serving queries exist to amortize).
     */
   private def storedIvfStores(s: SparkSession, dir: String)
       : (graft.storage.FactTable, graft.storage.FactTable) = {
     import s.implicits._
-    val emb = Tables.load(s, dir, "embeddings")
-    val cents = emb.filter($"vec_id" < 8)
+    lazy val emb = Tables.load(s, dir, "embeddings")
+    def cents = emb.filter($"vec_id" < 8)
       .select($"vec_id".as("cid"), $"embedding".as("cv"))
-    val dt = to_date(lit("2024-01-01"))
-    // scratch keys carry the corpus dir: the cache is per-dir, so a
-    // multi-corpus JVM (ScaleBench's x1/x10/x100 loop) must not have
-    // dir B's build reap dir A's still-cached store
-    def tmp(p: String) =
-      graft.TempDirs.scratch(p + "_" + Integer.toHexString(dir.hashCode))
-    def live(root: String) =
-      new java.io.File(root, "_graft_log").listFiles() != null &&
-        new java.io.File(root, "_graft_log").listFiles().nonEmpty
-    val (idxRoot, centRoot) = batchStoreCache.synchronized {
-      batchStoreCache.get(dir).filter { case (a, b) => live(a) && live(b) }
-        .getOrElse {
-          val w = Window.partitionBy($"vec_id").orderBy($"dist2".asc, $"cid".asc)
-          val assigned = emb.crossJoin(broadcast(cents))
-            .select($"vec_id", $"embedding", $"cid",
-              round(l2SqExact("embedding", "cv"), 9).as("dist2"))
-            .withColumn("rk", row_number().over(w)).filter($"rk" === 1)
-            .select($"vec_id", $"cid", $"embedding")
-          val ir = tmp("ivfbatch_idx"); val cr = tmp("ivfbatch_cent")
-          new graft.storage.FactTable(ir, s)
-            .append(assigned.withColumn("date", dt), 0)
-          new graft.storage.FactTable(cr, s)
-            .append(cents.withColumn("date", dt), 0)
-          batchStoreCache.put(dir, (ir, cr))
-          (ir, cr)
-        }
+    val idx = factStore(s, "ivfbatch_idx", dir) {
+      val w = Window.partitionBy($"vec_id").orderBy($"dist2".asc, $"cid".asc)
+      emb.crossJoin(broadcast(cents))
+        .select($"vec_id", $"embedding", $"cid",
+          round(l2SqExact("embedding", "cv"), 9).as("dist2"))
+        .withColumn("rk", row_number().over(w)).filter($"rk" === 1)
+        .select($"vec_id", $"cid", $"embedding")
     }
-    (new graft.storage.FactTable(idxRoot, s),
-      new graft.storage.FactTable(centRoot, s))
+    (idx, factStore(s, "ivfbatch_cent", dir)(cents))
   }
+
+  /** s31's stored-index batch ranking as a reusable builder (shared with
+    * s32): builds the bucket-tagged index + centroid FactTable stores,
+    * then ranks every probed-bucket vector per query — returns
+    * (qid, vec_id, cosine, srk) UNLIMITED; callers cut at their k. The
+    * query set reads from the store itself; probe selection is a
+    * WindowGroupLimit over nlist×nqueries rows; the (qid, bucket, qv)
+    * triples broadcast into the store.
+    */
 
   private def storedIvfBatchRank(s: SparkSession, dir: String,
       qids: Seq[Long], tag: String): DataFrame = {

@@ -71,7 +71,7 @@ class JdbcBatchSink(url: String, table: String,
       try { st.setLong(1, batchId); st.executeUpdate() }
       finally st.close()
     } catch {
-      case e: java.sql.SQLException if !tableExists(conn) => // first batch
+      case _: java.sql.SQLException if !tableExists(conn) => // first batch
       case e: java.sql.SQLException => throw e
     } finally conn.close()
   }

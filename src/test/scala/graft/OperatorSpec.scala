@@ -2260,4 +2260,61 @@ class OperatorSpec extends AnyFunSuite {
       s"insert-maintained descent diverged from the rebuild:\n" +
         s"insert=$viaInsert\nrebuild=$rebuild")
   }
+
+  test("graph store memo keys on every build input: a one-vector batch never reuses the four-vector base") {
+    // the s41 base store excludes the insert batch; the same tag built
+    // for a different batch must be a different store, not a reuse of
+    // whichever exclude set happened to build first
+    val SQ = operators.SimilarityQueries
+    def edges(df: org.apache.spark.sql.DataFrame) = df
+      .select($"src", $"dst", $"gcos").as[(Long, Long, Double)]
+      .collect().toSet
+    SQ.hnswInsertedGraphBuild(spark, sfDir)
+    val sameTag = edges(SQ.hnswInsertedGraphBuild(spark, sfDir,
+      batch = Seq(11L)))
+    val freshTag = edges(SQ.hnswInsertedGraphBuild(spark, sfDir,
+      batch = Seq(11L), baseTag = "s41_memo_probe"))
+    val (onlySame, onlyFresh) = (sameTag -- freshTag, freshTag -- sameTag)
+    assert(onlySame.isEmpty && onlyFresh.isEmpty,
+      s"batch-of-1 insert read a stale base store: " +
+        s"${onlySame.size} edges only under the shared tag, " +
+        s"${onlyFresh.size} only under a fresh tag")
+  }
+
+  test("store memo: a warm call reuses its root with no Spark job; a reaped root rebuilds identically") {
+    import graft.storage.FactTable
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def store(inputs: Any*): String =
+      TempDirs.store("memo_probe", sfDir +: inputs: _*) { r =>
+        builds.incrementAndGet()
+        new FactTable(r, spark).append(
+          spark.read.parquet(s"$sfDir/embeddings.parquet")
+            .select($"vec_id", $"label")
+            .withColumn("date", to_date(lit("2024-01-01"))), 0)
+      }
+    def rows(root: String) = new FactTable(root, spark).read()
+      .select($"vec_id", $"label").orderBy($"vec_id").collect().toSeq
+    val root = store()
+    val before = rows(root)
+    val (again, jobs) = TestSpark.jobsDuring(store())
+    assert(again == root, "a warm call did not reuse the memoized root")
+    assert(jobs == 0, s"a warm call started $jobs Spark jobs")
+    assert(builds.get == 1)
+    // another key under the same tag is another store, and building it
+    // leaves the first one live
+    val other = store("other")
+    assert(other != root && builds.get == 2)
+    assert(store() == root, "a second key reaped the first key's store")
+    // reap the root behind the memo's back (tmp cleanup)
+    val dir = new java.io.File(root)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    }
+    rm(dir)
+    assert(!dir.exists())
+    val rebuilt = store()
+    assert(builds.get == 3, "a reaped store was not rebuilt")
+    assert(rebuilt != root && new java.io.File(rebuilt).exists())
+    assert(rows(rebuilt) == before, "the rebuilt store's rows differ")
+  }
 }

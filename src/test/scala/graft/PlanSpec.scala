@@ -558,7 +558,7 @@ class PlanSpec extends AnyFunSuite {
     // the base layer's edge list comes from s38's shared persisted
     // store and appears as a scan location in the SERVED plan; the
     // upper layer's store read is truncated out of the served lineage
-    // by the beam pin (per-round localCheckpoint in beamOverQ), so it
+    // by the beam pin (per-round localCheckpoint in beam), so it
     // is locked on the exposed upper-descent plan below — same pattern
     // as the s41 hnswInsertedGraphBuild probe
     assert(p.contains("s38_graph"), s"base layer not served from the shared store:\n$p")
