@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMeta
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** A minimal transaction-logged parquet table — the Spark-side analog of
   * the reference's MergeTree storage model (tables.sql:30): append-only
@@ -64,8 +65,8 @@ import org.apache.spark.sql.types._
   *
   * At cluster scale the same design is what Delta/Iceberg do (with
   * manifests and checkpoints on top).
-  */
-/** @param bloomCols columns to index with a per-part Bloom skip index
+  *
+  * @param bloomCols columns to index with a per-part Bloom skip index
   *   (the ClickHouse `bloom_filter` secondary-index analog): every part
   *   written through this table gets a `<part>.bloom.<col>` sidecar
   *   (fpp 1%), and `readWhere`/`pruneReport` consult it for top-level
@@ -76,8 +77,8 @@ import org.apache.spark.sql.types._
   *   string columns are supported; sidecars live next to the data (not
   *   in the log), so log replay stays O(files) and a 100 TB table's
   *   blooms are distributed storage, loaded lazily per pruned read.
-  */
-/** @param projections named, stored GROUP BY rollups maintained per part
+  *
+  * @param projections named, stored GROUP BY rollups maintained per part
   *   (the ClickHouse `ADD PROJECTION` analog, at CH's own granularity:
   *   each part carries its own mini-rollup in a `<part>.proj.<name>`
   *   sidecar, written when the part is staged). A projection read unions
@@ -88,8 +89,8 @@ import org.apache.spark.sql.types._
   *   sidecars for the parts they stage and the removed parts' sidecars
   *   die with them at vacuum. At 100 TB a rollup query touches
   *   O(parts × groups-per-part) sidecar rows and never the base data.
-  */
-/** @param tokenBloomCols text columns to index with a per-part TOKEN
+  *
+  * @param tokenBloomCols text columns to index with a per-part TOKEN
   *   Bloom skip index (the ClickHouse `tokenbf_v1` secondary-index
   *   analog): every part gets a fixed-size `<part>.tokbf.<col>` sidecar
   *   holding a Bloom filter over the column's alphanumeric tokens
@@ -102,8 +103,8 @@ import org.apache.spark.sql.types._
   *   (fixed-size partial filters merge map-side — the same move Delta
   *   makes collecting per-file stats from the write tasks), not one
   *   driver job per part.
-  */
-/** @param arrayBloomCols ARRAY columns to index with a per-part
+  *
+  * @param arrayBloomCols ARRAY columns to index with a per-part
   *   element-level Bloom skip index (the ClickHouse `bloom_filter`
   *   secondary index on an `Array(T)` column, probed by `has(arr, v)`):
   *   every part gets a `<part>.abloom.<col>` sidecar — one leading
@@ -460,15 +461,6 @@ class FactTable(val root: String, spark: SparkSession,
     */
   protected def beforeCommit(): Unit = ()
 
-  /** Optimistic-concurrency commit (the Delta/Iceberg protocol): try to
-    * claim the next log version; if another writer got there first,
-    * re-read the log head, re-validate this transaction's preconditions
-    * against the fresh snapshot, and retry at the new head. Returns false
-    * if `revalidate` reports the transaction is obsolete (e.g. its txn id
-    * was committed by the other writer, or its source files were removed)
-    * — the caller then abandons or restarts. Rename-based version claims
-    * make the winner unambiguous on any filesystem with atomic rename.
-    */
   /** Rewrite-vs-delete conflict rule: a rewrite staged its output by
     * reading through the tombstone mask AS OF its snapshot. If the live
     * tombstone set changes before the rewrite commits (a concurrent
@@ -488,6 +480,15 @@ class FactTable(val root: String, spark: SparkSession,
     parts.forall(p => live(p.path))
   }
 
+  /** Optimistic-concurrency commit (the Delta/Iceberg protocol): try to
+    * claim the next log version; if another writer got there first,
+    * re-read the log head, re-validate this transaction's preconditions
+    * against the fresh snapshot, and retry at the new head. Returns false
+    * if `revalidate` reports the transaction is obsolete (e.g. its txn id
+    * was committed by the other writer, or its source files were removed)
+    * — the caller then abandons or restarts. Rename-based version claims
+    * make the winner unambiguous on any filesystem with atomic rename.
+    */
   private def commitWithRetry(snap: Snapshot, txn: Option[Long],
       adds: Seq[FileEntry], removes: Seq[String],
       written: Option[StructType] = None)(
@@ -718,32 +719,13 @@ class FactTable(val root: String, spark: SparkSession,
     val victims = expired.filter(p =>
       fs.makeQualified(new Path(p)).toString.startsWith(rootQ))
     victims.foreach { p =>
-      // bloom sidecars live next to the data, outside the log — reclaim
-      // them (and their lazy-loaded cache entries) with their part, or a
-      // bloom-indexed table leaks one orphan per indexed column per
+      // skip-index sidecars live next to the data, outside the log —
+      // reclaim them (and their lazy-loaded cache entries) with their
+      // part, or an indexed table leaks one orphan per index per
       // rewritten part forever
-      bloomCols.foreach { c =>
-        fs.delete(new Path(p + ".bloom." + c), false)
-        bloomCache.remove(p + ".bloom." + c)
-      }
-      // set skip-index sidecars: same lifecycle as the blooms
-      setIndexCols.foreach { c =>
-        fs.delete(new Path(p + ".set." + c), false)
-        setCache.remove(p + ".set." + c)
-      }
-      // array-element bloom sidecars: same lifecycle as the blooms
-      arrayBloomCols.foreach { c =>
-        fs.delete(new Path(p + ".abloom." + c), false)
-        arrayBloomCache.remove(p + ".abloom." + c)
-      }
-      // token/ngram-bloom skip-index sidecars: same lifecycle as the blooms
-      tokenBloomCols.foreach { c =>
-        fs.delete(new Path(p + ".tokbf." + c), false)
-        tokenBloomCache.remove(p + ".tokbf." + c)
-      }
-      ngramBloomCols.foreach { c =>
-        fs.delete(new Path(p + ".ngbf." + c), false)
-        tokenBloomCache.remove(p + ".ngbf." + c)
+      indexes.foreach { ix =>
+        fs.delete(new Path(ix.sidecar(p)), false)
+        sidecars.remove(ix.sidecar(p))
       }
       // projection sidecars are parquet DIRECTORIES — recursive delete
       projections.foreach(s => fs.delete(new Path(p + ".proj." + s.name), true))
@@ -752,6 +734,25 @@ class FactTable(val root: String, spark: SparkSession,
       victimsCache.remove(p)
     }
     victims.count(p => fs.delete(new Path(p), false))
+  }
+
+  /** True iff the part is ENTIRELY before `cutoff` on `partitionCol`
+    * (by partition directory value, else by footer max stat) — shared
+    * by `ttlExpire` (drop) and `ttlRollup` (downsample). Conservative:
+    * a part with neither signal is never expired.
+    */
+  private def expiredEntry(f: FileEntry, cutoff: String,
+      partitionCol: String): Boolean = {
+    val pat = ("/" + java.util.regex.Pattern.quote(partitionCol) + "=([^/]+)/").r
+    val cutoffDays = java.time.LocalDate.parse(cutoff).toEpochDay
+    def statExpired(cs: StatsPruning.ColStats): Boolean = cs.typ match {
+      case "long" => scala.util.Try(cs.max.toLong).toOption.exists(_ < cutoffDays)
+      case "string" => cs.max < cutoff
+      case _ => false
+    }
+    pat.findFirstMatchIn(f.path).map(_.group(1) < cutoff)
+      .orElse(f.stats.get(partitionCol).map(statExpired))
+      .getOrElse(false)
   }
 
   /** TTL retention (the ClickHouse `TTL <col> ... DELETE` analog,
@@ -776,25 +777,6 @@ class FactTable(val root: String, spark: SparkSession,
     * working until the vacuum horizon passes. This is the cheapest
     * possible retention mechanism for a 100 TB time-partitioned table.
     */
-  /** True iff the part is ENTIRELY before `cutoff` on `partitionCol`
-    * (by partition directory value, else by footer max stat) — shared
-    * by `ttlExpire` (drop) and `ttlRollup` (downsample). Conservative:
-    * a part with neither signal is never expired.
-    */
-  private def expiredEntry(f: FileEntry, cutoff: String,
-      partitionCol: String): Boolean = {
-    val pat = ("/" + java.util.regex.Pattern.quote(partitionCol) + "=([^/]+)/").r
-    val cutoffDays = java.time.LocalDate.parse(cutoff).toEpochDay
-    def statExpired(cs: StatsPruning.ColStats): Boolean = cs.typ match {
-      case "long" => scala.util.Try(cs.max.toLong).toOption.exists(_ < cutoffDays)
-      case "string" => cs.max < cutoff
-      case _ => false
-    }
-    pat.findFirstMatchIn(f.path).map(_.group(1) < cutoff)
-      .orElse(f.stats.get(partitionCol).map(statExpired))
-      .getOrElse(false)
-  }
-
   def ttlExpire(cutoff: String, partitionCol: String = "date"): Int =
     restarting { snap =>
       val victims = snap.dataFiles.filter(expiredEntry(_, cutoff, partitionCol))
@@ -1084,9 +1066,7 @@ class FactTable(val root: String, spark: SparkSession,
     */
   def deleteWhere(cond: org.apache.spark.sql.Column,
       partitionCol: String = "date"): Long = restarting { snap =>
-    val victims = snap.dataFiles.filterNot(f =>
-      StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
-        setPruned(cond, f) || tokenBloomPruned(cond, f))
+    val victims = candidates(cond, snap.dataFiles)
     if (victims.isEmpty) Some(0L)
     else {
       val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
@@ -1276,11 +1256,9 @@ class FactTable(val root: String, spark: SparkSession,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "softDelete needs at least one key column")
     restarting { snap =>
-      // stats+bloom pruning scopes the tombstone: parts that provably hold
-      // no matching row are never masked (and never rewritten later)
-      val victims = snap.dataFiles.filterNot(f =>
-        StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
-          setPruned(cond, f) || tokenBloomPruned(cond, f))
+      // stats+sidecar pruning scopes the tombstone: parts that provably
+      // hold no matching row are never masked (and never rewritten later)
+      val victims = candidates(cond, snap.dataFiles)
       if (victims.isEmpty) Some(0L)
       else {
         val target = new Path(dataDir, s"tomb-${java.util.UUID.randomUUID()}")
@@ -1293,8 +1271,7 @@ class FactTable(val root: String, spark: SparkSession,
           val node = mapper.createObjectNode()
           val arr = node.putArray("victims")
           victims.foreach(v => arr.add(v.path))
-          val out = fs.create(new Path(f.path + VictimsSuffix), true)
-          try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+          writeSidecar(f.path + VictimsSuffix, mapper.writeValueAsBytes(node))
         }
         beforeCommit()
         val adds = entriesFor(target, TierTomb, keys.schema)
@@ -1412,15 +1389,10 @@ class FactTable(val root: String, spark: SparkSession,
     * StatsPruning). The condition is still applied in full to the
     * surviving files, so results are identical to `read().where(cond)`.
     */
-  def readWhere(cond: org.apache.spark.sql.Column,
-      asOfVersion: Long = Long.MaxValue): DataFrame = {
+  def readWhere(cond: Column, asOfVersion: Long = Long.MaxValue): DataFrame = {
     val snap = snapshot(asOfVersion)
     val all = snap.dataFiles
-    prefetchGramBlooms(all)
-    val kept = all.filterNot(f =>
-      StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
-        setPruned(cond, f) || tokenBloomPruned(cond, f) ||
-        arrayBloomPruned(cond, f))
+    val kept = candidates(cond, all)
     if (kept.nonEmpty) masked(kept, snap).where(cond)
     else if (all.isEmpty) throw new IllegalStateException(s"empty table at $root")
     else spark.createDataFrame(java.util.List.of[Row](), schemaOf(snap))
@@ -1428,17 +1400,12 @@ class FactTable(val root: String, spark: SparkSession,
 
   /** (surviving files, total files) for `cond` — the observability hook
     * pruning-effectiveness tests assert on. Counts both min/max-stat
-    * and Bloom-sidecar pruning, matching `readWhere`.
+    * and skip-index pruning, matching `readWhere`.
     */
-  def pruneReport(cond: org.apache.spark.sql.Column,
+  def pruneReport(cond: Column,
       asOfVersion: Long = Long.MaxValue): (Int, Int) = {
     val files = snapshot(asOfVersion).dataFiles
-    prefetchGramBlooms(files)
-    (files.count(f =>
-      !StatsPruning.canPrune(cond, f.stats) && !bloomPruned(cond, f) &&
-        !setPruned(cond, f) && !tokenBloomPruned(cond, f) &&
-        !arrayBloomPruned(cond, f)),
-      files.size)
+    (candidates(cond, files).size, files.size)
   }
 
   /** One file scan per partition layout over `files`, read with
@@ -1533,21 +1500,6 @@ class FactTable(val root: String, spark: SparkSession,
     finally pool.shutdown()
   }
 
-  /** Warm the token/ngram-bloom sidecar caches for `files` in parallel:
-    * pruneReport/readWhere/fpp consult the sidecars file by file, and a
-    * cold cache would pay hundreds of serial small reads (measured ~1 s
-    * at 313 parts in dx32/dx33).
-    */
-  private def prefetchGramBlooms(files: Seq[FileEntry]): Unit = {
-    val wanted =
-      tokenBloomCols.map(c => (c, ".tokbf.")) ++
-        ngramBloomCols.map(c => (c, ".ngbf."))
-    if (wanted.isEmpty) return
-    onIoPool(for (f <- files; (c, suf) <- wanted) yield (f.path, c, suf)) {
-      case (p, c, suf) => tokenBloomOf(p, c, suf)
-    }
-  }
-
   private case class RawFile(path: String, bytes: Long)
 
   /** Recursive parquet listing via plain listStatus walks: the
@@ -1576,17 +1528,14 @@ class FactTable(val root: String, spark: SparkSession,
   private def entriesFor(dir: Path, tier: String,
       schema: StructType): Seq[FileEntry] = {
     val now = System.currentTimeMillis()
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_FACT_TIMING"))
-        System.err.println(f"[fact] $what +${(System.nanoTime() - t0) / 1e9}%.3fs")
     val files = listParquet(dir)
-    mark(s"listParquet n=${files.size}")
     val read = nullable(schema).asInstanceOf[StructType]
     // key tombstones are not data parts: no sidecars
-    val perPart = tier != TierTomb && (bloomCols.nonEmpty ||
-      setIndexCols.nonEmpty || arrayBloomCols.nonEmpty || projections.nonEmpty)
-    val grams = tier != TierTomb && (tokenBloomCols.nonEmpty || ngramBloomCols.nonEmpty)
+    val data = tier != TierTomb
+    val ixs = if (data) indexes else Nil
+    val partIx = ixs.collect { case ix @ SkipIndex(_, f: PartFamily) => ix -> f }
+    val gramIx = ixs.collect { case ix @ SkipIndex(_, f: GramFamily) => ix -> f }
+    val perPart = partIx.nonEmpty || (data && projections.nonEmpty)
     val entries = new Array[FileEntry](files.size)
     // A rewrite that stages hundreds of parts would otherwise serialize
     // hundreds of footer round-trips on the driver (the same reason Delta
@@ -1598,352 +1547,111 @@ class FactTable(val root: String, spark: SparkSession,
       val e = FileEntry(f.path, rows, f.bytes, tier, now, stats)
       if (perPart) {
         val part = readFiles(Seq(e), read)
-        bloomCols.foreach(c => writeBloomSidecar(f.path, part, c, rows))
-        setIndexCols.foreach(c => writeSetSidecar(f.path, part, c))
-        arrayBloomCols.foreach(c => writeArrayBloomSidecar(f.path, part, c, rows))
+        partIx.foreach { case (ix, family) =>
+          // schema evolution: a part without the column gets no sidecar
+          if (part.columns.contains(ix.col))
+            family.build(part, ix.col, rows).foreach(writeSidecar(ix.sidecar(f.path), _))
+        }
         projections.foreach(p => writeProjSidecar(f.path, part, p))
       }
       entries(i) = e
     }
-    mark("footers+sidecars")
-    // token blooms are built in ONE distributed job over the whole
+    // token/n-gram blooms are built in ONE distributed job over the whole
     // staged generation (per indexed column), not per part — fixed-size
     // partial filters combine map-side, so a commit staging thousands
     // of parts costs one shuffle of #parts × bloom-size, never
     // thousands of driver-coordinated jobs
-    if (grams && entries.nonEmpty)
-      writeTokenBloomSidecars(readFiles(entries.toSeq, read), entries.map(_.path).toSeq)
-    mark("gramBlooms")
+    if (gramIx.nonEmpty && entries.nonEmpty)
+      writeGramSidecars(readFiles(entries.toSeq, read), entries.map(_.path).toSeq, gramIx)
     entries.toSeq
   }
 
-  // ------------------------------------------------- bloom skip index
+  // ------------------------------------------------------- skip indexes
 
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap[String,
-      Option[org.apache.spark.util.sketch.BloomFilter]]()
+  /** The table's skip indexes: one per indexed column and family. */
+  private val indexes: Seq[SkipIndex] =
+    bloomCols.map(SkipIndex(_, BloomIndex)) ++
+      setIndexCols.map(SkipIndex(_, SetIndex)) ++
+      tokenBloomCols.map(SkipIndex(_, TokenIndex)) ++
+      ngramBloomCols.map(SkipIndex(_, NgramIndex)) ++
+      arrayBloomCols.map(SkipIndex(_, ArrayBloomIndex))
 
-  private def writeBloomSidecar(part: String, df: DataFrame, c: String,
-      rows: Long): Unit = {
-    if (!df.columns.contains(c)) return // schema evolution: column absent
-    val bf = df.stat.bloomFilter(c, math.max(rows, 1L), 0.01)
-    val out = fs.create(new Path(part + ".bloom." + c), true)
-    try bf.writeTo(out) finally out.close()
+  /** Every loaded sidecar, keyed by its path (None: the part has none,
+    * e.g. a legacy part or a set over too many distinct values).
+    */
+  private val sidecars = scala.collection.concurrent.TrieMap[String, Option[Sidecar]]()
+
+  private def sidecarOf(ix: SkipIndex, part: String): Option[Sidecar] =
+    sidecars.getOrElseUpdate(ix.sidecar(part), try {
+      val in = fs.open(new Path(ix.sidecar(part)))
+      try Some(ix.family.decode(in)) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None })
+
+  private def writeSidecar(path: String, bytes: Array[Byte]): Unit = {
+    val out = fs.create(new Path(path), true)
+    try out.write(bytes) finally out.close()
   }
 
-  private def bloomOf(part: String, c: String) =
-    bloomCache.getOrElseUpdate(part + ".bloom." + c, {
-      val p = new Path(part + ".bloom." + c)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-        finally in.close()
-      }
-    })
-
-  /** True iff some `col = v` conjunct of `cond` over an indexed column
-    * is PROVEN absent from the part by its Bloom sidecar. Conservative:
-    * missing sidecar / non-equality predicates never prune; a Bloom
-    * "maybe" keeps the file (false positives cost a read, never a row).
-    * The probe value's JVM type must match the indexed column's stat
-    * type (mirroring StatsPruning.toCmp): a type-mismatched probe such
-    * as `$"user_id" === "42"` — which Spark's analyzer coerces so real
-    * rows DO match — would call mightContainString against a long-built
-    * bloom and always report absent, wrongly pruning live rows.
+  /** The parts of `files` that may hold a row matching `cond`: a part is
+    * left out when its log stats disprove `cond` (StatsPruning), or when
+    * the sidecar of one of its skip indexes proves every value of a probe
+    * absent. Each index's probes are taken from `cond` once, and the
+    * sidecars they need are loaded first, in parallel; a table without
+    * skip indexes opens no sidecar. Reads, `pruneReport`, `deleteWhere`,
+    * `softDelete` and the SQL surface (GraftRelation) all prune here.
     */
-  private def bloomPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean =
-    bloomCols.nonEmpty && StatsPruning.equalityProbes(cond).exists {
-      case (attr, v) => bloomCols.contains(attr) &&
-        probeMatchesStatType(f, attr, v) &&
-        bloomOf(f.path, attr).exists(bf =>
-          scala.util.Try(!bf.mightContain(v)).getOrElse(false))
-    }
-
-  // ------------------------------------- array-element bloom skip index
-
-  private val arrayBloomCache =
-    scala.collection.concurrent.TrieMap[String,
-      Option[(Byte, org.apache.spark.util.sketch.BloomFilter)]]()
-
-  /** `<part>.abloom.<col>`: 1 type-tag byte ('S' string / 'L' integral)
-    * + a Bloom filter over the part's exploded array elements. The tag
-    * is what keeps pruning SOUND: BloomFilter hashes longs and strings
-    * differently, so probing a string-built bloom with a long always
-    * answers "absent" — without the tag that would wrongly prune live
-    * parts on a type-coerced predicate.
-    *
-    * Sized from the part's KNOWN row count (footer) × a fixed
-    * elements-per-row hint instead of an exact element count — the
-    * count would cost a second Spark job per (part, column)
-    * (`writeBloomSidecar`'s rows-reuse discipline). Mis-sizing only
-    * moves the false-positive rate, never soundness: overestimating
-    * lowers fpp; rows with > 8 elements on average raise it, costing
-    * extra reads, never lost rows.
-    */
-  private val ArrayBloomElemsPerRowHint = 8L
-
-  private def writeArrayBloomSidecar(part: String, df: DataFrame, c: String,
-      rows: Long): Unit = {
-    if (!df.columns.contains(c)) return // schema evolution: column absent
-    import org.apache.spark.sql.types._
-    val tag: Byte = df.schema(c).dataType match {
-      case ArrayType(StringType, _) => 'S'
-      case ArrayType(LongType | IntegerType | ShortType | ByteType, _) => 'L'
-      case _ => return // other element types: no sidecar, never prune
-    }
-    val el = df.select(explode(col(c)).as("__e")).na.drop()
-    val bf = el.stat.bloomFilter("__e",
-      math.max(rows * ArrayBloomElemsPerRowHint, 1L), 0.01)
-    val out = fs.create(new Path(part + ".abloom." + c), true)
-    try { out.write(tag.toInt); bf.writeTo(out) } finally out.close()
+  private[storage] def candidates(cond: Column,
+      files: Seq[FileEntry]): Seq[FileEntry] = {
+    val probes = indexes.flatMap(ix => ix.probes(cond).map(ix -> _))
+    prefetch(files, probes.map(_._1).distinct)
+    files.filterNot(f => StatsPruning.canPrune(cond, f.stats) ||
+      probes.exists { case (ix, vs) => sidecarOf(ix, f.path).exists(ix.prunes(f, vs, _)) })
   }
 
-  private def arrayBloomOf(part: String, c: String) =
-    arrayBloomCache.getOrElseUpdate(part + ".abloom." + c, {
-      val p = new Path(part + ".abloom." + c)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val tag = in.read().toByte
-          Some((tag, org.apache.spark.util.sketch.BloomFilter.readFrom(in)))
-        } finally in.close()
-      }
-    })
-
-  /** True iff some `array_contains(col, v)` conjunct over an indexed
-    * array column is proven element-absent by the part's sidecar. Same
-    * conservatism as the scalar bloom; additionally the probe's JVM
-    * type must match the sidecar's element-type tag.
+  /** Load the sidecars of `ixs` for `files` in parallel: pruning
+    * consults them file by file, and a cold cache would pay hundreds of
+    * serial small reads (measured ~1 s at 313 parts in dx32/dx33).
     */
-  private def arrayBloomPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean =
-    arrayBloomCols.nonEmpty &&
-      StatsPruning.arrayContainsProbes(cond).exists { case (attr, v) =>
-        arrayBloomCols.contains(attr) && {
-          val tagOk = v match {
-            case _: String => 'S'
-            case _: Long | _: Int | _: Short | _: Byte => 'L'
-            case _ => '?'
-          }
-          arrayBloomOf(f.path, attr).exists { case (tag, bf) =>
-            tag == tagOk &&
-              scala.util.Try(!bf.mightContain(v)).getOrElse(false)
-          }
-        }
-      }
+  private def prefetch(files: Seq[FileEntry], ixs: Seq[SkipIndex]): Unit =
+    if (ixs.nonEmpty)
+      onIoPool(for (f <- files; ix <- ixs if !sidecars.contains(ix.sidecar(f.path)))
+        yield ix -> f.path) { case (ix, p) => sidecarOf(ix, p) }
 
-  // ------------------------------------------------- set skip index
-
-  /** ClickHouse `set(N)` secondary-index analog: a part whose indexed
-    * column holds ≤ N distinct values gets a `<part>.set.<col>` sidecar
-    * listing them EXACTLY — a point/equality predicate then skips the
-    * part iff its value is absent, with NO false-positive rate (unlike
-    * the bloom) and real power on low-cardinality columns whose values
-    * interleave across every part (where [min,max] spans the domain and
-    * can never prune). A part exceeding N distinct values writes no
-    * sidecar; absence always means "cannot prune". Only integral and
-    * string columns are indexed (the types `equalityProbes` can match
-    * safely); NULL never matches an equality probe, so nulls are
-    * excluded from the set.
+  /** One distributed pass per gram index writes every staged part's
+    * sidecar: turn the indexed column into grams, group by source file,
+    * OR the fixed-size partial filters together (map-side combine keeps
+    * the shuffle at #parts × 8 KiB regardless of row count), then write
+    * one `<part><suffix><col>` per part. `df` scans exactly the staged
+    * `parts`. A part contributing no grams (all NULL/empty, or the column
+    * physically absent from the file — its rows read back as NULL, which
+    * no token predicate matches) gets an EMPTY bloom, which correctly
+    * proves every gram absent; a MISSING sidecar stays reserved for
+    * "legacy part, cannot prune".
     */
-  private val MaxSetSize = 64
-
-  private val setCache =
-    scala.collection.concurrent.TrieMap[String, Option[(String, Set[String])]]()
-
-  private def writeSetSidecar(part: String, df: DataFrame, c: String): Unit = {
-    if (!df.columns.contains(c)) return // schema evolution: column absent
-    import org.apache.spark.sql.types._
-    val tag = df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => "long"
-      case StringType => "string"
-      case _ => return // other types: no sidecar, never prune
-    }
-    val vals = df.select(col(c)).na.drop().distinct()
-      .limit(MaxSetSize + 1).collect().map(_.get(0).toString)
-    if (vals.length > MaxSetSize) return // high cardinality: not indexable
-    val m = new ObjectMapper()
-    val node = m.createObjectNode()
-    node.put("t", tag)
-    val arr = node.putArray("v")
-    vals.sorted.foreach(arr.add)
-    val out = fs.create(new Path(part + ".set." + c), true)
-    try out.write(m.writeValueAsBytes(node)) finally out.close()
-  }
-
-  private def setOf(part: String, c: String): Option[(String, Set[String])] =
-    setCache.getOrElseUpdate(part + ".set." + c, {
-      val p = new Path(part + ".set." + c)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val node = new ObjectMapper().readTree(in)
-          val b = Set.newBuilder[String]
-          node.get("v").forEach(v => b += v.asText())
-          Some((node.get("t").asText(), b.result()))
-        } finally in.close()
-      }
-    })
-
-  /** True iff some `col = v` conjunct of `cond` over a set-indexed
-    * column is PROVEN absent from the part by its exact value set.
-    * Conservative: missing sidecar / non-equality predicates never
-    * prune, and the probe's JVM type must match the sidecar's recorded
-    * type (the bloom path's coercion hazard applies identically).
-    */
-  /** Combined sidecar prune test for the V1 SQL surface (GraftRelation):
-    * true iff the bloom or the set sidecar PROVES the file empty of
-    * matches for `cond`. Same conservatism as the readWhere path.
-    */
-  private[storage] def sidecarPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean =
-    bloomPruned(cond, f) || setPruned(cond, f) ||
-      tokenBloomPruned(cond, f) || arrayBloomPruned(cond, f)
-
-  private def setPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean = {
-    def absent(attr: String, v: Any): Boolean =
-      setOf(f.path, attr).exists { case (tag, vals) =>
-        val typed = (tag, v) match {
-          case ("long", _: Long | _: Int | _: Short | _: Byte) => true
-          case ("string", _: String) => true
-          case _ => false
-        }
-        typed && !vals.contains(v.toString)
-      }
-    setIndexCols.nonEmpty && (
-      StatsPruning.equalityProbes(cond).exists {
-        case (attr, v) => setIndexCols.contains(attr) && absent(attr, v)
-      } ||
-      // IN-list conjunct: the part is dead iff EVERY listed value is
-      // provably absent from its exact value set
-      StatsPruning.inProbes(cond).exists {
-        case (attr, vs) => setIndexCols.contains(attr) &&
-          vs.forall(v => absent(attr, v))
-      })
-  }
-
-  // ------------------------------------------- token-bloom skip index
-
-  /** One distributed pass writes every staged part's token-bloom
-    * sidecar: tokenize the indexed column, group by source file, OR the
-    * fixed-size partial filters together (map-side combine keeps the
-    * shuffle at #parts × 8 KiB regardless of row count), then write one
-    * `<part>.tokbf.<col>` per part. A part contributing no tokens (all
-    * NULL/empty, or the column physically absent from the file — its
-    * rows read back as NULL, which no token predicate matches) gets an
-    * EMPTY bloom, which correctly proves every token absent; a MISSING
-    * sidecar stays reserved for "legacy part, cannot prune".
-    */
-  private def writeTokenBloomSidecars(df: DataFrame, parts: Seq[String]): Unit = {
-    writeGramBloomSidecars(df, parts, tokenBloomCols, ".tokbf.",
-      c => explode(split(coalesce(col(c), lit("")),
-        StatsPruning.TokenSplitRe)))
-    writeGramBloomSidecars(df, parts, ngramBloomCols, ".ngbf.",
-      c => explode_outer(expr(
-        s"""CASE WHEN length(coalesce($c, '')) >= ${StatsPruning.NgramWidth}
-              THEN transform(
-                sequence(1, length($c) - ${StatsPruning.NgramWidth - 1}),
-                i -> substring($c, i, ${StatsPruning.NgramWidth}))
-              ELSE CAST(array() AS ARRAY<STRING>) END""")))
-  }
-
-  /** Shared one-pass distributed sidecar build for the token (tokbf)
-    * and character-n-gram (ngbf) bloom families over `df0`, a scan of
-    * exactly the staged `parts`; `gram` turns the indexed column into one
-    * gram per row.
-    */
-  private def writeGramBloomSidecars(df0: DataFrame, parts: Seq[String],
-      cols: Seq[String], suffix: String,
-      gram: String => org.apache.spark.sql.Column): Unit = {
-    if (cols.isEmpty || parts.isEmpty) return
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_FACT_TIMING"))
-        System.err.println(f"[fact]   gram.$what +${(System.nanoTime() - t0) / 1e9}%.3fs")
+  private def writeGramSidecars(df: DataFrame, parts: Seq[String],
+      grams: Seq[(SkipIndex, GramFamily)]): Unit = {
     // keyed by scheme-stripped ABSOLUTE path: a partitioned write reuses
     // one file name across partition directories, so names collide
     def norm(p: String): String = new Path(p).toUri.getPath
-    cols.foreach { c =>
-      val have = df0.columns.contains(c)
-      val built: Map[String, Array[Byte]] = if (!have) Map.empty else {
-        val agg = udaf(new FactTable.TokenBloomAgg,
-          org.apache.spark.sql.Encoders.STRING)
-        df0.select(input_file_name().as("__f"), gram(c).as("__t"))
+    grams.foreach { case (ix, family) =>
+      if (df.columns.contains(ix.col)) {
+        val agg = udaf(new TokenBloomAgg, org.apache.spark.sql.Encoders.STRING)
+        val built = df.select(input_file_name().as("__f"), family.grams(ix.col).as("__t"))
           .filter(col("__t").isNotNull && col("__t") =!= "")
           .groupBy(col("__f")).agg(agg(col("__t")).as("__b"))
           .collect()
           .map(r => norm(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
+        // sidecar creates are independent I/O round-trips — a commit
+        // staging hundreds of parts would otherwise serialize hundreds of
+        // small writes on the driver (measured ~1 s of the dx32 commit at
+        // 313 parts); same bounded-pool discipline as entriesFor's footers
+        onIoPool(parts) { part =>
+          writeSidecar(ix.sidecar(part),
+            built.getOrElse(norm(part), TokenBloom.toBytes(TokenBloom.emptyBits)))
+        }
       }
-      mark(s"agg.$c")
-      // sidecar creates are independent I/O round-trips — a commit
-      // staging hundreds of parts would otherwise serialize hundreds of
-      // small writes on the driver (measured ~1 s of the dx32 commit at
-      // 313 parts); same bounded-pool discipline as entriesFor's footers
-      if (have) onIoPool(parts) { part =>
-        val bytes = built.getOrElse(norm(part),
-          FactTable.TokenBloom.toBytes(FactTable.TokenBloom.emptyBits))
-        val out = fs.create(new Path(part + suffix + c), true)
-        try out.write(bytes) finally out.close()
-      }
-      mark(s"write.$c")
     }
   }
-
-  private val tokenBloomCache =
-    scala.collection.concurrent.TrieMap[String, Option[Array[Long]]]()
-
-  private def tokenBloomOf(part: String, c: String,
-      suffix: String = ".tokbf."): Option[Array[Long]] =
-    tokenBloomCache.getOrElseUpdate(part + suffix + c, {
-      val p = new Path(part + suffix + c)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](FactTable.TokenBloom.SidecarBytes)
-          in.readFully(buf)
-          Some(FactTable.TokenBloom.fromBytes(buf))
-        } finally in.close()
-      }
-    })
-
-  /** True iff some `hasToken(col, 'tok')` conjunct of `cond` over a
-    * token-indexed column is PROVEN absent from the part by its token
-    * bloom. Conservative: missing sidecar / unrecognized predicates
-    * never prune; a "maybe" keeps the file (false positives cost a
-    * read, never a row — readWhere re-applies the predicate in full).
-    */
-  private def tokenBloomPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean =
-    (tokenBloomCols.nonEmpty && StatsPruning.tokenProbes(cond).exists {
-      case (attr, tok) => tokenBloomCols.contains(attr) &&
-        tokenBloomOf(f.path, attr).exists(bits =>
-          !FactTable.TokenBloom.mightContain(bits, tok))
-    }) || ngramBloomPruned(cond, f)
-
-  /** True iff some `col.contains('pat')` / `col LIKE '%pat%'` conjunct
-    * over an n-gram-indexed column is PROVEN absent: a matching row
-    * would contain every 3-gram of the pattern, so ANY 3-gram the
-    * part's bloom rejects kills the part. Same conservatism as the
-    * token path (missing sidecar / short pattern / OR never prune;
-    * readWhere re-applies the predicate in full).
-    */
-  private def ngramBloomPruned(cond: org.apache.spark.sql.Column,
-      f: FileEntry): Boolean =
-    ngramBloomCols.nonEmpty && StatsPruning.ngramProbes(cond).exists {
-      case (attr, pat) => ngramBloomCols.contains(attr) &&
-        tokenBloomOf(f.path, attr, ".ngbf.").exists { bits =>
-          (0 to pat.length - StatsPruning.NgramWidth).exists { i =>
-            !FactTable.TokenBloom.mightContain(bits,
-              pat.substring(i, i + StatsPruning.NgramWidth))
-          }
-        }
-    }
 
   /** Per-part expected false-positive rate of the token bloom on `c` —
     * `(fraction of set bits)^k`, the standard saturation estimate. The
@@ -1952,21 +1660,15 @@ class FactTable(val root: String, spark: SparkSession,
     * how an operator notices the fixed 8 KiB sidecar needs re-sizing
     * for a fatter per-part vocabulary.
     */
-  def tokenBloomFpp(c: String): Seq[(String, Double)] = {
-    val files = snapshot().dataFiles
-    prefetchGramBlooms(files)
-    files.flatMap(f =>
-      tokenBloomOf(f.path, c).map(bits =>
-        f.path -> FactTable.TokenBloom.expectedFpp(bits)))
-  }
+  def tokenBloomFpp(c: String): Seq[(String, Double)] = gramFpp(SkipIndex(c, TokenIndex))
 
   /** [[tokenBloomFpp]] for the n-gram (ngbf) sidecar family. */
-  def ngramBloomFpp(c: String): Seq[(String, Double)] = {
+  def ngramBloomFpp(c: String): Seq[(String, Double)] = gramFpp(SkipIndex(c, NgramIndex))
+
+  private def gramFpp(ix: SkipIndex): Seq[(String, Double)] = {
     val files = snapshot().dataFiles
-    prefetchGramBlooms(files)
-    files.flatMap(f =>
-      tokenBloomOf(f.path, c, ".ngbf.").map(bits =>
-        f.path -> FactTable.TokenBloom.expectedFpp(bits)))
+    prefetch(files, Seq(ix))
+    files.flatMap(f => sidecarOf(ix, f.path).flatMap(_.fpp).map(f.path -> _))
   }
 
   // ---------------------------------------------------- projections
@@ -2032,20 +1734,6 @@ class FactTable(val root: String, spark: SparkSession,
      else files.count(f => fs.exists(new Path(f.path + ".proj." + name))),
       files.size)
   }
-
-  /** Probe/column type agreement gate for the bloom path. No recorded
-    * stat for the column (rare: bloom-indexed columns are primitives
-    * with footer stats) also means "don't trust the probe" — skip.
-    */
-  private def probeMatchesStatType(f: FileEntry, attr: String,
-      v: Any): Boolean =
-    f.stats.get(attr).exists { cs =>
-      (cs.typ, v) match {
-        case ("long", _: Long | _: Int | _: Short | _: Byte) => true
-        case ("string", _: String) => true
-        case _ => false // double blooms unsupported; mismatch = no prune
-      }
-    }
 }
 
 /** Interleaved-bits (Morton) clustering key over quantile-bucketed
@@ -2207,6 +1895,244 @@ object FactTable {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
     def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
       org.apache.spark.sql.Encoders.BINARY
+  }
+
+  // ------------------------------------------------------- skip indexes
+
+  /** One data-skipping index: a column plus the family of its sidecar,
+    * `<part><suffix><col>`, written next to the part (not in the log).
+    */
+  private final case class SkipIndex(col: String, family: IndexFamily) {
+    def sidecar(part: String): String = part + family.suffix + col
+
+    /** The value lists of `cond`'s conjuncts on this column that the
+      * family can test.
+      */
+    def probes(cond: Column): Seq[Seq[Any]] =
+      family.probes(cond).collect { case (c, vs) if c == col => vs }
+
+    /** True iff `s`, part `f`'s sidecar, proves every value of `vs`
+      * absent. The one probe-type gate: a value whose class differs from
+      * the class the sidecar indexes never prunes; a sidecar that records
+      * no class takes the column's stat type in the part, and no recorded
+      * stat (rare: bloom-indexed columns are primitives with footer
+      * stats) also means "don't trust the probe".
+      */
+    def prunes(f: FileEntry, vs: Seq[Any], s: Sidecar): Boolean = {
+      val typ = s.typ.orElse(f.stats.get(col).map(_.typ))
+      vs.forall(v => typ.isDefined && valueClass(v) == typ && s.absent(v))
+    }
+  }
+
+  /** A decoded sidecar: the value class it indexes (None: the column's
+    * stat type), whether it proves a probe value absent from its part,
+    * and, for the gram families, the filter's expected fpp.
+    */
+  private final case class Sidecar(typ: Option[String], absent: Any => Boolean,
+      fpp: Option[Double] = None)
+
+  /** The value class of a probe value or of a column type, shared by
+    * every typed index: "long" (integral) or "string"; None is not
+    * indexable (double blooms unsupported). BloomFilter hashes longs and
+    * strings differently, so probing with the other class would always
+    * answer "absent" and wrongly prune live parts.
+    */
+  private def valueClass(x: Any): Option[String] = x match {
+    case _: Long | _: Int | _: Short | _: Byte |
+        LongType | IntegerType | ShortType | ByteType => Some("long")
+    case _: String | StringType => Some("string")
+    case _ => None
+  }
+
+  /** A skip-index family (one ClickHouse secondary-index type): its
+    * sidecar suffix, the conjunct shapes it can test — `probes`, per
+    * column, the values a matching row must equal or contain one of —
+    * and how a sidecar's bytes decode.
+    */
+  private sealed abstract class IndexFamily(val suffix: String) {
+    def probes(cond: Column): Seq[(String, Seq[Any])]
+    def decode(in: java.io.DataInputStream): Sidecar
+  }
+
+  /** Built per part, from that part's frame (bloom, set, array bloom).
+    * None writes no sidecar: the part then never prunes.
+    */
+  private sealed abstract class PartFamily(suffix: String) extends IndexFamily(suffix) {
+    def build(part: DataFrame, c: String, rows: Long): Option[Array[Byte]]
+  }
+
+  /** Built per staged generation, in one distributed pass (token,
+    * n-gram): a fixed-size [[TokenBloom]] over the grams `grams(c)`
+    * yields per row, OR-merged per part.
+    */
+  private sealed abstract class GramFamily(suffix: String) extends IndexFamily(suffix) {
+    def grams(c: String): Column
+    def absent(bits: Array[Long], probe: String): Boolean
+    def decode(in: java.io.DataInputStream): Sidecar = {
+      val buf = new Array[Byte](TokenBloom.SidecarBytes)
+      in.readFully(buf)
+      val bits = TokenBloom.fromBytes(buf)
+      Sidecar(Some("string"), v => absent(bits, v.toString),
+        Some(TokenBloom.expectedFpp(bits)))
+    }
+  }
+
+  private def single(probes: Seq[(String, Any)]): Seq[(String, Seq[Any])] =
+    probes.map { case (c, v) => c -> Seq(v) }
+
+  private def bytesOf(write: java.io.OutputStream => Unit): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    write(out)
+    out.toByteArray
+  }
+
+  private def bloomSidecar(typ: Option[String], bf: BloomFilter): Sidecar =
+    Sidecar(typ, v => scala.util.Try(!bf.mightContain(v)).getOrElse(false))
+
+  /** True iff some `col = v` conjunct of `cond` over an indexed column
+    * is PROVEN absent from the part by its Bloom sidecar. Conservative:
+    * missing sidecar / non-equality predicates never prune; a Bloom
+    * "maybe" keeps the file (false positives cost a read, never a row).
+    * The probe value's JVM type must match the indexed column's stat
+    * type (mirroring StatsPruning.toCmp): a type-mismatched probe such
+    * as `$"user_id" === "42"` — which Spark's analyzer coerces so real
+    * rows DO match — would call mightContainString against a long-built
+    * bloom and always report absent, wrongly pruning live rows.
+    */
+  private object BloomIndex extends PartFamily(".bloom.") {
+    def probes(cond: Column): Seq[(String, Seq[Any])] =
+      single(StatsPruning.equalityProbes(cond))
+    def build(part: DataFrame, c: String, rows: Long): Option[Array[Byte]] =
+      Some(bytesOf(part.stat.bloomFilter(c, math.max(rows, 1L), 0.01).writeTo))
+    def decode(in: java.io.DataInputStream): Sidecar =
+      bloomSidecar(None, BloomFilter.readFrom(in))
+  }
+
+  /** Array-bloom sizing: the part's KNOWN row count (footer) × a fixed
+    * elements-per-row hint instead of an exact element count — the
+    * count would cost a second Spark job per (part, column) (the bloom's
+    * rows-reuse discipline). Mis-sizing only moves the false-positive
+    * rate, never soundness: overestimating lowers fpp; rows with > 8
+    * elements on average raise it, costing extra reads, never lost rows.
+    */
+  private val ArrayBloomElemsPerRowHint = 8L
+
+  /** `<part>.abloom.<col>`: 1 type-tag byte ('S' string / 'L' integral)
+    * + a Bloom filter over the part's exploded array elements. The tag
+    * is what keeps pruning SOUND: BloomFilter hashes longs and strings
+    * differently, so probing a string-built bloom with a long always
+    * answers "absent" — without the tag that would wrongly prune live
+    * parts on a type-coerced predicate. A part is pruned iff some
+    * `array_contains(col, v)` conjunct over an indexed array column is
+    * proven element-absent by its sidecar; same conservatism as the
+    * scalar bloom.
+    */
+  private object ArrayBloomIndex extends PartFamily(".abloom.") {
+    def probes(cond: Column): Seq[(String, Seq[Any])] =
+      single(StatsPruning.arrayContainsProbes(cond))
+    def build(part: DataFrame, c: String, rows: Long): Option[Array[Byte]] =
+      part.schema(c).dataType match {
+        // other element types: no sidecar, never prune
+        case ArrayType(et, _) => valueClass(et).map { cls =>
+          val bf = part.select(explode(col(c)).as("__e")).na.drop()
+            .stat.bloomFilter("__e", math.max(rows * ArrayBloomElemsPerRowHint, 1L), 0.01)
+          bytesOf { out => out.write(if (cls == "string") 'S' else 'L'); bf.writeTo(out) }
+        }
+        case _ => None
+      }
+    def decode(in: java.io.DataInputStream): Sidecar = {
+      val tag = in.read().toByte match {
+        case 'S' => "string"
+        case 'L' => "long"
+        case t => t.toString
+      }
+      bloomSidecar(Some(tag), BloomFilter.readFrom(in))
+    }
+  }
+
+  /** ClickHouse `set(N)` secondary-index analog: a part whose indexed
+    * column holds ≤ N distinct values gets a `<part>.set.<col>` sidecar
+    * listing them EXACTLY — a point/equality predicate then skips the
+    * part iff its value is absent, with NO false-positive rate (unlike
+    * the bloom) and real power on low-cardinality columns whose values
+    * interleave across every part (where [min,max] spans the domain and
+    * can never prune). A part exceeding N distinct values writes no
+    * sidecar; absence always means "cannot prune". Only integral and
+    * string columns are indexed (the types `equalityProbes` can match
+    * safely); NULL never matches an equality probe, so nulls are
+    * excluded from the set.
+    */
+  private val MaxSetSize = 64
+
+  /** True iff some `col = v` conjunct of `cond` over a set-indexed
+    * column is PROVEN absent from the part by its exact value set.
+    * Conservative: missing sidecar / non-equality predicates never
+    * prune, and the probe's JVM type must match the sidecar's recorded
+    * type (the bloom path's coercion hazard applies identically). An
+    * IN-list conjunct kills the part iff EVERY listed value is provably
+    * absent from its exact value set.
+    */
+  private object SetIndex extends PartFamily(".set.") {
+    def probes(cond: Column): Seq[(String, Seq[Any])] =
+      single(StatsPruning.equalityProbes(cond)) ++ StatsPruning.inProbes(cond)
+    def build(part: DataFrame, c: String, rows: Long): Option[Array[Byte]] =
+      valueClass(part.schema(c).dataType).flatMap { tag =>
+        val vals = part.select(col(c)).na.drop().distinct()
+          .limit(MaxSetSize + 1).collect().map(_.get(0).toString)
+        // high cardinality: not indexable
+        Option.when(vals.length <= MaxSetSize) {
+          val m = new ObjectMapper()
+          val node = m.createObjectNode()
+          node.put("t", tag)
+          val arr = node.putArray("v")
+          vals.sorted.foreach(arr.add)
+          m.writeValueAsBytes(node)
+        }
+      }
+    def decode(in: java.io.DataInputStream): Sidecar = {
+      val node = new ObjectMapper().readTree(in)
+      val b = Set.newBuilder[String]
+      node.get("v").forEach(v => b += v.asText())
+      val vals = b.result()
+      Sidecar(Some(node.get("t").asText()), v => !vals.contains(v.toString))
+    }
+  }
+
+  /** True iff some `hasToken(col, 'tok')` conjunct of `cond` over a
+    * token-indexed column is PROVEN absent from the part by its token
+    * bloom. Conservative: missing sidecar / unrecognized predicates
+    * never prune; a "maybe" keeps the file (false positives cost a
+    * read, never a row — readWhere re-applies the predicate in full).
+    */
+  private object TokenIndex extends GramFamily(".tokbf.") {
+    def probes(cond: Column): Seq[(String, Seq[Any])] =
+      single(StatsPruning.tokenProbes(cond))
+    def grams(c: String): Column =
+      explode(split(coalesce(col(c), lit("")), StatsPruning.TokenSplitRe))
+    def absent(bits: Array[Long], tok: String): Boolean =
+      !TokenBloom.mightContain(bits, tok)
+  }
+
+  /** True iff some `col.contains('pat')` / `col LIKE '%pat%'` conjunct
+    * over an n-gram-indexed column is PROVEN absent: a matching row
+    * would contain every 3-gram of the pattern, so ANY 3-gram the
+    * part's bloom rejects kills the part. Same conservatism as the
+    * token path (missing sidecar / short pattern / OR never prune;
+    * readWhere re-applies the predicate in full).
+    */
+  private object NgramIndex extends GramFamily(".ngbf.") {
+    def probes(cond: Column): Seq[(String, Seq[Any])] =
+      single(StatsPruning.ngramProbes(cond))
+    def grams(c: String): Column = explode_outer(expr(
+      s"""CASE WHEN length(coalesce($c, '')) >= ${StatsPruning.NgramWidth}
+            THEN transform(
+              sequence(1, length($c) - ${StatsPruning.NgramWidth - 1}),
+              i -> substring($c, i, ${StatsPruning.NgramWidth}))
+            ELSE CAST(array() AS ARRAY<STRING>) END"""))
+    def absent(bits: Array[Long], pat: String): Boolean =
+      (0 to pat.length - StatsPruning.NgramWidth).exists { i =>
+        !TokenBloom.mightContain(bits, pat.substring(i, i + StatsPruning.NgramWidth))
+      }
   }
 
   /** The log replayed through version `last` (-1: nothing replayed):

@@ -55,9 +55,10 @@ class GraftRelation(root: String, asOf: Long, spark: SparkSession,
   private val table = new FactTable(root, spark, bloomCols,
     Nil, setIndexCols)
 
-  /** V1 filters re-expressed as Column conds for the sidecar prune
-    * tests — only the exact shapes the sidecars can answer (equality,
-    * IN over literals); everything else is None and never prunes.
+  /** V1 filters re-expressed as Column conds for the table's prune
+    * test (`FactTable.candidates`) — only the exact shapes the sidecars
+    * can answer (equality, IN over literals); everything else is None
+    * and never prunes.
     */
   private def sidecarCond(f: Filter): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.{sources => sf}
@@ -78,10 +79,10 @@ class GraftRelation(root: String, asOf: Long, spark: SparkSession,
       filters: Array[Filter]): RDD[Row] = {
     val snap = table.snapshot(asOf)
     val files = snap.dataFiles
-    val conds = filters.flatMap(sidecarCond)
-    val kept = files.filterNot(f =>
-      filters.exists(fl => StatsPruning.canPrune(fl, f.stats)) ||
-        conds.exists(c => table.sidecarPruned(c, f)))
+    val statKept = files.filterNot(f =>
+      filters.exists(fl => StatsPruning.canPrune(fl, f.stats)))
+    val kept = filters.flatMap(sidecarCond)
+      .foldLeft(statKept)((k, c) => table.candidates(c, k))
     GraftRelation.lastPrune = Some((root, kept.size, files.size))
     // the scan reads the table schema, so a pruned subset of only
     // pre-evolution files still resolves an added column (as NULL);

@@ -1800,4 +1800,87 @@ class FactTableSpec extends AnyFunSuite {
     vacuumed(Long.MaxValue)
     assert(t.read().count() == 15)
   }
+
+  // ------------------------------------------------------- skip indexes
+
+  test("deleteWhere and softDelete are scoped by the array bloom") {
+    def part(tag: String, n: Long) =
+      Seq((java.sql.Date.valueOf("2024-03-01"), tag, n)).toDF("date", "tag", "n")
+        .select($"date", $"n", array(lit("common"), $"tag").as("tags"))
+    def table() = {
+      val t = new FactTable(
+        java.nio.file.Files.createTempDirectory("fact_abloom_del").toString,
+        spark, arrayBloomCols = Seq("tags"))
+      t.append(part("x1", 1L).coalesce(1), 0)
+      t.append(part("x2", 2L).coalesce(1), 1)
+      t
+    }
+    def otherPart(t: FactTable) =
+      t.snapshot().dataFiles.map(_.path).filter(_.contains("append-1"))
+    val x1 = array_contains($"tags", "x1")
+    // array columns carry no min/max stats: only the sidecar can scope
+    val td = table()
+    val other = otherPart(td)
+    assert(other.size == 1 && td.pruneReport(x1) == ((1, 2)))
+    assert(td.deleteWhere(x1) == 1L)
+    assert(td.snapshot().dataFiles.map(_.path).contains(other.head),
+      "the part the array bloom proves free of x1 must not be rewritten")
+    assert(td.read().select($"n").as[Long].collect().toSeq == Seq(2L))
+    // the tombstone's deletion vector names only the part holding x1
+    val ts = table()
+    assert(ts.softDelete(x1, Seq("n")) == 1L)
+    val victims = ts.snapshot().tombFiles.flatMap { t =>
+      val node = mapper.readTree(new java.io.File(
+        new org.apache.hadoop.fs.Path(t.path + FactTable.VictimsSuffix).toUri.getPath))
+      val b = Seq.newBuilder[String]
+      node.get("victims").forEach(v => b += v.asText())
+      b.result()
+    }
+    assert(victims.size == 1 && !victims.contains(otherPart(ts).head), victims)
+    assert(ts.read().select($"n").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("vacuum reclaims the sidecars of every skip-index family and projection") {
+    val dir = java.nio.file.Files.createTempDirectory("fact_all_ix").toString
+    val t = new FactTable(dir, spark,
+      bloomCols = Seq("modem_name"),
+      projections = Seq(FactTable.ProjectionSpec("by_modem", Seq("modem_name"), Seq("uptime"))),
+      setIndexCols = Seq("uptime"),
+      tokenBloomCols = Seq("text"), ngramBloomCols = Seq("text"),
+      arrayBloomCols = Seq("tags"))
+    (0 until 3).foreach { i =>
+      t.append(rows(4, s"2024-03-0${i + 1}", s"m$i")
+        .withColumn("text", concat(lit(s"word$i "), $"modem_name"))
+        .withColumn("tags", array(lit(s"t$i"), lit("all"))).coalesce(1), i)
+    }
+    val markers = Seq(".bloom.", ".set.", ".abloom.", ".tokbf.", ".ngbf.", ".proj.")
+    // every sidecar file (a projection sidecar is a parquet directory)
+    def sidecars(): Seq[String] = {
+      val out = scala.collection.mutable.ArrayBuffer[String]()
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
+        // skip Hadoop's .crc checksum shadows (deleted with their file)
+        if (java.nio.file.Files.isRegularFile(p) &&
+            !p.getFileName.toString.startsWith(".") &&
+            markers.exists(p.toString.contains)) out += p.toString
+      }
+      out.toSeq
+    }
+    def livePaths() = t.snapshot().files.map(_.path.stripPrefix("file:"))
+    def owned(s: String) =
+      livePaths().exists(p => markers.exists(m => s.startsWith(p + m)))
+    // three buffer parts, each with all six sidecars
+    assert(livePaths().size == 3)
+    assert(markers.forall(m => sidecars().count(_.contains(m)) >= 3))
+    t.compact()
+    assert(sidecars().exists(s => !owned(s)), "compact leaves the old parts' sidecars")
+    t.vacuum()
+    val left = sidecars()
+    assert(left.forall(owned), s"orphan sidecars left behind: ${left.filterNot(owned)}")
+    // every live part keeps every family's sidecar
+    livePaths().foreach { p =>
+      markers.foreach(m => assert(left.exists(_.startsWith(p + m)), s"$p lost its $m sidecar"))
+    }
+    assert(t.readWhere($"modem_name" === "m1").count() == 4)
+    assert(t.readWhere(array_contains($"tags", "t2")).count() == 4)
+  }
 }
