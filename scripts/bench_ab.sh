@@ -20,8 +20,12 @@
 #
 # <seeds> is N or LO-HI. The parent is exported with `git archive` into a
 # temporary directory under ${TMPDIR:-/tmp}, which is removed on exit; each
-# side builds its own sources into its own .bench_build/. Every run uses
-# BENCHMARK.json's run_seconds. Run lines go to stderr, the table to stdout.
+# side builds its own sources into its own .bench_build/. The table's log
+# records every part's absolute path, so the parent's directory is named to
+# make its absolute path exactly as long as the working tree's, or
+# stored_bytes_per_row would favour the shorter one; the script stops if
+# ${TMPDIR:-/tmp} leaves no room for that. Every run uses BENCHMARK.json's
+# run_seconds. Run lines go to stderr, the table to stdout.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -38,8 +42,20 @@ else
   WORKLOADS="$WORKLOAD"
 fi
 
-PARENT=$(mktemp -d "${TMPDIR:-/tmp}/bench_ab.XXXXXX")
+HERE=$(pwd -P)
+BASE=$(cd "${TMPDIR:-/tmp}" && pwd -P)
+PAD=$((${#HERE} - ${#BASE} - 1))
+if ((PAD < 3)); then
+  echo "bench_ab: $BASE is too long for a parent checkout as long as $HERE;" \
+    "set TMPDIR to a shorter directory" >&2
+  exit 2
+fi
+PARENT=$(mktemp -d "$BASE/$(printf 'X%.0s' $(seq "$PAD"))")
 trap 'rm -rf "$PARENT"' EXIT
+if ((${#PARENT} != ${#HERE})); then
+  echo "bench_ab: parent checkout $PARENT is not as long as $HERE" >&2
+  exit 2
+fi
 git archive "$(git rev-parse --verify "$REF^{commit}")" | tar -x -C "$PARENT"
 OUT="$PARENT/.results"
 mkdir -p "$OUT"
@@ -55,9 +71,9 @@ run() { # <side> <dir> <workload> <seed>
 for ((seed = LO; seed <= HI; seed++)); do
   for w in $WORKLOADS; do
     if ((seed % 2)); then
-      run parent "$PARENT" "$w" "$seed"; run head "$PWD" "$w" "$seed"
+      run parent "$PARENT" "$w" "$seed"; run head "$HERE" "$w" "$seed"
     else
-      run head "$PWD" "$w" "$seed"; run parent "$PARENT" "$w" "$seed"
+      run head "$HERE" "$w" "$seed"; run parent "$PARENT" "$w" "$seed"
     fi
   done
 done

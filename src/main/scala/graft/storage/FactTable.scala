@@ -4,13 +4,16 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -56,7 +59,13 @@ import org.apache.spark.util.sketch.BloomFilter
   *   size, so a day holds at most log2(day rows / smallest flush) + 1
   *   parts; n equal flushes leave popcount(n). Only parts under this
   *   table's `data/` are merged: cold-volume and shallow-cloned parts
-  *   stay where they are.
+  *   stay where they are. Small commits are written on the driver, with
+  *   no Spark write job: a sink batch of at most the sink's `maxRows` rows
+  *   (one collect), and a buffer merge (the sink's flush, `compact()`)
+  *   whose inputs' logged bytes are at most
+  *   `spark.sql.autoBroadcastJoinThreshold` (one task, no shuffle).
+  *   Larger ones take Spark's distributed write, as does every public
+  *   `append`.
   * - **Incremental replay**: each instance keeps the state it last
   *   replayed; `snapshot()` at the head reads only the versions committed
   *   since (`last+1.json`, … until one is missing), with no directory
@@ -584,9 +593,35 @@ class FactTable(val root: String, spark: SparkSession,
     if (snap.txns.contains(txnId)) return false
     val target = new Path(dataDir, s"append-$txnId")
     df.write.mode("overwrite").parquet(target.toString)
+    commitAppend(snap, txnId, target, df.schema)
+  }
+
+  /** [[append]] for the Buffer sink: a batch of at most `maxRows` rows is
+    * taken to the driver in one collect and written there as one part, so
+    * the commit runs no Spark write job. A larger batch takes `append`'s
+    * distributed write, as an insert above `max_rows` bypasses a
+    * ClickHouse Buffer table.
+    */
+  private[storage] def appendBuffered(df: DataFrame, txnId: Long,
+      maxRows: Long): Boolean = {
+    val snap = snapshot()
+    if (snap.txns.contains(txnId)) return false
+    // one row past the limit tells a small batch from a large one
+    val limit = math.min(maxRows, Int.MaxValue - 1L).toInt + 1
+    val rows = internalRows(df)(_.executeTake(limit))
+    if (rows.length >= limit) return append(df, txnId)
+    val target = new Path(dataDir, s"append-$txnId")
+    fs.delete(target, true) // a failed attempt's output, as mode("overwrite")
+    writeLocal(target, df.schema, rows.iterator)
+    commitAppend(snap, txnId, target, df.schema)
+  }
+
+  /** Commit the buffer part(s) staged in `target` under `txnId`. */
+  private def commitAppend(snap: Snapshot, txnId: Long, target: Path,
+      schema: StructType): Boolean = {
     beforeCommit()
     commitWithRetry(snap, Some(txnId),
-      entriesFor(target, TierBuffer, df.schema), removes = Nil, Some(df.schema))(
+      entriesFor(target, TierBuffer, schema), removes = Nil, Some(schema))(
       fresh => !fresh.txns.contains(txnId))
   }
 
@@ -619,7 +654,14 @@ class FactTable(val root: String, spark: SparkSession,
       // existing tombstone covers
       val src = masked(parts, snap)
       val target = new Path(dataDir, s"base-${java.util.UUID.randomUUID()}")
-      src.repartition(col(partitionCol))
+      // inputs no larger than what Spark would broadcast are merged in one
+      // task and written on the driver: the write job, not the bytes, is
+      // the cost of a small merge
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      if (threshold >= 0 && parts.map(_.bytes).sum <= threshold)
+        writeLocalPartitioned(target,
+          src.coalesce(1).sortWithinPartitions(partitionCol, sortCols: _*), partitionCol)
+      else src.repartition(col(partitionCol))
         .sortWithinPartitions(partitionCol, sortCols: _*)
         .write.partitionBy(partitionCol).mode("overwrite")
         .parquet(target.toString)
@@ -733,7 +775,23 @@ class FactTable(val root: String, spark: SparkSession,
       fs.delete(new Path(p + VictimsSuffix), false)
       victimsCache.remove(p)
     }
-    victims.count(p => fs.delete(new Path(p), false))
+    val deleted = victims.count(p => fs.delete(new Path(p), false))
+    dropEmptied(victims.map(p => fs.makeQualified(new Path(p)).getParent))
+    deleted
+  }
+
+  /** Delete each of `dirs` below `data/` that holds nothing, or only
+    * Spark's `_SUCCESS` marker, then the same for the parents of those deleted,
+    * up to but not including `data/`: a reclaimed part's `append-<txn>/`,
+    * `base-<uuid>/` and `date=` directories would otherwise outlive it.
+    */
+  @annotation.tailrec
+  private def dropEmptied(dirs: Seq[Path]): Unit = {
+    val below = fs.makeQualified(dataDir).toString + Path.SEPARATOR
+    val emptied = dirs.distinct.filter(d => d.toString.startsWith(below) &&
+      fs.exists(d) && fs.listStatus(d).forall(_.getPath.getName == "_SUCCESS"))
+    emptied.foreach(fs.delete(_, true))
+    if (emptied.nonEmpty) dropEmptied(emptied.map(_.getParent))
   }
 
   /** True iff the part is ENTIRELY before `cutoff` on `partitionCol`
@@ -1484,20 +1542,79 @@ class FactTable(val root: String, spark: SparkSession,
 
   // -------------------------------------------------------------- helpers
 
-  /** Run `f` over `items` on a bounded I/O pool and wait — the shared
-    * driver-side fan-out for independent small-file round-trips (footer
-    * opens, sidecar reads/writes): hundreds of serial ~2-5 ms filesystem
-    * calls otherwise add whole seconds to a commit or a pruned read.
+  /** Run `f` over `items` and wait — the shared driver-side fan-out for
+    * independent small-file round-trips (footer opens, sidecar
+    * reads/writes): hundreds of serial ~2-5 ms filesystem calls otherwise
+    * add whole seconds to a commit or a pruned read. A single item runs
+    * on the caller's thread; more run on [[FactTable.IoPool]], each with
+    * the caller's Spark local properties and active session, as a thread
+    * of its own would inherit them. No `f` may call `onIoPool`: the pool
+    * is shared and bounded, so nested calls could wait on one another
+    * with every thread taken.
     */
-  private def onIoPool[A](items: Seq[A])(f: A => Unit): Unit = {
-    if (items.isEmpty) return
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, math.max(1, items.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-    finally pool.shutdown()
+  private def onIoPool[A](items: Seq[A])(f: A => Unit): Unit =
+    if (items.size == 1) f(items.head)
+    else if (items.nonEmpty) {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val tasks = items.map(a => SQLExecution.withThreadLocalCaptured(session, IoPool)(f(a)))
+      try tasks.foreach(_.join())
+      catch { case e: java.util.concurrent.CompletionException => throw e.getCause }
+    }
+
+  /** `run` over `df`'s physical plan in one SQL execution, as `collect`
+    * runs it, with the rows kept as the plan emits them (never converted
+    * to `Row`).
+    */
+  private def internalRows(df: DataFrame)(
+      run: SparkPlan => Array[InternalRow]): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe)(run(qe.executedPlan))
+  }
+
+  /** Write `rows`, laid out as `schema`, as one parquet part in `dir`, on
+    * the driver. It is the writer a Spark write task opens, set up by the
+    * same `prepareWrite`, so codec, encodings and footer keys match a
+    * `df.write.parquet` part: only the write job is saved, which is most
+    * of a small write's cost.
+    */
+  private def writeLocal(dir: Path, schema: StructType,
+      rows: Iterator[InternalRow]): Unit = {
+    val job = Job.getInstance(hadoopConf)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val writer = factory.newInstance(file.toString, schema, ctx)
+    try rows.foreach(writer.write) finally writer.close()
+  }
+
+  /** `df` collected and written on the driver as `write.partitionBy`
+    * lays it out: one part per run of equal `partitionCol` values, in
+    * `dir/<partitionCol>=<value>/` (NULL: `__HIVE_DEFAULT_PARTITION__`),
+    * without the partition column. `df` must be sorted on `partitionCol`
+    * first.
+    */
+  private def writeLocalPartitioned(dir: Path, df: DataFrame,
+      partitionCol: String): Unit = {
+    val rows = internalRows(df)(_.executeCollect())
+    val attrs = df.queryExecution.executedPlan.output
+    val i = df.schema.fieldIndex(partitionCol)
+    val typ = attrs(i).dataType
+    val project = UnsafeProjection.create(attrs.patch(i, Nil, 1), attrs)
+    val dataSchema = StructType(df.schema.fields.patch(i, Nil, 1))
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def value(r: InternalRow): Any = if (r.isNullAt(i)) null else r.get(i, typ)
+    fs.mkdirs(dir)
+    var rest = rows
+    while (rest.nonEmpty) {
+      val v = value(rest.head)
+      val (run, tail) = rest.span(value(_) == v)
+      val name = Option(Cast(Literal(v, typ), StringType, tz).eval()).map(_.toString)
+      writeLocal(new Path(dir, ExternalCatalogUtils.getPartitionPathString(
+        partitionCol, name.orNull)), dataSchema, run.iterator.map(project))
+      rest = tail
+    }
   }
 
   private case class RawFile(path: String, bytes: Long)
@@ -1790,6 +1907,22 @@ object FactTable {
     * `n_rows` by `readProjection`.
     */
   val ProjCountCol = "__graft_n"
+
+  /** The driver-side I/O threads `onIoPool` fans out on, shared by every
+    * table: at most 32 daemon threads, each ended after a minute idle.
+    */
+  private lazy val IoPool: java.util.concurrent.ExecutorService = {
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(32, 32,
+      60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-io-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   /** A named stored rollup: GROUP BY `keyCols`, SUM each of `sumCols`
     * (+ an implicit row count). Sum columns must be exact-typed
@@ -2262,7 +2395,18 @@ object FactTable {
   * fewer than twice the rows gathered so far (MergeTree's background
   * merges, without a second job): a day's parts at least double in size
   * from newest to oldest, so a day of n equal flushes holds popcount(n)
-  * parts. Use from a streaming query:
+  * parts.
+  *
+  * Neither of the small commits runs a Spark write job. A batch of at
+  * most `maxRows` rows is collected in one job and written as one part on
+  * the driver, through the parquet writer a Spark task uses; a larger
+  * batch takes [[FactTable.append]]'s distributed write, as an insert
+  * above `max_rows` bypasses a ClickHouse Buffer table. A flush whose
+  * inputs' logged bytes are at most `spark.sql.autoBroadcastJoinThreshold`
+  * (the size Spark itself collects to the driver; -1 turns it off) is
+  * merged in one task with no shuffle and written on the driver, one
+  * part per day; a larger one takes the shuffle and the write job. Use
+  * from a streaming query:
   *
   * {{{
   * parsed.writeStream.foreachBatch(sink.addBatch _).start()
@@ -2272,7 +2416,7 @@ class BufferedFactSink(table: FactTable, maxAgeMs: Long = 10000L,
     maxRows: Long = 100L, maxBytes: Long = 10240L) {
 
   def addBatch(df: DataFrame, batchId: Long): Unit = {
-    table.append(df.withColumn("date", to_date(col("timestamp"))), batchId)
+    table.appendBuffered(df.withColumn("date", to_date(col("timestamp"))), batchId, maxRows)
     maybeFlush()
   }
 

@@ -1883,4 +1883,117 @@ class FactTableSpec extends AnyFunSuite {
     assert(t.readWhere($"modem_name" === "m1").count() == 4)
     assert(t.readWhere(array_contains($"tags", "t2")).count() == 4)
   }
+
+  test("a one-poll sink commit and its small flush run one Spark job each") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    val batch = rows(4, "2024-03-01", "m1").drop("date").coalesce(1)
+    val (_, jobs) = jobsDuring(sink.addBatch(batch, 0))
+    // the collect of the batch and the flush's one-task collect: neither
+    // commit runs a write job, and the flush no shuffle
+    assert(jobs == 2, s"$jobs Spark jobs for a flushing one-partition addBatch")
+    assert(t.snapshot().dataFiles.map(_.rows) == Seq(4L))
+    assert(t.read().count() == 4)
+  }
+
+  private def footerSparkSchema(path: String): String = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+    try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+  }
+
+  test("driver-written sink parts match Spark-written parts") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val chan = StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("snr", FloatType)))
+    val schema = StructType(Seq(
+      StructField("modem_name", StringType, nullable = false),
+      StructField("timestamp", TimestampType),
+      StructField("uptime", LongType),
+      StructField("power", FloatType),
+      StructField("channels", ArrayType(chan))))
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val data = Seq(
+      Row("m2", ts("2024-03-01 00:00:01.123456"), 5L, 1.5f,
+        Seq(Row(1, 38.25f), Row(2, null))),
+      Row("m1", ts("2024-03-01 00:00:02.000001"), null, -0.5f, null),
+      Row("m1", ts("2024-03-02 23:59:59.999999"), 7L, null, Seq(null, Row(3, 40.5f))),
+      Row("m3", null, 9L, 2.25f, Seq()),
+      Row("m1", ts("2024-03-01 00:00:00.5"), 1L, Float.NaN, Seq(Row(4, -1.0f))),
+      Row("m2", ts("2024-03-02 00:00:00"), 2L, 0.0f, Seq(Row(5, null))))
+    val batch = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema).coalesce(1)
+
+    // the driver side: a buffered sink commit, then its flush (on age)
+    val driver = freshTable()
+    val sink = new BufferedFactSink(driver, maxAgeMs = 10000,
+      maxRows = data.size + 1, maxBytes = Long.MaxValue)
+    sink.addBatch(batch, 0)
+    // the Spark side: the distributed append and a merge with the small
+    // path turned off
+    val spark0 = freshTable()
+    spark0.append(batch.withColumn("date", to_date($"timestamp")), 0)
+    def parts(t: FactTable) = t.snapshot().dataFiles
+      .map(f => (dayOf(f), f.rows, f.stats, footerSparkSchema(f.path))).sortBy(_._1)
+    val buffer = parts(driver)
+    assert(buffer.size == 1 && buffer == parts(spark0))
+    assert(sortedRows(driver.read()) == sortedRows(spark0.read()))
+
+    assert(sink.maybeFlush(nowMs = System.currentTimeMillis() + 11000) == data.size)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try spark0.compact() finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert(sortedRows(driver.read()) == sortedRows(spark0.read()))
+    def logged(t: FactTable, asOf: Long) =
+      t.snapshot(asOf).dataFiles.map(f => (dayOf(f), f.rows, f.stats)).sortBy(_._1)
+    assert(logged(driver, 0) == logged(spark0, 0))
+    val base = parts(driver)
+    assert(base.map(_._1) == Seq("2024-03-01", "2024-03-02",
+      FactTable.DefaultPartitionValue))
+    assert(base == parts(spark0))
+    Seq(driver, spark0).foreach { t =>
+      val perFile = t.read().withColumn("f", input_file_name())
+        .select($"f", $"modem_name", $"timestamp")
+        .as[(String, String, java.sql.Timestamp)].collect().groupBy(_._1)
+      assert(perFile.size == 3)
+      perFile.values.foreach { rs =>
+        val keys = rs.map(r => (r._2, Option(r._3).map(_.getTime))).toSeq
+        assert(keys == keys.sorted, s"a part must be sorted by (modem_name, ts): $keys")
+      }
+    }
+  }
+
+  test("a sink batch above maxRows takes the distributed append") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    def bufferParts(v: Long) = t.snapshot(asOf = v).files.filter(_.tier == FactTable.TierBuffer)
+    sink.addBatch(rows(10, "2024-03-01", "m1").drop("date").repartition(3), 0)
+    assert(bufferParts(0).size == 3, "10 rows > maxRows = 4: one part per task")
+    val v = t.snapshot().nextVersion
+    sink.addBatch(rows(4, "2024-03-01", "m2").drop("date"), 1)
+    assert(bufferParts(v).map(_.rows) == Seq(4L), "4 rows: one driver-written part")
+    assert(t.read().count() == 14)
+  }
+
+  test("vacuum leaves no directory under data/ without a live part") {
+    val t = freshTable()
+    val sink = flushingSink(t, 4)
+    (1 to 12).foreach(n => sink.addBatch(rows(4, "2024-03-01", s"m$n").drop("date"), n))
+    t.append(rows(5, "2024-03-02", "x"), 100) // a Spark write: leaves _SUCCESS
+    t.compact()
+    t.vacuum()
+    val live = t.snapshot().files.map(f => new java.io.File(new java.net.URI(f.path)).getPath)
+    val dirs = scala.collection.mutable.ArrayBuffer[String]()
+    def walk(d: java.io.File): Unit = d.listFiles.filter(_.isDirectory).foreach { s =>
+      dirs += s.getPath
+      walk(s)
+    }
+    walk(new java.io.File(t.root, "data"))
+    val stray = dirs.filterNot(d => live.exists(_.startsWith(d + "/")))
+    assert(stray.isEmpty, s"directories without a live part: $stray")
+    assert(t.read().count() == 53)
+  }
 }
