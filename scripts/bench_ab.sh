@@ -17,6 +17,9 @@
 #   worse       the median is worse than the parent's by more than the bound
 #   unresolved  either side's spread, (q3 - q1) / median, exceeds the bound
 #   same        anything else
+# The script exits 1, after the whole table, when any end-to-end verdict
+# is "worse" or either side has failed operations: the checks that refuse
+# a change.
 #
 # <seeds> is N or LO-HI. The parent is exported with `git archive` into a
 # temporary directory under ${TMPDIR:-/tmp}, which is removed on exit; each
@@ -105,12 +108,15 @@ bench = json.loads(Path("BENCHMARK.json").read_text())
 lower = {m["name"]: m["better"] == "lower" for m in bench["end_to_end"] + bench["per_layer"]}
 bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
+refused = []
 for workload in sys.argv[2:]:
     parent, head = load("parent", workload), load("head", workload)
     print(f"== {workload}")
     for side, runs in (("parent", parent), ("head", head)):
         bad = sum(r["failed"] for r in runs)
         print(f"{side}: {len(runs)} runs, {sum(r['attempted'] for r in runs)} operations, {bad} failed")
+        if bad:
+            refused.append(f"{workload}: {bad} failed operations on the {side} side")
     print(f"{'metric':32} {'parent q1/med/q3':>26} {'head q1/med/q3':>26} "
           f"{'head/parent':>11} {'head wins':>9}  verdict")
     for name in parent[0]["metrics"]:
@@ -121,4 +127,9 @@ for workload in sys.argv[2:]:
         ratio = f"{hq[1] / pq[1]:.3f}" if pq[1] else "-"
         v = verdict(p, h, pq, hq, wins, lower[name], bounds[name]) if name in bounds else "-"
         print(f"{name:32} {fmt(pq):>26} {fmt(hq):>26} {ratio:>11} {wins:>5}/{len(p)}  {v}")
+        if v == "worse":
+            refused.append(f"{workload}: {name} is worse")
+for reason in refused:
+    print(f"bench_ab: {reason}", file=sys.stderr)
+sys.exit(1 if refused else 0)
 EOF

@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Config-robustness differential harness: every registered query must
   * return the IDENTICAL result under adversarial session configs — AQE
-  * off, whole-stage codegen off (the interpreted Expression paths), and
-  * a hostile shuffle-partition count. Each variant exercises a different
-  * physical execution of the same logical plan, so a pass means no
-  * query's answer depends on plan shape, partition count, fold order, or
-  * the codegen/interpreted split — the class of bug the single-config
+  * off, whole-stage codegen off (the interpreted Expression paths), a
+  * hostile shuffle-partition count, and broadcasts off (which also plans
+  * small `FactTable` aggregates and merges distributed instead of in one
+  * task). Each variant exercises a different physical execution of the
+  * same logical plan, so a pass means no query's answer depends on plan
+  * shape, partition count, fold order, or the codegen/interpreted
+  * split — the class of bug the single-config
   * oracle gate cannot see (a result that is wrong the same way under one
   * config hashes green there). Deterministic-output is already the
   * registry's contract (QueryDef scaladoc); this harness enforces it
@@ -29,7 +31,10 @@ object ConfigDiff {
   private val variants: Seq[(String, Map[String, String])] = Seq(
     "aqe_off" -> Map("spark.sql.adaptive.enabled" -> "false"),
     "codegen_off" -> Map("spark.sql.codegen.wholeStage" -> "false"),
-    "shuffle5" -> Map("spark.sql.shuffle.partitions" -> "5"))
+    "shuffle5" -> Map("spark.sql.shuffle.partitions" -> "5"),
+    // turns off the small-read rule (SmallReadOnePartition) and the Buffer
+    // flush's driver-side merge, both keyed on this size
+    "broadcast_off" -> Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
   private def fingerprint(df: DataFrame): (java.math.BigDecimal, Long) = {
     val r = df
@@ -57,7 +62,9 @@ object ConfigDiff {
     val baselineConf = Map(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.shuffle.partitions" -> cpus)
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.autoBroadcastJoinThreshold" ->
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     var nQueries = 0; var nMismatch = 0; var nErrors = 0
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

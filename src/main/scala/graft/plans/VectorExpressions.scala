@@ -62,9 +62,18 @@ object VectorExpressions {
 }
 
 /** Deployment route for cluster use: `--conf spark.sql.extensions=
-  * graft.plans.GraftExtensions` injects the native functions into every
-  * session at build time (SURVEY.md §2.D custom-operator preference (b):
-  * Expression via SparkSessionExtensions, no per-session registration).
+  * graft.plans.GraftExtensions` injects, into every session at build time
+  * (SURVEY.md §2.D custom-operator preference (b): no per-session
+  * registration):
+  *  - the native functions `vec_dot`, `minhash_lanes`, `nfc_normalize`
+  *    and `pos_ngrams`, and the `graft_table` table function;
+  *  - two optimizer rules: [[RangeBucketJoin]] (band joins become
+  *    bucketized equi joins) and [[SmallReadOnePartition]] (an aggregate
+  *    or window over a small `FactTable` read runs in one task).
+  * The second applies the one size rule, `FactTable.oneTask`: inputs
+  * whose logged bytes are at most `spark.sql.autoBroadcastJoinThreshold`
+  * are handled in one task, as the Buffer flush's driver-side merge also
+  * decides; `-1` turns both off.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -97,6 +106,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         PosNGrams(exprs(0), exprs(1))))
     // range-join optimization: pure band joins → bucketized equi joins
     e.injectOptimizerRule(_ => RangeBucketJoin)
+    // size rule: no exchange under aggregates and windows over small
+    // FactTable reads
+    e.injectOptimizerRule(_ => SmallReadOnePartition)
     // table-valued function: graft_table('/path'[, asOfVersion]) reads a
     // transaction-logged FactTable (optionally time-traveled) from SQL
     e.injectTableFunction((

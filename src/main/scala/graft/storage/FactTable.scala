@@ -17,6 +17,7 @@ import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -34,7 +35,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *   Delta's `metaData` action) and in every checkpoint, and each part's
   *   path, length, tier and `date=` directory. A read therefore lists no
   *   directory and infers no schema: it plans one file scan per tier over
-  *   a log-backed `FileIndex`, however many base generations exist.
+  *   a log-backed `FileIndex`, however many base generations exist. An
+  *   aggregate or window over a read whose logged bytes are at most
+  *   `spark.sql.autoBroadcastJoinThreshold` runs in one task with no
+  *   exchange ([[graft.plans.SmallReadOnePartition]]).
   * - **Atomicity**: a version file is written to a temp name and renamed
   *   into place; rename-onto-existing fails, so two writers cannot both
   *   claim a version.
@@ -657,8 +661,7 @@ class FactTable(val root: String, spark: SparkSession,
       // inputs no larger than what Spark would broadcast are merged in one
       // task and written on the driver: the write job, not the bytes, is
       // the cost of a small merge
-      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      if (threshold >= 0 && parts.map(_.bytes).sum <= threshold)
+      if (FactTable.oneTask(parts.map(_.bytes).sum, spark.sessionState.conf))
         writeLocalPartitioned(target,
           src.coalesce(1).sortWithinPartitions(partitionCol, sortCols: _*), partitionCol)
       else src.repartition(col(partitionCol))
@@ -1903,6 +1906,18 @@ object FactTable {
   val VictimsSuffix = ".victims.json"
   val CheckpointSuffix = ".checkpoint.json"
 
+  /** The size rule: inputs whose logged bytes are at most
+    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself
+    * collects to one place, are handled in one task — a Buffer merge
+    * (written on the driver) and an aggregate or window over a read
+    * ([[graft.plans.SmallReadOnePartition]]). A negative threshold (-1)
+    * turns both off.
+    */
+  private[graft] def oneTask(bytes: Long, conf: SQLConf): Boolean = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    threshold >= 0 && bytes <= threshold
+  }
+
   /** Internal partial-count column in projection sidecars; surfaced as
     * `n_rows` by `readProjection`.
     */
@@ -2303,8 +2318,11 @@ object FactTable {
     * modification times (`addedMs`) and partition values all come from
     * the log, so planning a scan lists nothing. `listFiles` applies
     * Spark's partition filters to the values, so `date` predicates prune
-    * directories exactly as on an `InMemoryFileIndex`. A case class, so
-    * two reads of the same parts compare equal (cache lookups match).
+    * directories exactly as on an `InMemoryFileIndex`. `sizeInBytes`, the
+    * logged part lengths, is what [[graft.plans.SmallReadOnePartition]]
+    * sums to run an aggregate or window over a small read in one task. A
+    * case class, so two reads of the same parts compare equal (cache
+    * lookups match).
     */
   final case class LogFileIndex(root: Path, partitionSchema: StructType,
       files: Seq[(FileEntry, InternalRow)]) extends FileIndex {

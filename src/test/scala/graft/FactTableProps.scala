@@ -162,4 +162,59 @@ object FactTableProps extends Properties("FactTable") {
             t.snapshot(asOf = v) == new FactTable(root, spark).snapshot(asOf = v))
       } && lagging.snapshot() == new FactTable(root, spark).snapshot()
     }
+
+  private val shapeOpGen: Gen[LogOp] = Gen.frequency(
+    4 -> (for {
+      txn <- Gen.choose(0L, 6L)
+      n <- Gen.choose(1, 5)
+      day <- Gen.choose(1, 2)
+    } yield Write(second = false, txn, n, day)),
+    2 -> Gen.const(Flush),
+    1 -> Gen.choose(1L, 5L).map(SoftDelete(_)))
+
+  /** Property: a small read's aggregates and windows do not depend on
+    * whether they run in one task. After any sequence of appends, sink
+    * flushes and soft deletes, a grouped aggregate, a global aggregate,
+    * `dropDuplicates`, a rank window and an exploded rollup return the
+    * same rows with `spark.sql.autoBroadcastJoinThreshold` at its default
+    * (the read is small, so each runs in one task) and at -1 (each plans
+    * its exchange).
+    */
+  property("small-read aggregates and windows equal their distributed plans") =
+    forAll(Gen.listOfN(8, shapeOpGen)) { ops =>
+      import org.apache.spark.sql.functions._
+      val t = new FactTable(
+        java.nio.file.Files.createTempDirectory("fact_shape").toString, spark)
+      val sink = new BufferedFactSink(t, maxAgeMs = Long.MaxValue / 2,
+        maxRows = 1, maxBytes = Long.MaxValue)
+      ops.foreach {
+        case Write(_, txn, n, day) =>
+          t.append((1 to n).map(i => ("m" + (txn + i) % 3,
+            java.sql.Timestamp.valueOf(f"2024-03-0$day 00:00:${i % 60}%02d"),
+            txn * 10 + i)).toDF("modem_name", "timestamp", "uptime")
+            .withColumn("readings", array($"uptime", $"uptime" % 4))
+            .withColumn("date", to_date($"timestamp")), txn)
+        case Flush => sink.maybeFlush()
+        case SoftDelete(u) => t.softDelete($"uptime" % 5 === u, Seq("modem_name", "uptime"))
+        case _ =>
+      }
+      val shapes: Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Seq(
+        _.groupBy($"modem_name").agg(count(lit(1)), sum($"uptime"), max($"timestamp")),
+        _.agg(count(lit(1)), sum($"uptime"), min($"timestamp")),
+        _.select($"modem_name", $"date").dropDuplicates(),
+        _.select($"modem_name", $"uptime", rank().over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"modem_name")
+            .orderBy($"uptime".desc)).as("r")),
+        _.select($"date", explode($"readings").as("v"))
+          .groupBy($"date", $"v").agg(count(lit(1)), sum($"v")))
+      def rows(shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+        shape(t.read()).collect().map(_.toString).sorted.toSeq
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      t.snapshot().dataFiles.isEmpty || shapes.forall { shape =>
+        val small = rows(shape)
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try small == rows(shape) finally spark.conf.set(key, prev)
+      }
+    }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import graft.sources.DocsisFixtures
 import graft.storage.{BufferedFactSink, FactTable}
+import graft.streaming.DocsisStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1749,9 +1751,10 @@ class FactTableSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("fact_sidecar_jobs").toString,
       spark, bloomCols = Seq("modem_name"))
     val (_, jobs) = jobsDuring(t.append(rows(6, "2024-03-01", "m1").coalesce(1), 0))
-    // one write job and the bloom build's two; a schema-inferring
-    // `spark.read.parquet` of the new part would add a fourth
-    assert(jobs == 3, s"$jobs Spark jobs for a one-part append")
+    // one write job and the bloom build's one (its aggregate over the
+    // small new part plans no exchange); a schema-inferring
+    // `spark.read.parquet` of the new part would add a third
+    assert(jobs == 2, s"$jobs Spark jobs for a one-part append")
     assert(t.readWhere($"modem_name" === "m2").count() == 0)
     assert(t.pruneReport($"modem_name" === "zz") == ((0, 1)))
   }
@@ -1995,5 +1998,123 @@ class FactTableSpec extends AnyFunSuite {
     val stray = dirs.filterNot(d => live.exists(_.startsWith(d + "/")))
     assert(stray.isEmpty, s"directories without a live part: $stray")
     assert(t.read().count() == 53)
+  }
+
+  // -------------------------------- small reads aggregate in one task
+
+  /** The fixture scrapes, shifted by `poll` minutes: 4 parsed rows over
+    * two days, as one sink batch.
+    */
+  private def docsisPoll(poll: Int) = DocsisStream.parseStream(
+    DocsisFixtures.rawFrame(spark).withColumn("timestamp",
+      $"timestamp" + make_dt_interval(lit(0), lit(0), lit(poll), lit(0))))
+
+  /** Base and buffer tiers: two sink flushes, then one buffered poll. */
+  private def docsisTable(): FactTable = {
+    val t = freshTable()
+    val sink = new BufferedFactSink(t, maxAgeMs = Long.MaxValue / 2,
+      maxRows = 5, maxBytes = Long.MaxValue)
+    (0 until 5).foreach(p => sink.addBatch(docsisPoll(p), p))
+    val tiers = t.snapshot().dataFiles.map(_.tier).toSet
+    assert(tiers == Set(FactTable.TierBase, FactTable.TierBuffer), s"tiers $tiers")
+    t
+  }
+
+  /** The dashboard's per-channel rollup. */
+  private def rollup(df: org.apache.spark.sql.DataFrame) =
+    df.select(explode($"downstream_channels").as("ch"))
+      .groupBy($"ch.channel_id".as("channel_id"))
+      .agg(avg($"ch.snr"), min($"ch.snr"), count(lit(1)))
+
+  private def rankWindow(df: org.apache.spark.sql.DataFrame) =
+    df.select($"modem_name", $"timestamp", rank().over(
+      org.apache.spark.sql.expressions.Window.partitionBy($"modem_name")
+        .orderBy($"timestamp".desc)).as("r"))
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Rows (sorted), Spark jobs and shuffle exchanges of one collect. */
+  private def run(df: => org.apache.spark.sql.DataFrame) = {
+    val frame = df
+    val (rows, jobs) = jobsDuring(frame.collect().map(_.toString).sorted.toSeq)
+    val shuffles = Aqe.collect(frame.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }.size
+    (rows, jobs, shuffles)
+  }
+
+  private def withThreshold[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("a rollup and a windowed read of a small table run in one job, with no exchange") {
+    val t = docsisTable()
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "rollup" -> rollup, "windowed" -> DocsisStream.snrWindowed
+    ).foreach { case (name, shape) =>
+      val (rows, jobs, shuffles) = run(shape(t.read()))
+      assert(shuffles == 0 && jobs == 1, s"$name: $jobs jobs, $shuffles exchanges")
+      assert(rows.nonEmpty, name)
+      // the off switch brings the distributed plan back, with equal rows
+      val (offRows, _, offShuffles) = withThreshold(-1)(run(shape(t.read())))
+      assert(offShuffles >= 1, s"$name: no exchange with the rule off")
+      assert(offRows == rows, name)
+    }
+  }
+
+  test("a rank window over a small table plans no exchange") {
+    val t = docsisTable()
+    val (rows, jobs, shuffles) = run(rankWindow(t.read()))
+    assert(shuffles == 0 && jobs == 1, s"$jobs jobs, $shuffles exchanges")
+    assert(rows == withThreshold(-1)(run(rankWindow(t.read())))._1)
+  }
+
+  test("a table above the threshold keeps the distributed plan") {
+    val t = docsisTable()
+    val bytes = t.snapshot().dataFiles.map(_.bytes).sum
+    val (rows, _, shuffles) = withThreshold(bytes - 1)(run(rollup(t.read())))
+    assert(shuffles >= 1, s"${bytes - 1}-byte threshold under a $bytes-byte table")
+    assert(rows == withThreshold(bytes)(run(rollup(t.read())))._1)
+    assert(withThreshold(bytes)(run(rollup(t.read())))._3 == 0)
+  }
+
+  test("a soft-deleted table read through the mask aggregates as one partition") {
+    val t = docsisTable()
+    assert(t.softDelete($"modem_name" === "attic", Seq("modem_name", "timestamp")) > 0)
+    assert(t.snapshot().tombFiles.nonEmpty)
+    val df = rollup(t.read())
+    val (rows, _, shuffles) = run(df)
+    assert(shuffles == 0, s"$shuffles exchanges through the mask")
+    assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    assert(df.queryExecution.toRdd.getNumPartitions == 1)
+    assert(rows == withThreshold(-1)(run(rollup(t.read())))._1)
+    assert(t.read().where($"modem_name" === "attic").count() == 0)
+  }
+
+  test("a streaming snrWindowed query still saves its state behind a hash exchange") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, String, Double, String)]
+    val raw = mem.toDF().toDF("payload", "modem_name", "scrape_latency", "ts")
+      .withColumn("timestamp", to_timestamp($"ts")).drop("ts")
+    val q = DocsisStream.snrWindowed(DocsisStream.parseStream(raw))
+      .writeStream.format("memory").queryName("snr_state_mem")
+      .outputMode("append").start()
+    try {
+      mem.addData(DocsisFixtures.scrapes)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      val saves = plan.collect { case n if n.nodeName == "StateStoreSave" => n }
+      assert(saves.size == 1, s"no state store save:\n$plan")
+      val hashed = saves.head.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.outputPartitioning
+      }
+      assert(hashed.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]),
+        s"state store not behind a hash exchange:\n$plan")
+    } finally q.stop()
   }
 }
