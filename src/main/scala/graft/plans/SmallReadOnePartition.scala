@@ -4,7 +4,7 @@ import graft.storage.FactTable
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE, WINDOW}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE, PLAN_EXPRESSION, WINDOW}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Optimizer rule: an aggregate or window over a small `FactTable` read
@@ -14,9 +14,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * exchange, a shuffle-map job and a result job. For a table of a few
   * parts that shape costs more than the work. When the operator sits over
   * only narrow operators and `FactTable` scans, and those scans' logged
-  * bytes total at most `spark.sql.autoBroadcastJoinThreshold` (the size
-  * rule [[FactTable.oneTask]], which the Buffer flush's one-task merge
-  * also follows), the rule puts `Repartition(1, shuffle = false)` — a
+  * bytes total at most 1 MiB and `spark.sql.autoBroadcastJoinThreshold`
+  * (the size rule [[FactTable.oneTask]], which the Buffer flush's
+  * one-task merge also follows), the rule puts `Repartition(1, shuffle = false)` — a
   * `coalesce(1)` — directly under it. The physical child then reports
   * `SinglePartition`, which satisfies every distribution an aggregate or
   * window asks for, so `EnsureRequirements` adds no exchange and the read
@@ -31,7 +31,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * broadcast keys). Leaves must be `HadoopFsRelation`s over a
   * `LogFileIndex`; a listed `spark.read.parquet` table never matches.
   * Anything else — a shuffle join, a repartition, another aggregate —
-  * leaves the operator alone, which also makes the rule idempotent.
+  * leaves the operator alone, which also makes the rule idempotent. So
+  * does a subquery anywhere in the operator or below it: the
+  * RewriteSubquery batch, which runs after this one, turns an `IN` or
+  * `EXISTS` into a join under the coalesce, whose other side is never
+  * counted.
   *
   * Guards: a streaming plan is returned unchanged (a stateful operator's
   * state-store partitioning must never change, or a checkpointed query
@@ -43,10 +47,11 @@ object SmallReadOnePartition extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!plan.containsAnyPattern(AGGREGATE, WINDOW) || plan.isStreaming) return plan
-    def small(child: LogicalPlan) = loggedBytes(child).exists(FactTable.oneTask(_, conf))
+    def small(op: UnaryNode) = !op.containsPattern(PLAN_EXPRESSION) &&
+      loggedBytes(op.child).exists(FactTable.oneTask(_, conf))
     plan.transformDownWithPruning(_.containsAnyPattern(AGGREGATE, WINDOW)) {
-      case a: Aggregate if small(a.child) => a.copy(child = Repartition(1, shuffle = false, a.child))
-      case w: Window if small(w.child) => w.copy(child = Repartition(1, shuffle = false, w.child))
+      case a: Aggregate if small(a) => a.copy(child = Repartition(1, shuffle = false, a.child))
+      case w: Window if small(w) => w.copy(child = Repartition(1, shuffle = false, w.child))
     }
   }
 

@@ -71,9 +71,10 @@ object VectorExpressions {
   *    bucketized equi joins) and [[SmallReadOnePartition]] (an aggregate
   *    or window over a small `FactTable` read runs in one task).
   * The second applies the one size rule, `FactTable.oneTask`: inputs
-  * whose logged bytes are at most `spark.sql.autoBroadcastJoinThreshold`
-  * are handled in one task, as the Buffer flush's driver-side merge also
-  * decides; `-1` turns both off.
+  * whose logged bytes are at most 1 MiB (the measured crossover) and at
+  * most `spark.sql.autoBroadcastJoinThreshold` are handled in one task,
+  * as the Buffer flush's driver-side merge also decides; `-1` turns both
+  * off.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier

@@ -36,8 +36,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *   path, length, tier and `date=` directory. A read therefore lists no
   *   directory and infers no schema: it plans one file scan per tier over
   *   a log-backed `FileIndex`, however many base generations exist. An
-  *   aggregate or window over a read whose logged bytes are at most
-  *   `spark.sql.autoBroadcastJoinThreshold` runs in one task with no
+  *   aggregate or window over a read whose logged bytes are at most 1 MiB
+  *   and `spark.sql.autoBroadcastJoinThreshold` runs in one task with no
   *   exchange ([[graft.plans.SmallReadOnePartition]]).
   * - **Atomicity**: a version file is written to a temp name and renamed
   *   into place; rename-onto-existing fails, so two writers cannot both
@@ -66,7 +66,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *   stay where they are. Small commits are written on the driver, with
   *   no Spark write job: a sink batch of at most the sink's `maxRows` rows
   *   (one collect), and a buffer merge (the sink's flush, `compact()`)
-  *   whose inputs' logged bytes are at most
+  *   whose inputs' logged bytes are at most 1 MiB and
   *   `spark.sql.autoBroadcastJoinThreshold` (one task, no shuffle).
   *   Larger ones take Spark's distributed write, as does every public
   *   `append`.
@@ -1907,16 +1907,26 @@ object FactTable {
   val CheckpointSuffix = ".checkpoint.json"
 
   /** The size rule: inputs whose logged bytes are at most
-    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself
-    * collects to one place, are handled in one task — a Buffer merge
-    * (written on the driver) and an aggregate or window over a read
-    * ([[graft.plans.SmallReadOnePartition]]). A negative threshold (-1)
-    * turns both off.
+    * [[OneTaskMaxBytes]] and at most `spark.sql.autoBroadcastJoinThreshold`
+    * (the size Spark itself collects to one place) are handled in one
+    * task — a Buffer merge (written on the driver) and an aggregate or
+    * window over a read ([[graft.plans.SmallReadOnePartition]]). A
+    * negative threshold (-1) turns both off.
     */
   private[graft] def oneTask(bytes: Long, conf: SQLConf): Boolean = {
     val threshold = conf.autoBroadcastJoinThreshold
-    threshold >= 0 && bytes <= threshold
+    threshold >= 0 && bytes <= math.min(threshold, OneTaskMaxBytes)
   }
+
+  /** Where one task stops paying: 1 MiB of logged bytes. Measured with
+    * `scripts/one_task_crossover.sh` (the dashboard's rollup and
+    * `snrWindowed`, one task against the distributed plan, 4 vCPU, three
+    * seeds): one task took 0.75–0.90× the wall time up to 512 kB,
+    * 0.86–1.05× at 1 MiB (with 0.67–0.84× the CPU), 1.03–1.25× at
+    * 1.5 MiB and 1.4–2.6× from 4 MiB to the 10 MiB default threshold.
+    * The Buffer merge shares the cut; it was not measured on its own.
+    */
+  private val OneTaskMaxBytes = 1L << 20
 
   /** Internal partial-count column in projection sidecars; surfaced as
     * `n_rows` by `readProjection`.
@@ -2420,8 +2430,9 @@ object FactTable {
   * the driver, through the parquet writer a Spark task uses; a larger
   * batch takes [[FactTable.append]]'s distributed write, as an insert
   * above `max_rows` bypasses a ClickHouse Buffer table. A flush whose
-  * inputs' logged bytes are at most `spark.sql.autoBroadcastJoinThreshold`
-  * (the size Spark itself collects to the driver; -1 turns it off) is
+  * inputs' logged bytes are at most 1 MiB and
+  * `spark.sql.autoBroadcastJoinThreshold` (the size Spark itself collects
+  * to the driver; -1 turns it off; [[FactTable.oneTask]]) is
   * merged in one task with no shuffle and written on the driver, one
   * part per day; a larger one takes the shuffle and the write job. Use
   * from a streaming query:

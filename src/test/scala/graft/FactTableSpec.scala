@@ -2077,8 +2077,41 @@ class FactTableSpec extends AnyFunSuite {
     val bytes = t.snapshot().dataFiles.map(_.bytes).sum
     val (rows, _, shuffles) = withThreshold(bytes - 1)(run(rollup(t.read())))
     assert(shuffles >= 1, s"${bytes - 1}-byte threshold under a $bytes-byte table")
-    assert(rows == withThreshold(bytes)(run(rollup(t.read())))._1)
-    assert(withThreshold(bytes)(run(rollup(t.read())))._3 == 0)
+    val (atRows, _, atShuffles) = withThreshold(bytes)(run(rollup(t.read())))
+    assert(atRows == rows)
+    assert(atShuffles == 0, s"a $bytes-byte threshold over a $bytes-byte table")
+  }
+
+  test("one task is chosen up to 1 MiB, whatever larger threshold is set") {
+    val mib = 1L << 20
+    def oneTask(bytes: Long) = FactTable.oneTask(bytes, spark.sessionState.conf)
+    withThreshold(10 * mib) {
+      assert(oneTask(mib) && !oneTask(mib + 1))
+    }
+    withThreshold(mib / 2) {
+      assert(oneTask(mib / 2) && !oneTask(mib / 2 + 1))
+    }
+    withThreshold(-1)(assert(!oneTask(0)))
+  }
+
+  test("a graft_table aggregate filtered by an IN subquery keeps its distributed plan") {
+    val t = docsisTable()
+    val bytes = t.snapshot().dataFiles.map(_.bytes).sum
+    // the subquery's side is far above the threshold, so the semi join
+    // it becomes is a shuffle join
+    val big = java.nio.file.Files.createTempDirectory("names").resolve("p").toString
+    spark.range(0, 200000).selectExpr("IF(id % 2 = 0, 'attic', CAST(id AS STRING)) AS modem_name")
+      .write.parquet(big)
+    val query = s"""SELECT modem_name, COUNT(*) AS n FROM graft_table('${t.root}')
+        WHERE modem_name IN (SELECT modem_name FROM parquet.`$big`)
+        GROUP BY modem_name"""
+    val (rows, _, shuffles) = withThreshold(bytes)(run(spark.sql(query)))
+    val plan = withThreshold(bytes)(spark.sql(query).queryExecution.executedPlan)
+    val coalesced = Aqe.collect(plan) { case c: org.apache.spark.sql.execution.CoalesceExec => c }
+    assert(coalesced.isEmpty, s"the semi join runs under a coalesce:\n$plan")
+    assert(shuffles >= 2, s"$shuffles exchanges:\n$plan")
+    assert(rows.nonEmpty)
+    assert(rows == withThreshold(-1)(run(spark.sql(query)))._1)
   }
 
   test("a soft-deleted table read through the mask aggregates as one partition") {
